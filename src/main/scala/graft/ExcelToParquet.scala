@@ -42,7 +42,11 @@ object ExcelToParquet {
     r.option("skipRows", opts.skipRows).load(opts.input)
   }
 
-  /** Convert workbook sheet(s) to a zstd parquet file; returns row count.
+  /** Convert workbook sheet(s) to a zstd parquet file; returns the number
+    * of rows on disk, summed on the driver from the committed part files'
+    * footer record counts (the same metadata a Parquet `count()` reads,
+    * without a second query). A single-file serial conversion is one Spark
+    * job: the write.
     * A plain file keeps the reference's extension contract (exit-1 on
     * anything but .xlsx/.xlsb); a directory or glob converts every matched
     * workbook in one N-task job (the source plans one partition per file),
@@ -61,7 +65,29 @@ object ExcelToParquet {
       val w = df.write.mode("overwrite").option("compression", "zstd")
       withGroupGeometry(w, opts).parquet(opts.output)
     }
-    spark.read.parquet(opts.output).count()
+    committedRows(spark, opts.output)
+  }
+
+  /** Sum of the footer record counts of the data files in a written
+    * Parquet directory. Skips `_`/`.`-prefixed names (`_SUCCESS`, `.crc`
+    * checksums), as Spark's own file listing does.
+    */
+  private def committedRows(spark: SparkSession, output: String): Long = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sessionState.newHadoopConf()
+    val dir = new Path(output)
+    dir.getFileSystem(conf).listStatus(dir)
+      .filter { st =>
+        val name = st.getPath.getName
+        st.isFile && !name.startsWith("_") && !name.startsWith(".")
+      }
+      .map { st =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try reader.getRecordCount finally reader.close()
+      }
+      .sum
   }
 
   /** R8: one write batch = one row group. DataFrameWriter options reach

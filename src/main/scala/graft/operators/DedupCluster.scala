@@ -43,6 +43,38 @@ import org.apache.spark.sql.functions._
   */
 object DedupCluster {
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Waits for observed metrics that the listener bus delivers
+    * asynchronously, for one `connectedComponents` call. Each round polls
+    * `get` for up to `timeoutNs`; once a round's metrics fail to arrive,
+    * later rounds read `get` once and do not wait, so a bus that never
+    * delivers costs one timeout per call, not one per round. Every miss
+    * logs a warning and returns None: the caller falls back to an
+    * explicit aggregate.
+    */
+  private[operators] final class ObservedMetrics(timeoutNs: Long = 2000000000L) {
+    private var delivering = true
+
+    def await(get: () => Map[String, Any]): Option[Map[String, Any]] = {
+      var m = get()
+      if (delivering) {
+        val deadline = System.nanoTime() + timeoutNs
+        while (m.isEmpty && System.nanoTime() < deadline) {
+          Thread.sleep(5)
+          m = get()
+        }
+      }
+      if (m.nonEmpty) Some(m)
+      else {
+        log.warn("connectedComponents: observed metrics not delivered; " +
+          "falling back to an explicit aggregate, without waiting in later rounds")
+        delivering = false
+        None
+      }
+    }
+  }
+
   /** Large-star: connect every neighbor larger than u to the minimum of
     * u's closed neighborhood. Input/output: undirected edge set encoded
     * as distinct (u, v) rows with u != v (both orientations implied).
@@ -119,6 +151,7 @@ object DedupCluster {
     // run ONE job instead of two. The listener delivering observed
     // metrics is asynchronous — poll briefly, then fall back to the
     // explicit aggregate (correctness never depends on the fast path).
+    val observed = new ObservedMetrics()
     def checkpointSketched(df: DataFrame)
         : (DataFrame, Long, java.math.BigDecimal) = {
       val obs = org.apache.spark.sql.Observation()
@@ -127,18 +160,13 @@ object DedupCluster {
           coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
             lit(java.math.BigDecimal.ZERO)).as("h"))
         .localCheckpoint(true)
-      var m = org.apache.spark.sql.GraftColumnBridge.observationGetOrEmpty(obs)
-      val deadline = System.nanoTime() + 2000000000L
-      while (m.isEmpty && System.nanoTime() < deadline) {
-        Thread.sleep(5)
-        m = org.apache.spark.sql.GraftColumnBridge.observationGetOrEmpty(obs)
-      }
-      if (m.nonEmpty)
-        (ck, m("n").asInstanceOf[Long],
-          m("h").asInstanceOf[java.math.BigDecimal])
-      else {
-        val (c, s) = sketch(ck)
-        (ck, c, s)
+      observed.await(
+        () => org.apache.spark.sql.GraftColumnBridge.observationGetOrEmpty(obs)) match {
+        case Some(m) =>
+          (ck, m("n").asInstanceOf[Long], m("h").asInstanceOf[java.math.BigDecimal])
+        case None =>
+          val (c, s) = sketch(ck)
+          (ck, c, s)
       }
     }
     var (e, eCount, eSum) = checkpointSketched(

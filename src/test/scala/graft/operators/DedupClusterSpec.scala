@@ -55,6 +55,33 @@ class DedupClusterSpec extends AnyFunSuite {
     assert(got.values.toSet == Set(1L))
   }
 
+  test("observed-metric wait: delivered metrics pass through unchanged") {
+    val m = Map[String, Any]("n" -> 3L)
+    var calls = 0
+    val late = () => { calls += 1; if (calls >= 3) m else Map.empty[String, Any] }
+    assert(new DedupCluster.ObservedMetrics().await(late) == Some(m))
+    assert(calls == 3)
+    assert(new DedupCluster.ObservedMetrics().await(() => m) == Some(m))
+  }
+
+  test("observed-metric wait: after one miss, later rounds do not wait") {
+    val timeoutNs = 200000000L
+    val poll = new DedupCluster.ObservedMetrics(timeoutNs)
+    var calls = 0
+    val never = () => { calls += 1; Map.empty[String, Any] }
+    val t0 = System.nanoTime()
+    assert(poll.await(never).isEmpty)
+    assert(System.nanoTime() - t0 >= timeoutNs, "the first miss waits out its timeout")
+    assert(calls > 1)
+    calls = 0
+    val t1 = System.nanoTime()
+    assert(poll.await(never).isEmpty)
+    assert(calls == 1, "the second miss reads the supplier once and does not poll")
+    assert(System.nanoTime() - t1 < timeoutNs)
+    // metrics that are already there are still used
+    assert(poll.await(() => Map("n" -> 1L)) == Some(Map("n" -> 1L)))
+  }
+
   test("q23_dedup_clusters groups exactly the transitive near-dup pairs") {
     val pairs = graft.SparkEntry.queries("q23_jaccard_pairs")(spark, sf)
       .select("doc_a", "doc_b")
