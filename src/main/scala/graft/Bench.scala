@@ -22,6 +22,13 @@ object Bench {
     * decoupled per-query timings — a separate field so any consumer of
     * "queries" keeps parsing numbers. Kept free of SparkSession so it
     * can be spec'd directly.
+    *
+    * Consumer contract: `main` prints this line twice in a row, and the
+    * two copies are identical. A consumer takes one copy (the first or
+    * the last result-shaped line), never sums or appends every match.
+    * `value` is the 3-decimal rounding of the full-precision sum of the
+    * successful timings, so it can differ in the last decimal from the
+    * sum of the rounded `queries` entries.
     */
   def formatResults(
       results: Seq[(String, Either[String, Double])], sfDir: String,
@@ -201,10 +208,9 @@ object Bench {
     // printed TWICE (r18, r17 verdict #3): the driver captures a bounded
     // tail of the output, and a single copy of the line has been cut
     // mid-way by that window two rounds running. Two consecutive copies
-    // mean the window always holds at least one complete line; any JSON
-    // consumer scanning for the result line parses either copy
-    // identically. Additions-only: timing and the line's content are
-    // unchanged.
+    // mean the window always holds at least one complete line; a
+    // consumer takes one copy (contract at formatResults). Additions-
+    // only: timing and the line's content are unchanged.
     val line = formatResults(results, sfDir, solo)
     println(line)
     println(line)

@@ -83,6 +83,14 @@ object GraftSession {
       .config("spark.sql.warehouse.dir",
         RunPaths.scratch("graft_warehouse"))
       .config("spark.ui.enabled", "false")
+      // Logs once which classes file: resolves to (WARN if not the
+      // fork-free ones the classpath core-site.xml installs). A check
+      // rule's builder runs when the session's state is built, with the
+      // session's own Hadoop conf; the rule itself does nothing.
+      .withExtensions(_.injectCheckRule { s =>
+        graft.fs.ForkFreeLocalFs.reportOnce(s.sparkContext.hadoopConfiguration)
+        _ => ()
+      })
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = builder(s"local[$cores]", math.max(cores, 4)).getOrCreate()

@@ -18,6 +18,8 @@ import graft.operators.ProductQuantizer.HouseM
   */
 object StreamOps {
 
+  private val logger = org.slf4j.LoggerFactory.getLogger(getClass)
+
   // ---- shared helpers for the persisted-index streaming family ------
 
   /** Recursively delete `f` — the per-run scratch-state wipe (harness
@@ -523,12 +525,26 @@ object StreamOps {
     // explicit sweep override (sysprop/env) > caller's derived value
     // (see derivedStateParts) > inherit the session's shuffle
     // partitions.
-    sys.props.get("graft.stream.stateParts")
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_PARTS"))
-      .orElse(stateParts.map(_.toString))
-      .foreach(v => iso.conf.set("spark.sql.shuffle.partitions", v))
+    val (parts, source) = statePartitions(stateParts,
+      iso.conf.get("spark.sql.shuffle.partitions"))
+    iso.conf.set("spark.sql.shuffle.partitions", parts)
+    // logged per drive so a sweep reading is never attributed to an
+    // override that did not apply: a checkpoint that is reused keeps the
+    // count it was created with, whatever this says
+    logger.info(s"RocksDB state partitions: $parts ($source)")
     iso
   }
+
+  /** The state-partition count [[rocksDbSession]] applies and where it
+    * came from: `sysprop`, `env`, `derived` (the caller's value) or
+    * `inherited` (the session's shuffle partitions), in that precedence.
+    */
+  private[streaming] def statePartitions(
+      stateParts: Option[Int], inherited: String): (String, String) =
+    sys.props.get("graft.stream.stateParts").map(_ -> "sysprop")
+      .orElse(sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_ -> "env"))
+      .orElse(stateParts.map(_.toString -> "derived"))
+      .getOrElse(inherited -> "inherited")
 
   /** Every batch emits a versioned row per touched user; the converged
     * aggregate is the per-user max-ver row.
