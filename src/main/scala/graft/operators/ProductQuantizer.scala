@@ -58,8 +58,8 @@ object ProductQuantizer {
     * there). Also measured and REJECTED: a third Lloyd iteration
     * (flat) and an OPQ-style deterministic Hadamard rotation (neutral
     * at every m — the synthetic corpus has no coordinate correlation
-    * for a rotation to spread; tools/PqTune keeps the rotation path
-    * for corpora that do).
+    * for a rotation to spread; SCALING.md records the measurement for
+    * corpora that do).
     */
   val HouseM = 32
   val HouseEvery = 20

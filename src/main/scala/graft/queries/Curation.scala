@@ -164,17 +164,16 @@ object Curation {
     * and the per-doc excision report is returned. Only docs that lose
     * at least one span appear. Exposed for unit testing.
     *
-    * Scale shape: the gram stream is shuffled once into a
-    * partial-aggregated `min/max(doc_id)` per gram (a gram is cross-doc
-    * duplicated iff min < max — no countDistinct pass); survivors
-    * equi-join back against the gram stream (shuffle hash join — no
+    * Scale shape: the gram stream is shuffled once into a window that
+    * gives each occurrence its gram's `min/max(doc_id)` (a gram is
+    * cross-doc duplicated iff min < max — no countDistinct pass, no
     * self-join of positions), and the island merge windows partition by
-    * document. Nothing is ever quadratic in corpus size. Both the
-    * aggregate and the join key on `xxhash64(gram)` rather than the
-    * gram string itself, so every shuffle row carries 8 bytes of key
-    * instead of an n-token string (the same fingerprint trick as exact
-    * dedup; a 64-bit collision — ~corpus²/2⁶⁵ — is the accepted
-    * approximation, as in q22_dedup_fingerprint).
+    * document. Nothing is ever quadratic in corpus size. The window
+    * keys on `xxhash64(gram)` rather than the gram string itself, so
+    * every shuffle row carries 8 bytes of key instead of an n-token
+    * string (the same fingerprint trick as exact dedup; a 64-bit
+    * collision — ~corpus²/2⁶⁵ — is the accepted approximation, as in
+    * q22_dedup_fingerprint).
     */
   def selfExcise(docs: DataFrame, n: Int): DataFrame = {
     // fanOut: the tokenize→ngram→hash stream below is the expensive
@@ -205,39 +204,6 @@ object Curation {
       .withColumn("max_doc", max(col("doc_id")).over(w))
       .filter(col("min_doc") < col("max_doc") &&
         col("doc_id") =!= col("min_doc"))
-      .select(col("doc_id"), col("n_tokens"), col("s"), col("e"))
-    excisionReport(hits)
-  }
-
-  /** The PRE-AGGREGATE variant of [[selfExcise]]'s dup-gram detection
-    * (r17 verdict #8, the hot-key watch item): the gram stream is
-    * materialized once (in-job localCheckpoint), the per-gram min/max
-    * comes from a map-side-combined AGGREGATE over it (bounded per-task
-    * state on any gram frequency), survivors (min < max) join back
-    * against the same materialized stream. Same rows as the window
-    * form by the identical predicate. Trade measured in r18
-    * (MicroProf q47ab + SCALING.md): the window buffers a hot gram's
-    * full occurrence set in one task but makes ONE pass with one
-    * exchange; this form is skew-immune but pays the checkpoint write
-    * + a second exchange + the join. Kept compiled as the documented
-    * fallback if corpus gram skew ever dominates; not on a query path.
-    */
-  private[graft] def selfExciseViaAgg(docs: DataFrame, n: Int): DataFrame = {
-    val grams = Tables.fanOut(docs)
-      .select(col("doc_id"),
-        size(TextFns.tokens(col("text"))).cast("long").as("n_tokens"),
-        posexplode(WordNgrams.word_ngrams(col("text"), n)))
-      .select(col("doc_id"), col("n_tokens"),
-        col("pos").cast("long").as("s"),
-        (col("pos") + (n - 1)).cast("long").as("e"),
-        xxhash64(col("col")).as("gh"))
-      .localCheckpoint(true)
-    val dup = grams.groupBy(col("gh"))
-      .agg(min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"))
-      .filter(col("min_doc") < col("max_doc"))
-      .select(col("gh"), col("min_doc"))
-    val hits = grams.join(dup, "gh")
-      .filter(col("doc_id") =!= col("min_doc"))
       .select(col("doc_id"), col("n_tokens"), col("s"), col("e"))
     excisionReport(hits)
   }

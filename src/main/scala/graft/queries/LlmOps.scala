@@ -673,16 +673,61 @@ object LlmOps {
     * immutable once derived (ensureLayout: derive-once, never
     * rewritten in place).
     */
-  // per-SESSION map, evicted on application end (r17 ADVICE): the r16
-  // WeakHashMap could never reclaim anything — its DataFrame values
-  // strongly reference their SparkSession, i.e. the weak key (the
-  // classic value-to-key pitfall) — so eviction is now EXPLICIT via a
-  // SparkListener registered once per session; a stopped session's
-  // handles (and their file-index memory) are dropped deterministically
-  // instead of "when GC notices", and a recycled identity hash still
-  // cannot resurrect a stale handle (keyed on the session object).
-  private val bucketedDfCache = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
+  // per-SESSION map, keyed on the session object so a recycled identity
+  // hash cannot resurrect a stale handle. A WeakHashMap cannot reclaim
+  // anything here (each DataFrame value strongly references its
+  // session, the weak key), and a discarded newSession() gives no
+  // signal, so the map is BOUNDED instead — access-order LRU, the
+  // SummaryRewriteRule.planCache shape: a newSession-per-query server
+  // pins at most MaxFetchSessions sessions' handles, and an evicted
+  // session re-lists its layout once on next use. ONE listener per
+  // SparkContext (not per session) clears the whole map when the
+  // context stops.
+  private type FetchHandles =
+    java.util.concurrent.ConcurrentHashMap[String, DataFrame]
+  private[graft] val MaxFetchSessions = 16
+  private val bucketedDfCache: java.util.Map[SparkSession, FetchHandles] =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[SparkSession, FetchHandles](
+          16, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[SparkSession, FetchHandles]): Boolean =
+          size() > MaxFetchSessions
+      })
+  // contexts whose eviction listener is registered; weak, so a stopped
+  // context is not pinned by the registry itself
+  private val fetchCacheContexts = java.util.Collections.synchronizedSet(
+    java.util.Collections.newSetFromMap(new java.util.WeakHashMap[
+      org.apache.spark.SparkContext, java.lang.Boolean]()))
+
+  private[graft] def fetchCacheSessions: Int = bucketedDfCache.size()
+
+  /** Drops every session's handles when the context stops. */
+  private[graft] final class FetchCacheEviction
+      extends org.apache.spark.scheduler.SparkListener {
+    override def onApplicationEnd(
+        e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+      bucketedDfCache.clear()
+  }
+
+  /** `s`'s handle map, registering the context's eviction listener on
+    * first use. get-then-put under the map's lock: the LRU eviction
+    * hook is driven by put().
+    */
+  private def fetchHandles(s: SparkSession): FetchHandles = {
+    val sc = s.sparkContext
+    if (fetchCacheContexts.add(sc))
+      sc.addSparkListener(new FetchCacheEviction)
+    bucketedDfCache.synchronized {
+      val cached = bucketedDfCache.get(s)
+      if (cached != null) cached
+      else {
+        val fresh = new FetchHandles()
+        bucketedDfCache.put(s, fresh)
+        fresh
+      }
+    }
+  }
 
   private[graft] def batchPrunedFetch(
       s: SparkSession, bucketedDir: String, cands: DataFrame,
@@ -694,16 +739,7 @@ object LlmOps {
       s"batch refine fetch: candidate ids touch ${buckets.length} " +
         s"id buckets — outside (0, $maxBuckets]; the candidate stage " +
         "is broken")
-    val handle = bucketedDfCache
-      .computeIfAbsent(s, sess => {
-        sess.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onApplicationEnd(
-                e: org.apache.spark.scheduler.SparkListenerApplicationEnd)
-                : Unit = bucketedDfCache.remove(sess)
-          })
-        new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-      })
+    val handle = fetchHandles(s)
       .computeIfAbsent(bucketedDir, _ => s.read.parquet(bucketedDir))
     val fetched = handle
       .filter(col("id_bucket").isin(buckets.map(Long.box): _*))

@@ -537,7 +537,7 @@ object Semantic {
     // feeds three consumers (guards, probe ranking, stage-1 join).
     // r18: the guard aggregate (per-doc distinct-chunk count) rides the
     // SAME materialization pass via GROUPING SETS — the warm-floor
-    // profile (MicroProf q101fine) priced the separate guard job at
+    // profile (a step-level q101 replica) priced the separate guard job at
     // ~0.2-0.3 s of a ~3 s serve, and both granularities come off one
     // pruned read of the qids' chunk rows.
     val qpoolBoth = qcvAll

@@ -681,11 +681,10 @@ object Streaming {
              |  CAST(10 AS BIGINT) AS n_results
              |FROM embeddings WHERE vec_id <> 0""".stripMargin)),
 
-    // FROZEN CONTRAST FIXTURE (r13 task 8): q86's inline switch path
-    // (gap re-encoded synchronously by the switching trigger) is
-    // superseded by q90's FoldMachine — kept only so the latency
-    // rehearsal can measure the disease next to the cure. Contracts
-    // unchanged; no new serving-path work lands here.
+    // q86's contract is the inline handoff: the post trigger adopts the
+    // retrained model and folds the gap itself — the work q90's
+    // FoldMachine defers off the trigger. It stays a declared oracle
+    // query; no new serving-path work lands here.
     QueryDef(
       "q86_stream_retrain_async",
       (s, dir) => graft.streaming.StreamOps.streamIndexRetrainAsync(s, dir),

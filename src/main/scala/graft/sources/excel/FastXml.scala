@@ -32,7 +32,8 @@ final class FastXml(rd: Reader) {
   // attribute names/values in REUSED builders (r18): the previous
   // per-attribute `new StringBuilder` + `.toString` pair for both name
   // and value was ~4 allocations per attribute — measured 84 B/cell of
-  // garbage on the 1.6M-cell bench workbook (MicroProf q02alloc).
+  // garbage on the 1.6M-cell bench workbook (ThreadMXBean allocated
+  // bytes over the parse loop; perfbench's excel.scan_alloc_b_per_cell).
   // Names are only ever compared (attrIs-style), so they never
   // materialize; values materialize lazily on attr() access.
   private var attrNames = Array.fill(8)(new StringBuilder(8))

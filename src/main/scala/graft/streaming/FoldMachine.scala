@@ -8,8 +8,8 @@ import graft.operators.ProductQuantizer.HouseM
 /** THE canonical serving-path state machine for the streaming index
   * family: gap folding and pointer adoption taken off the trigger
   * (q90_stream_retrain_fold is its registered end-to-end exercise;
-  * q86's inline `switchIfReady` is kept ONLY as the latency
-  * rehearsal's measured contrast and must not host new work).
+  * q86's inline `switchIfReady` stays only because q86's declared
+  * contract is the inline handoff, and must not host new work).
   *
   * Durable layout under `idx` (everything overwrite-keyed, decisions
   * pure functions of storage — the replay discipline):
@@ -49,10 +49,7 @@ import graft.operators.ProductQuantizer.HouseM
   *     will never be written would hang the worker.
   *
   * `gated=false` drops the delivery gates entirely (the production
-  * shape — and what the catch-up rehearsal drives); `foldSleepMsPerGen`
-  * artificially slows the fold worker so the rehearsal can pin the
-  * fold-throughput : arrival-rate ratio the geometric-shrink argument
-  * depends on.
+  * shape — what q94 and the sharded index drive).
   */
 final class FoldMachine(
     spark: SparkSession,
@@ -61,7 +58,6 @@ final class FoldMachine(
     label: String,
     stampMsg: String,
     gated: Boolean = true,
-    foldSleepMsPerGen: Long = 0L,
     keepSwitches: Int = 2) {
 
   import StreamOps.genDirs
@@ -123,7 +119,6 @@ final class FoldMachine(
     val (coarseR, booksR) = frozenModels(rdir)
     (rec.getAs[Long]("sealed_from") + 1 to rec.getAs[Long]("sealed_to"))
       .foreach { gg =>
-        if (foldSleepMsPerGen > 0) Thread.sleep(foldSleepMsPerGen)
         graft.operators.ProductQuantizer.ivfPqEncodeWith(
             spark.read.parquet(s"$idx/arrived/gen=$gg"),
             "vec_id", "embedding", HouseM, coarseR, booksR)

@@ -146,10 +146,8 @@ final class Handoff(
         spark.sparkContext.clearJobGroup()
         spark.sparkContext.setJobGroup(s"$label-$req", label,
           interruptOnCancel = false)
-        val pool = System.getProperty("graft.handoff.pool",
+        spark.sparkContext.setLocalProperty("spark.scheduler.pool",
           "graft-maintenance")
-        if (pool.nonEmpty)
-          spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
         work(req, record(req))
         // done marker STRICTLY AFTER every artifact `work` produced;
         // Hadoop FileSystem, so the marker lives wherever the

@@ -462,7 +462,7 @@ object StreamOps {
 
   /** Scale-adaptive state-shard count for the RocksDB TWS drives (r18,
     * r17 verdict #5): a stateful operator instantiates ONE RocksDB
-    * store per partition PER TRIGGER, and tools/StreamFloorSweep
+    * store per partition PER TRIGGER, and a state-shard sweep (SCALING.md)
     * measured that cost as the dominant term of the bounded drives at
     * BOTH 8 and 32 cores (32→8 shards: 2.7→1.5 s at 32 cpus, 2.6→1.7 s
     * at 8 cpus). Derived from the stream's INPUT parallelism — the
@@ -520,30 +520,25 @@ object StreamOps {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // State-shard count (r18, r17 verdict #5): a stateful operator pins
     // its partition count at checkpoint creation, and each partition is
-    // one RocksDB store instance paid PER TRIGGER —
-    // tools/StreamFloorSweep measures that cost curve. Precedence:
-    // explicit sweep override (sysprop/env) > caller's derived value
-    // (see derivedStateParts) > inherit the session's shuffle
-    // partitions.
+    // one RocksDB store instance paid PER TRIGGER (SCALING.md records
+    // the cost curve). Precedence: caller's derived value (see
+    // derivedStateParts) > inherit the session's shuffle partitions.
     val (parts, source) = statePartitions(stateParts,
       iso.conf.get("spark.sql.shuffle.partitions"))
     iso.conf.set("spark.sql.shuffle.partitions", parts)
-    // logged per drive so a sweep reading is never attributed to an
-    // override that did not apply: a checkpoint that is reused keeps the
-    // count it was created with, whatever this says
+    // logged per drive: a checkpoint that is reused keeps the count it
+    // was created with, whatever this says
     logger.info(s"RocksDB state partitions: $parts ($source)")
     iso
   }
 
   /** The state-partition count [[rocksDbSession]] applies and where it
-    * came from: `sysprop`, `env`, `derived` (the caller's value) or
-    * `inherited` (the session's shuffle partitions), in that precedence.
+    * came from: `derived` (the caller's value) or `inherited` (the
+    * session's shuffle partitions), in that precedence.
     */
   private[streaming] def statePartitions(
       stateParts: Option[Int], inherited: String): (String, String) =
-    sys.props.get("graft.stream.stateParts").map(_ -> "sysprop")
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_ -> "env"))
-      .orElse(stateParts.map(_.toString -> "derived"))
+    stateParts.map(_.toString -> "derived")
       .getOrElse(inherited -> "inherited")
 
   /** Every batch emits a versioned row per touched user; the converged
@@ -2121,7 +2116,7 @@ object StreamOps {
           // is the delivery phase itself (gens 1..3 clean, 4 drifted),
           // NOT a vec_id threshold: a data-derived marker would
           // misclassify clean batches on any corpus whose real ids
-          // reach the marker range (e.g. ScaleRehearsal blowups add
+          // reach the marker range (e.g. a 10× corpus blowup that adds
           // rep·10^8 to vec_id).
           IndexDrift.occupancyPsiFromOccupancies(
               spark.read.parquet(s"$idx/base_occ"),
@@ -2148,7 +2143,7 @@ object StreamOps {
     // part files → fewer triggers → a loud-but-spurious verify
     // failure. Slicing key: arriving ids are ≡ 9 (mod 10), so pmod 30
     // cycles residues {9,19,29} every 3 arrivals — all three slices
-    // non-empty from 3 rows up, and a ScaleRehearsal id blowup
+    // non-empty from 3 rows up, and a corpus id blowup
     // (+rep·10^8, with 10^8 ≡ 10 mod 30) only PERMUTES the residue
     // set, never collapses it. Which rows land in which batch is
     // irrelevant to every contract (union of generations, per-batch
@@ -2446,15 +2441,15 @@ object StreamOps {
     * driver-side maintenance pass. Serving still covers every row
     * exactly once.
     *
-    * STATUS (r13 task 8 resolved): this query is a FROZEN CONTRAST
-    * FIXTURE. Its inline `switchIfReady` — the switching trigger
-    * re-encoding the whole gap synchronously — is superseded by
-    * [[FoldMachine]] (q90's off-trigger gap fold), and is kept ONLY so
-    * `tools/TriggerLatencyRehearsal` can measure the disease next to
-    * the cure (the ~20 s post trigger vs q90's flat one). New serving-
-    * path work goes in [[FoldMachine]]; this path must not grow. The
-    * pointer derivation itself is shared with the canonical path
-    * ([[SwitchLog]] — listing-only membership, one record read,
+    * STATUS: q86 is a declared oracle query, and its contract is the
+    * INLINE handoff: the post trigger itself adopts the retrained model
+    * and folds the whole gap synchronously (`switchIfReady`) — exactly
+    * the work [[FoldMachine]] (q90) moves off the trigger. Routing q86
+    * through FoldMachine would change the contract it declares, and no
+    * declared query leaves the oracle set, so the inline path stays.
+    * New serving-path work goes in [[FoldMachine]]; this path must not
+    * grow. The pointer derivation itself is shared with the canonical
+    * path ([[SwitchLog]] — listing-only membership, one record read,
     * `ptr_reads_bounded` in the contract row).
     */
   def streamIndexRetrainAsync(
@@ -2612,9 +2607,9 @@ object StreamOps {
           // 6. durable per-generation log row, written LAST — `ms` is
           //    the trigger's whole synchronous cost (what a 100 TB
           //    stream pays per micro-batch while a retrain runs
-          //    concurrently; the latency rehearsal reads this), and
-          //    `ptr_reads` the switch-RECORD reads this trigger issued
-          //    (the O(1)-in-history probe; contract-asserted ≤ 1)
+          //    concurrently), and `ptr_reads` the switch-RECORD reads
+          //    this trigger issued (the O(1)-in-history probe;
+          //    contract-asserted ≤ 1)
           spark.range(1)
             .select(lit(gen).as("gen"), lit(phase).as("phase"),
               lit(fired).as("retrain_fired"),
@@ -2872,8 +2867,8 @@ object StreamOps {
     })
     // THE canonical serving-path state machine (fold worker + the
     // maintain() seal/re-arm/adopt decision + the SwitchLog pointer) —
-    // shared with FoldMachineSpec's synthetic-state cases and the
-    // catch-up rehearsal; q86's inline switch is the frozen contrast
+    // shared with FoldMachineSpec's synthetic-state cases; q86's inline
+    // switch stays only as q86's declared contract
     val fm = new FoldMachine(spark, idx, retrainH, "graft-q90-fold",
       "q90 frozen coarse-centroid table")
     def frozenModels(dir: String): (DataFrame, DataFrame) =

@@ -13,7 +13,7 @@ import graft.operators.ScalarQuantizer
   * as RecallAudit (leave-self-out, fixed residue class). Kept as a
   * SEPARATE tool so re-measuring SQ8 never re-trains the k-means
   * artifacts whose committed audit numbers SCALING.md quotes (the r15
-  * PqTune staleness lesson: artifacts must be reproducible from the
+  * PQ-tuning staleness lesson: artifacts must be reproducible from the
   * committed tool without disturbing sibling numbers).
   *
   * Usage: runMain graft.tools.Sq8Audit [sfDir] [k] [nQueries]

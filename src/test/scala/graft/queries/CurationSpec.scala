@@ -155,22 +155,6 @@ class CurationSpec extends AnyFunSuite {
     }
   }
 
-  test("selfExciseViaAgg (skew fallback) row-for-row equals the window form") {
-    // r18: the pre-aggregate variant is the documented hot-gram
-    // fallback; its equality to the shipping window form is pinned so
-    // a future swap under skew cannot drift.
-    val rnd = new scala.util.Random(23)
-    val docsSeq = (1L to 8L).map { id =>
-      val len = 5 + rnd.nextInt(11)
-      id -> Vector.fill(len)("abcde"(rnd.nextInt(5)).toString).mkString(" ")
-    }
-    val d = docs(docsSeq.map { case (id, t) => (id, t, "en", "s") }: _*)
-    val win = Curation.selfExcise(d, 3).collect().map(_.toSeq).toSet
-    val agg = Curation.selfExciseViaAgg(d, 3).collect().map(_.toSeq).toSet
-    assert(win == agg)
-    assert(win.nonEmpty)
-  }
-
   test("kAnonStats publishes large slices and pools small ones per source") {
     val rows =
       docs(Seq.tabulate(5)(i => (i.toLong, "w w", "en", "s1")) ++

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.util.concurrent.CountDownLatch
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -216,5 +218,29 @@ class HandoffSpec extends AnyFunSuite {
     assert(h2.bookkeepingSizes._2 == 1,
       "the failed request's launched entry stays — rearm in THIS " +
         "process must not retry it")
+  }
+
+  test("a worker's Spark jobs run in the graft-maintenance scheduler pool") {
+    val root = freshRoot()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null) jobs.add(e.properties)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val h = new Handoff(spark, root, r => s"$root/req=$r/_DONE",
+        "handoff-pool-spec")((_, _) => spark.range(100).count())
+      h.submit(4L, rec(40L))
+      h.joinAll()
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val worker = jobs.asScala.toSeq
+      .filter(_.getProperty("spark.jobGroup.id") == "handoff-pool-spec-4")
+    assert(worker.nonEmpty, "the worker must run at least one Spark job")
+    assert(worker.forall(
+      _.getProperty("spark.scheduler.pool") == "graft-maintenance"),
+      worker.map(_.getProperty("spark.scheduler.pool")).mkString(", "))
   }
 }

@@ -22,13 +22,9 @@ class StreamTwsSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  test("state-partition count precedence: sysprop > env > derived > inherited") {
-    assume(!sys.env.contains("SPARK_GRAFT_STREAM_PARTS"))
+  test("state-partition count precedence: derived > inherited") {
     assert(StreamOps.statePartitions(Some(6), "4") == ("6" -> "derived"))
     assert(StreamOps.statePartitions(None, "4") == ("4" -> "inherited"))
-    sys.props("graft.stream.stateParts") = "3"
-    try assert(StreamOps.statePartitions(Some(6), "4") == ("3" -> "sysprop"))
-    finally sys.props.remove("graft.stream.stateParts")
   }
 
   test("scrambled multi-micro-batch arrival equals the batch rollup") {
