@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Conversion entry point + CLI — the Spark equivalent of the reference's
@@ -28,9 +30,10 @@ object ExcelToParquet {
       sheetIndex: Option[Int] = None,
       skipRows: Int = 0,
       batchSize: Int = 5000,
-      writePartitions: Int = 1,
       // >1: splittable single-sheet scan (byte-range partitions of the
-      // inflated sheet XML; xlsx with r= refs only — see SCALING.md)
+      // inflated sheet XML; xlsx with r= refs only — see SCALING.md).
+      // Each chunk task also encodes its own part file, so this is the
+      // order-preserving parallel encode of one huge workbook too
       sheetPartitions: Int = 1)
 
   def read(spark: SparkSession, opts: Options): DataFrame = {
@@ -59,12 +62,10 @@ object ExcelToParquet {
     if (!multi && !lower.endsWith(".xlsx") && !lower.endsWith(".xlsb"))
       throw new IllegalArgumentException(
         s"Unsupported file extension for input: ${opts.input} (expected .xlsx or .xlsb)")
-    val df = read(spark, opts)
-    if (opts.writePartitions > 1) writeParallel(df, opts)
-    else {
-      val w = df.write.mode("overwrite").option("compression", "zstd")
-      withGroupGeometry(w, opts).parquet(opts.output)
-    }
+    val w = read(spark, opts).write.mode("overwrite").option("compression", "zstd")
+    // R8 (see above); the option reaches the task-side Hadoop conf
+    if (opts.batchSize > 0) w.option("parquet.block.row.count.limit", opts.batchSize)
+    w.parquet(opts.output)
     committedRows(spark, opts.output)
   }
 
@@ -88,43 +89,6 @@ object ExcelToParquet {
         try reader.getRecordCount finally reader.close()
       }
       .sum
-  }
-
-  /** R8: one write batch = one row group. DataFrameWriter options reach
-    * the task-side hadoop conf (`newHadoopConfWithOptions`), where
-    * parquet-mr 1.16 enforces the row-count limit per group.
-    */
-  private def withGroupGeometry[T](
-      w: org.apache.spark.sql.DataFrameWriter[T],
-      opts: Options): org.apache.spark.sql.DataFrameWriter[T] =
-    if (opts.batchSize > 0)
-      w.option("parquet.block.row.count.limit", opts.batchSize)
-    else w
-
-  /** Order-preserving parallel encode for one huge workbook (the serial
-    * tail of a single-file conversion is the parquet encode, not the
-    * parse — the chunk-parallel scan feeds a single writer task). Rows
-    * are tagged with `monotonically_increasing_id()` — sequential within
-    * each scan partition and ordered across partitions by partition id,
-    * i.e. exactly sheet/file order — then range-partitioned on that id
-    * and sorted within partitions, so lexicographic part-file order
-    * reproduces global row order (same guarantee the reference's
-    * reorder-buffer writer provides, /root/reference/src/lib.rs:288-320).
-    * The parsed rows are persisted once so the range partitioner's
-    * boundary-sampling job does not re-parse the workbook.
-    */
-  private def writeParallel(df: DataFrame, opts: Options): Unit = {
-    import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
-    val tagged = df.withColumn("_graft_row", monotonically_increasing_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val w = tagged
-        .repartitionByRange(opts.writePartitions, col("_graft_row"))
-        .sortWithinPartitions("_graft_row")
-        .drop("_graft_row")
-        .write.mode("overwrite").option("compression", "zstd")
-      withGroupGeometry(w, opts).parquet(opts.output)
-    } finally tagged.unpersist(false)
   }
 
   /** Fan out many independent file conversions. Each conversion is its
@@ -220,35 +184,42 @@ object ExcelToParquet {
     (results, skip.map(_.input))
   }
 
-  def main(args: Array[String]): Unit = {
-    var input: Option[String] = None
-    var output: Option[String] = None
-    var sheetName: Option[String] = None
-    var sheetIndex: Option[Int] = None
-    var skipRows = 0
-    var batchSize = 5000
-    var writePartitions = 1
-    var sheetPartitions = 1
+  /** Parse the CLI flags (the reference's, plus `--sheet-partitions`)
+    * into conversion options. Throws IllegalArgumentException on an
+    * unknown flag, a flag given without its value, or a missing
+    * `-i`/`-o`.
+    */
+  def parseArgs(args: Seq[String]): Options = {
+    val values = mutable.Map.empty[String, String]
     var i = 0
-    try {
-      while (i < args.length) {
-        args(i) match {
-          case "-i" | "--input"  => input = Some(args(i + 1)); i += 2
-          case "-o" | "--output" => output = Some(args(i + 1)); i += 2
-          case "--sheet-name"    => sheetName = Some(args(i + 1)); i += 2
-          case "--sheet-index"   => sheetIndex = Some(args(i + 1).toInt); i += 2
-          case "--skip-rows"     => skipRows = args(i + 1).toInt; i += 2
-          case "--batch-size"    => batchSize = args(i + 1).toInt; i += 2
-          case "--write-partitions" => writePartitions = args(i + 1).toInt; i += 2
-          case "--sheet-partitions" => sheetPartitions = args(i + 1).toInt; i += 2
-          case other => throw new IllegalArgumentException(s"Unknown argument: $other")
-        }
+    while (i < args.length) {
+      val flag = args(i) match {
+        case "-i" | "--input" => "--input"
+        case "-o" | "--output" => "--output"
+        case f @ ("--sheet-name" | "--sheet-index" | "--skip-rows" |
+            "--batch-size" | "--sheet-partitions") => f
+        case other => throw new IllegalArgumentException(s"Unknown argument: $other")
       }
-      val opts = Options(
-        input.getOrElse(throw new IllegalArgumentException("missing -i/--input")),
-        output.getOrElse(throw new IllegalArgumentException("missing -o/--output")),
-        sheetName, sheetIndex, skipRows, batchSize, writePartitions,
-        sheetPartitions)
+      if (i + 1 >= args.length)
+        throw new IllegalArgumentException(s"missing value for ${args(i)}")
+      values(flag) = args(i + 1)
+      i += 2
+    }
+    def int(flag: String, default: Int): Int =
+      values.get(flag).fold(default)(_.toInt)
+    Options(
+      values.getOrElse("--input", throw new IllegalArgumentException("missing -i/--input")),
+      values.getOrElse("--output", throw new IllegalArgumentException("missing -o/--output")),
+      sheetName = values.get("--sheet-name"),
+      sheetIndex = values.get("--sheet-index").map(_.toInt),
+      skipRows = int("--skip-rows", 0),
+      batchSize = int("--batch-size", 5000),
+      sheetPartitions = int("--sheet-partitions", 1))
+  }
+
+  def main(args: Array[String]): Unit = {
+    try {
+      val opts = parseArgs(args.toSeq)
       val spark = GraftSession.local()
       val t0 = System.nanoTime()
       val rows = convert(spark, opts)

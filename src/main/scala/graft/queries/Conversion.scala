@@ -117,10 +117,8 @@ object Conversion {
     QueryDef(
       "q02_convert_throughput",
       (s, _) => {
-        // writePartitions stays 1 here: at 200k rows the serial encode is
-        // pipelined with the scan inside one task, and measured faster
-        // (1.5 s) than the parallel-encode path (2.5 s), whose
-        // persist+range-shuffle only amortizes on multi-GB workbooks.
+        // the serial path: the encode is pipelined with the scan inside
+        // one task (q02_convert_split times the chunk-parallel one)
         val src = ensureBenchFixture()
         val out = graft.RunPaths.scratch("graft_bench_200k.parquet")
         graft.ExcelToParquet.convert(s, graft.ExcelToParquet.Options(src, out))

@@ -17,20 +17,22 @@ import org.apache.spark.unsafe.types.UTF8String
 /** DataSource V2 `format("excel")` — the Spark-native equivalent of the
   * reference's xlsx scan (R1, /root/reference/src/lib.rs:30-65).
   *
-  * Read options (reference CLI flags, /root/reference/src/main.rs:7-36):
-  *   - `path`            xlsx file
+  * Read options (reference CLI flags, /root/reference/src/main.rs:7-36),
+  * and no others — an unknown key fails the read (see `readOptions`):
+  *   - `path`            workbook file, directory or glob
   *   - `sheetName`       wins over sheetIndex (/root/reference/src/lib.rs:105-124)
   *   - `sheetIndex`      0-based; OOB -> error
   *   - `skipRows`        header offset within the used range
+  *   - `sheetPartitions` >1 splits each file's sheet into row-aligned chunks
+  *   - `headerDedup`     "unique" (default) or "reference" — see HeaderNames
   *
   * Schema: every column nullable StringType (/root/reference/src/lib.rs:229-234),
   * names inferred from the header row on the driver. Column pruning is
   * pushed into the reader (pruned sheet columns are never materialized).
   *
-  * Scale: one InputPartition per sheet — matches the reference's single
-  * reader thread; at 100 TB the unit of parallelism is many files, which
-  * the conversion entry point (ExcelToParquet) handles by fanning out one
-  * task per file.
+  * Scale: one InputPartition per workbook file, so a directory or glob
+  * of N files is an N-task scan. With `sheetPartitions = n` each file's
+  * sheet is additionally split into n chunk tasks (see ExcelScan).
   */
 class ExcelDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "excel"
@@ -49,7 +51,19 @@ class ExcelDataSource extends TableProvider with DataSourceRegister {
 }
 
 object ExcelDataSource {
+  /** The read options the source accepts (compared case-insensitively,
+    * as Spark passes them). Any other key fails the read, so a typo or a
+    * retired option cannot be silently ignored.
+    */
+  private val optionKeys: Seq[String] =
+    Seq("path", "sheetName", "sheetIndex", "skipRows", "sheetPartitions", "headerDedup")
+
   def readOptions(options: CaseInsensitiveStringMap): ExcelRead.Options = {
+    val known = optionKeys.map(_.toLowerCase).toSet
+    options.asCaseSensitiveMap().keySet().asScala.find(k => !known(k.toLowerCase)).foreach { k =>
+      throw new IllegalArgumentException(
+        s"excel source: unknown read option '$k' (accepted: ${optionKeys.mkString(", ")})")
+    }
     val path = Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException("excel source requires a path"))
     ExcelRead.Options(
@@ -60,11 +74,7 @@ object ExcelDataSource {
       sheetPartitions =
         Option(options.get("sheetPartitions")).map(_.toInt).getOrElse(1),
       headerDedup =
-        Option(options.get("headerDedup")).getOrElse("unique"),
-      maxSplitFiles =
-        Option(options.get("maxSplitFiles")).map(_.toInt),
-      contentStamp =
-        Option(options.get("contentStamp")).exists(_.toBoolean))
+        Option(options.get("headerDedup")).getOrElse("unique"))
   }
 
   /** Expand the load path into concrete workbook files: a glob matches
@@ -176,20 +186,17 @@ final class ExcelScan(fullSchema: StructType, required: StructType, options: Cas
     // sheet a second time onto executor temp disk (the chunk spills).
     // sheetPartitions stays a PER-FILE knob (a corpus of 8 huge
     // workbooks × sheetPartitions=8 rightly plans 64 partitions), but
-    // the number of files it will split is bounded: past maxSplitFiles
-    // (the read option, else the graft.excel.maxSplitFiles system
-    // property, default 16) the corpus is a directory-scale scan whose
+    // the number of files it will split is bounded: past
+    // ExcelScan.maxSplitFiles the corpus is a directory-scale scan whose
     // parallelism already comes from file count — splitting would buy
     // no parallelism and 2× the corpus on temp disk, so scan one task
     // per file and say so. (Since the r11 lazy-spill redesign this
     // guard bounds TEMP-DISK AMPLIFICATION only; plan-time driver cost
     // is O(1) per file regardless.)
-    val maxSplitFiles = o.maxSplitFiles.getOrElse(
-      Integer.getInteger("graft.excel.maxSplitFiles", 16).intValue())
-    if (o.sheetPartitions > 1 && paths.length > maxSplitFiles) {
+    if (o.sheetPartitions > 1 && paths.length > ExcelScan.maxSplitFiles) {
       ExcelScan.log.warn(
         s"sheetPartitions=${o.sheetPartitions} ignored: ${paths.length} " +
-          s"files exceed maxSplitFiles=$maxSplitFiles — a directory-" +
+          s"files exceed maxSplitFiles=${ExcelScan.maxSplitFiles} — a directory-" +
           "scale scan already parallelizes by file, and splitting " +
           "would re-inflate the whole corpus onto temp disk; scanning " +
           "one task per file")
@@ -229,8 +236,7 @@ final class ExcelScan(fullSchema: StructType, required: StructType, options: Cas
             // tasks resolve chunks for exactly this version (see the
             // ExcelScan cache contract — no torn reads across a
             // mid-action workbook replacement)
-            val stamp = ExcelScan.versionStamp(
-              new java.io.File(path), o.contentStamp)
+            val stamp = ExcelScan.versionStamp(new java.io.File(path))
             (0 until o.sheetPartitions).map { i =>
               ExcelInputPartition(path, o.sheetName, o.sheetIndex,
                 o.skipRows, positions, expectNames,
@@ -254,8 +260,13 @@ final class ExcelScan(fullSchema: StructType, required: StructType, options: Cas
 object ExcelScan {
   private[excel] val log = org.slf4j.LoggerFactory.getLogger(classOf[ExcelScan])
 
+  /** A scan of more files than this ignores `sheetPartitions` and reads
+    * one task per file (the many-files guard in planInputPartitions).
+    */
+  private[excel] val maxSplitFiles = 16
+
   /** Process-global cache of spilled chunk files, keyed by workbook
-    * identity (absolute path, size, mtime, fileKey) + sheet SELECTOR +
+    * identity (absolute path + version stamp) + sheet SELECTOR +
     * partition count. Every split-scan TASK resolves its chunk set
     * through this cache (chunksFor), and DSv2 re-plans the scan on
     * EVERY action; without the cache each action re-inflated and
@@ -267,51 +278,35 @@ object ExcelScan {
     * deterministically, and keying by selector lets a task look up the
     * PLANNED version's chunks without opening (a possibly replaced)
     * file to resolve the part name. Entries are validated against the
-    * filesystem before reuse; a concurrent double-spill is benign
-    * (last put wins, both chunk sets are valid until JVM exit).
+    * filesystem before reuse.
     *
     * Snapshot contract: the PLAN stamps each split intent with the
-    * file's version (size, mtime, fileKey) observed at plan time, and
-    * every task resolves chunks for exactly that version — a cache hit
-    * serves the planned version even if the file has since been
-    * replaced, and a miss + on-disk mismatch fails LOUDLY
+    * file's version (versionStamp) observed at plan time, and every task
+    * resolves chunks for exactly that version — a cache hit serves the
+    * planned version, and a miss + on-disk mismatch fails LOUDLY
     * (FileNotFoundException) instead of silently spilling the new
     * version, so one action can never mix rows from two file versions
-    * (torn read). When a spill observes cached entries for the same
-    * (path, selector) whose stamp no longer matches the file on disk,
-    * those superseded entries are CONDEMNED: no new plan can reference
-    * them (a new plan stamps the CURRENT version, a different key),
-    * they stay cache-resident so in-flight tasks planned against them
-    * still hit, and their chunk files + cache entries are reaped only
-    * after a grace window (`graft.excel.evictGraceMs`, default
-    * 10 min). A task against a replaced workbook that outlives the
-    * grace window fails loudly with FileNotFound — its old-version
-    * result was void the moment the file changed; the grace only
-    * protects in-flight work, it is not a consistency promise.
-    * deleteOnExit remains the last-resort cleanup for LIVE entries.
+    * (torn read).
+    *
+    * Supersede rule: a task that spills version v of (path, selector)
+    * deletes that (path, selector)'s chunk sets of every other version
+    * right away, files and cache entries both. No new plan can reach
+    * them (a new plan stamps the current version, a different key); a
+    * task still planned against the replaced file fails with the
+    * "changed while a split scan" error — its result was void the
+    * moment the file changed. Different-n entries of the live version
+    * stay cached. deleteOnExit remains the last-resort cleanup.
     */
-  private type ChunkKey = (String, Long, Long, String, String, Int)
+  private type Stamp = (Long, Long, String)
+  private type ChunkKey = (String, Stamp, String, Int)
   private val chunkCache =
     new java.util.concurrent.ConcurrentHashMap[ChunkKey, Seq[String]]()
 
-  /** Keys already condemned (enqueued for grace-expiry reaping) — guards
-    * against re-enqueueing the same superseded entry on every later
-    * spill for the path, since condemned entries now stay in chunkCache
-    * until the grace elapses.
-    */
-  private val condemnedKeys =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[ChunkKey]()
-
-  /** Superseded chunk sets awaiting reaping, oldest first (appended in
-    * condemnation order, so the head is always the oldest entry). Each
-    * entry carries its cache key so expiry removes the cache entry and
-    * its per-key spill lock along with the files.
-    */
-  private val condemned =
-    new java.util.concurrent.ConcurrentLinkedQueue[(ChunkKey, Seq[String], Long)]()
-
-  private def graceNanos: Long =
-    java.lang.Long.getLong("graft.excel.evictGraceMs", 600000L) * 1000000L
+  // one lock per (file, sheet, n): sibling tasks of a split scan all
+  // race to materialize the same chunk set; the loser threads must WAIT
+  // for the winner's one-pass spill, not run their own
+  private val spillLocks = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, Int), Object]()
 
   private def deleteChunkSet(chunks: Seq[String]): Unit =
     chunks.foreach { c =>
@@ -321,143 +316,49 @@ object ExcelScan {
       if (dir != null) dir.delete() // succeeds once the dir is empty
     }
 
-  /** Reap condemned chunk sets whose grace window has elapsed: delete
-    * the chunk files, drop the cache entry (in-flight stamped lookups
-    * stop hitting it), and — when no live entry for the same
-    * (path, selector, n) remains — drop the per-key spill lock, so the
-    * lock map stays bounded on a long-lived driver cycling workbooks.
-    * The polled entry's OWN timestamp is re-checked after poll: two
-    * threads sweeping concurrently may each peek the same expired head,
-    * and the loser's poll() would otherwise hand it the NEXT (possibly
-    * still in-grace) entry to delete. The whole queue is drained ONCE
-    * per sweep (bounded by the size observed at entry, so concurrent
-    * re-enqueues cannot extend the loop): an in-grace entry is
-    * re-enqueued and the scan continues PAST it, so an expired entry
-    * that rotated behind a newer in-grace head is still deleted this
-    * sweep instead of surviving up to another grace window (tail order
-    * is fine — deletion is gated on each entry's own timestamp, never
-    * on queue position).
+  /** The file's version stamp (length, mtime, fileKey + content CRC).
+    * The filesystem fileKey (inode) distinguishes an atomically REPLACED
+    * workbook even when length and coarse mtime coincide; the CRC of the
+    * first/last 64 KiB catches an in-place rewrite that keeps length,
+    * mtime and inode (bounded I/O per check; the ZIP central directory
+    * lives in the tail, so any entry change moves bytes there). The
+    * hash rides inside the fileKey string, so every consumer (cache
+    * keys, plan stamps, task verification) takes it without a shape
+    * change.
     */
-  private def sweepCondemned(): Unit = {
-    val now = System.nanoTime()
-    var remaining = condemned.size()
-    while (remaining > 0) {
-      remaining -= 1
-      val polled = condemned.poll() // atomic: one thread owns each entry
-      if (polled == null) remaining = 0
-      else if (now - polled._3 >= graceNanos) {
-        val (key, chunks, _) = polled
-        deleteChunkSet(chunks)
-        // conditional remove: drop the entry only if it still maps to
-        // the condemned chunk set — a hashed scan may have re-populated
-        // the same unhashed key with FRESH verified chunks (the
-        // alternation double-key), and an unconditional remove would
-        // evict that live entry along with the dead files
-        chunkCache.remove(key, chunks)
-        condemnedKeys.remove(key)
-        val lockKey = (key._1, key._5, key._6)
-        val liveLeft = chunkCache.keySet().iterator().asScala.exists(k =>
-          k._1 == lockKey._1 && k._5 == lockKey._2 && k._6 == lockKey._3)
-        // racing a concurrent computeIfAbsent here at worst yields two
-        // lock objects and a benign double-spill (documented above)
-        if (!liveLeft) spillLocks.remove(lockKey)
-      } else condemned.add(polled)
-    }
-  }
-
-  // one lock per (file, sheet, n): sibling tasks of a split scan all
-  // race to materialize the same chunk set; the loser threads must WAIT
-  // for the winner's one-pass spill, not run their own
-  private val spillLocks = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int), Object]()
-
-  /** The file's version stamp (length, mtime, fileKey). The filesystem
-    * fileKey (inode) distinguishes an atomically REPLACED workbook even
-    * when length and coarse mtime coincide; an in-place rewrite inside
-    * the mtime granularity with equal length is the one staleness
-    * window the cheap stamp cannot see — `contentHash = true` (the
-    * `contentStamp` read option) closes it by folding a CRC of the
-    * first/last 64 KiB into the key (bounded I/O per check; the ZIP
-    * central directory lives in the tail, so any entry change moves
-    * bytes there). The hash rides inside the fileKey string, so every
-    * consumer (cache keys, plan stamps, task verification) inherits it
-    * without a shape change.
-    */
-  private[excel] def versionStamp(
-      f: java.io.File, contentHash: Boolean = false): (Long, Long, String) = {
+  private[graft] def versionStamp(f: java.io.File): Stamp = {
     val fileKey =
       try String.valueOf(java.nio.file.Files.readAttributes(
         f.toPath, classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey())
       catch { case _: Throwable => "" }
-    // a vanished/unreadable file must not make the hashed stamp THROW
-    // (the cheap stamp returns (0, 0, "") for a missing file, and both
-    // the grace-window cache-hit path and the loud "changed while a
-    // split scan" mismatch must keep working) — but it must not degrade
-    // to a COMPARABLE value either: an empty hash on both sides of a
-    // comparison (two I/O failures, a permissions regression) would
-    // compare EQUAL and silently disable the in-place-rewrite detection
-    // the option promises while cached chunks keep serving. A failed
-    // CRC therefore stamps a per-call UNVERIFIABLE sentinel: it never
-    // equals any other stamp (including another failure's), so the
-    // consumer is forced onto its safe path — re-spill on an ad hoc
-    // read, the loud version-mismatch error on a planned split scan.
-    val key =
-      if (!contentHash) fileKey
-      else s"$fileKey:h=${
-        try contentCrc(f)
-        catch {
-          case _: Throwable =>
-            if (crcDegradedLogged.compareAndSet(false, true))
-              System.err.println(
-                s"[graft-excel] contentStamp CRC unreadable for $f — " +
-                  "treating the stamp as unverifiable (never-equal); " +
-                  "split scans against this version will fail loudly " +
-                  "rather than risk serving a stale spill")
-            s"$unverifiablePrefix${unverifiableSeq.incrementAndGet()}"
-        }
-      }"
-    (f.length(), f.lastModified(), key)
+    // a vanished/unreadable file must not make the stamp THROW (the
+    // loud "changed while a split scan" mismatch must keep working) —
+    // but it must not degrade to a COMPARABLE value either: an empty
+    // hash on both sides of a comparison (two I/O failures, a
+    // permissions regression) would compare EQUAL and silently disable
+    // in-place-rewrite detection while cached chunks keep serving. A
+    // failed CRC therefore stamps a per-call UNVERIFIABLE sentinel: it
+    // never equals any other stamp (including another failure's), so a
+    // planned split scan takes the loud version-mismatch error.
+    val hash =
+      try contentCrc(f)
+      catch {
+        case _: Throwable =>
+          if (crcDegradedLogged.compareAndSet(false, true))
+            log.warn(s"content CRC unreadable for $f — treating the stamp " +
+              "as unverifiable (never-equal); split scans against this " +
+              "version will fail loudly rather than risk serving a stale spill")
+          s"unverifiable-${unverifiableSeq.incrementAndGet()}"
+      }
+    (f.length(), f.lastModified(), s"$fileKey:h=$hash")
   }
 
-  // CRC-degradation plumbing: the sentinel makes failure states
-  // never-equal instead of silently-equal; the flag logs the first
-  // degradation so an operator learns detection is compromised
-  private val unverifiablePrefix = "unverifiable-"
+  // the sentinel makes failure states never-equal instead of
+  // silently-equal; the flag logs the first degradation so an operator
+  // learns detection is compromised
   private val unverifiableSeq = new java.util.concurrent.atomic.AtomicLong()
   private val crcDegradedLogged =
     new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  /** Whether a stamp carries a REAL (verifiable) content hash — true
-    * only when hashing was requested AND the CRC read succeeded. The
-    * unverifiable sentinel must not be treated as content evidence
-    * (e.g. must never re-key or double-key a spill).
-    */
-  private[excel] def stampHashVerified(fileKey: String): Boolean = {
-    val i = fileKey.indexOf(":h=")
-    i >= 0 && {
-      val h = fileKey.substring(i + 3)
-      h.nonEmpty && !h.startsWith(unverifiablePrefix)
-    }
-  }
-
-  /** Whether a stamp (from a plan or a cache key) carries the opt-in
-    * content hash — a re-derived stamp must hash iff the planned one
-    * did, or the comparison is spuriously unequal.
-    */
-  private[excel] def stampHasHash(fileKey: String): Boolean =
-    fileKey.contains(":h=")
-
-  /** The stamp's fileKey with any content-hash suffix stripped — the
-    * version identity two stamps of the SAME file taken in different
-    * contentStamp modes share. Supersedure comparisons must use this:
-    * a hashed and an unhashed stamp of one live version are not rival
-    * versions, and condemning one for the other would churn re-spills
-    * on every mode alternation.
-    */
-  private def stampBaseKey(fileKey: String): String = {
-    val i = fileKey.indexOf(":h=")
-    if (i < 0) fileKey else fileKey.substring(0, i)
-  }
 
   private def contentCrc(f: java.io.File): String = {
     val crc = new java.util.zip.CRC32
@@ -491,17 +392,15 @@ object ExcelScan {
     * pre-r11 O(corpus) SERIAL driver inflate that ran before any task
     * could start.
     *
-    * `planned` is the version stamp the PLAN captured (None only for
-    * tooling that resolves ad hoc): a cached entry under the planned
-    * stamp is served even if the file has since been replaced (the
-    * condemned-with-grace window), and a cache miss whose on-disk file
-    * no longer matches the planned stamp fails LOUDLY instead of
-    * spilling the new version — the task set of one action must never
-    * mix rows of two file versions.
+    * `planned` is the version stamp the PLAN captured: a cached entry
+    * under it is served, and a cache miss whose on-disk file no longer
+    * matches it fails LOUDLY instead of spilling the new version — the
+    * task set of one action must never mix rows of two file versions.
+    * A spill applies the supersede rule (see the cache contract above).
     */
   private[graft] def chunksFor(
       path: String, sheetName: Option[String], sheetIndex: Option[Int],
-      n: Int, planned: Option[(Long, Long, String)] = None): Seq[String] = {
+      n: Int, planned: Stamp): Seq[String] = {
     val f = new java.io.File(path)
     val abs = f.getAbsolutePath
     // tagged selector: a sheet literally NAMED "1" read by name and a
@@ -512,34 +411,20 @@ object ExcelScan {
       .getOrElse("idx:" + sheetIndex.getOrElse(0))
     val lock = spillLocks.computeIfAbsent((abs, sel, n), _ => new Object)
     lock.synchronized {
-      // sweep on EVERY lookup, hit or miss: a driver that replaces a
-      // workbook once and then only ever re-plans the new version takes
-      // the cache-hit path forever, and a miss-only sweep would keep
-      // the superseded chunk set on temp disk until JVM exit
-      sweepCondemned()
-      // re-derive with the hash iff the planned stamp carried one, or
-      // the comparison below is spuriously unequal
-      val current = versionStamp(f, planned.exists(p => stampHasHash(p._3)))
-      val stamp = planned.getOrElse(current)
-      val key = (abs, stamp._1, stamp._2, stamp._3, sel, n)
+      val key = (abs, planned, sel, n)
       val cached = chunkCache.get(key)
       if (cached != null && cached.forall(c => new java.io.File(c).exists()))
         cached
-      else if (planned.exists(_ != current))
-        // the planned version is gone from cache AND from disk (or its
-        // grace expired): any spill now would read the replacement —
-        // rows from a different version than sibling tasks already
-        // returned. Fail the task instead of tearing the result.
+      else if (versionStamp(f) != planned)
+        // the planned version is gone from cache AND from disk: any
+        // spill now would read the replacement — rows from a different
+        // version than sibling tasks already returned. Fail the task
+        // instead of tearing the result.
         throw new java.io.FileNotFoundException(
           s"$path changed while a split scan planned against version " +
-            s"(len=${stamp._1}, mtime=${stamp._2}) was in flight — " +
+            s"(len=${planned._1}, mtime=${planned._2}) was in flight — " +
             "re-run the query to read the current file")
       else {
-        condemnSuperseded(abs, sel, current)
-        // second sweep after condemning: with a zero/short grace the
-        // just-superseded set is already expired and must not wait for
-        // the next lookup
-        sweepCondemned()
         val wb = WorkbookSource.open(path)
         val chunks =
           try {
@@ -550,78 +435,13 @@ object ExcelScan {
             wb.spillRowChunks(sheet.target, n, scratch)
           } finally wb.close()
         chunkCache.put(key, chunks)
-        // Alternation-churn relief WITHOUT blessing unverified data: a
-        // hashed scan rightly condemned any unhashed spill of the same
-        // cheap stamp (that spill cannot be verified against the bytes
-        // the hash just observed — re-keying it would let an in-place
-        // rewrite serve stale rows under a key that CLAIMS verified
-        // content). But the chunks spilled HERE were read from exactly
-        // the content the hash covers, so they are valid for unhashed
-        // readers of this version too: publish them under the unhashed
-        // key as well. A contentStamp-alternating workload then pays
-        // one re-spill at the first hashed scan and hits thereafter in
-        // both modes (the unhashed-current path never condemns the
-        // hashed entry, and both keys are condemned together on any
-        // real version change). Only a VERIFIED hash double-keys — an
-        // unverifiable sentinel is not content evidence.
-        if (stampHashVerified(stamp._3)) {
-          val ukey: ChunkKey =
-            (abs, stamp._1, stamp._2, stampBaseKey(stamp._3), sel, n)
-          chunkCache.put(ukey, chunks)
-          // the unhashed key may sit in condemnedKeys from the
-          // condemnation this very scan performed — clear it so a LATER
-          // real version change can condemn the re-populated entry (the
-          // pending queue entry still reaps the OLD files at grace; its
-          // conditional cache-remove skips this fresh mapping)
-          condemnedKeys.remove(ukey)
+        // supersede: drop every other version of this (path, selector)
+        chunkCache.forEach { (k, v) =>
+          if (k._1 == abs && k._3 == sel && k._2 != planned && chunkCache.remove(k, v))
+            deleteChunkSet(v)
         }
         chunks
       }
-    }
-  }
-
-  /** Condemn SUPERSEDED versions: entries for the same (path, selector)
-    * whose (size, mtime, fileKey) no longer match the file on disk
-    * describe a workbook that has been replaced — enqueue their chunk
-    * files for deletion after the grace window (see the cache contract
-    * above). They stay cache-resident until the grace elapses so an
-    * in-flight action planned against the old version keeps hitting;
-    * no NEW plan can reach them (a new plan stamps the current
-    * version, a different key). Without the eventual reap their
-    * spilled sheet copies would sit on temp disk until JVM exit
-    * (deleteOnExit), re-growing exactly the accumulation this cache
-    * exists to stop on a long-lived driver cycling workbooks.
-    * (Different-n entries for the LIVE version stay valid and cached.)
-    */
-  private def condemnSuperseded(
-      abs: String, sel: String, current: (Long, Long, String)): Unit = {
-    val it = chunkCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val k = e.getKey
-      // same version = cheap stamp equal AND the hash evidence does
-      // not contradict it. Asymmetric on purpose:
-      //   - two hashed stamps with different hashes ARE rivals — the
-      //     in-place rewrite the hash exists to detect;
-      //   - a hashed CURRENT condemns an UNHASHED cached entry: the
-      //     hashed reader has strictly better information, and the
-      //     unhashed spill cannot be verified against the content it
-      //     just observed — keeping it would let an in-place rewrite
-      //     serve stale unhashed reads FOREVER once a hashed scan has
-      //     already seen the new bytes;
-      //   - an unhashed CURRENT does NOT condemn a hashed cached
-      //     entry: it carries less information, and the hashed entry
-      //     can only ever serve plans whose stamp matches its hash.
-      // The residual churn (alternating modes on an UNCHANGED file
-      // re-spills the unhashed entry after each hashed scan) is the
-      // price of never serving known-stale rows.
-      val sameVersion = k._2 == current._1 && k._3 == current._2 &&
-        stampBaseKey(k._4) == stampBaseKey(current._3) &&
-        (!stampHasHash(current._3) ||
-          (stampHasHash(k._4) && k._4 == current._3))
-      if (k._1 == abs && k._5 == sel && !sameVersion &&
-          condemnedKeys.add(k))
-        condemned.add((k, e.getValue, System.nanoTime()))
     }
   }
 }
@@ -662,13 +482,12 @@ final class ExcelReaderFactory extends PartitionReaderFactory {
     // prevents. The pre-check fails fast; the POST-check closes the
     // TOCTOU window where the workbook is replaced between the check
     // and the layout read (or while chunksFor serves the planned
-    // version's cached chunks under the grace window) — a layout
+    // version's cached chunks of a since-replaced file) — a layout
     // derived from the replacement can never be paired with
     // planned-version chunk rows. A mismatch fails loudly; the action
     // re-runs against the current file.
     def verifyPlannedVersion(): Unit = {
-      val cur = ExcelScan.versionStamp(new java.io.File(p.path),
-        ExcelScan.stampHasHash(p.stampFileKey))
+      val cur = ExcelScan.versionStamp(new java.io.File(p.path))
       if (cur != ((p.stampLen, p.stampMtime, p.stampFileKey)))
         throw new java.io.FileNotFoundException(
           s"${p.path} changed while a split scan planned against version " +
@@ -701,7 +520,7 @@ final class ExcelReaderFactory extends PartitionReaderFactory {
         // intent that returns empty here has still been version-checked.
         val chunks = ExcelScan.chunksFor(
           p.path, p.sheetName, p.sheetIndex, p.chunkCount,
-          Some((p.stampLen, p.stampMtime, p.stampFileKey)))
+          (p.stampLen, p.stampMtime, p.stampFileKey))
         if (p.chunkIndex >= math.max(chunks.length, 1))
           // surplus intent (fewer real chunks than planned): empty, and
           // no workbook open / layout scan / header parse is paid for it
@@ -716,8 +535,15 @@ final class ExcelReaderFactory extends PartitionReaderFactory {
                 // still read exactly once; sibling intents were empty
                 ExcelRead.rows(opts, lay, outPos, p.requiredPositions.length)
               else
-                ExcelRead.rowsForChunk(opts, lay, outPos,
+                // a chunk set is deleted only when another version of
+                // the file spilled: report a vanished chunk as the
+                // version change it is
+                try ExcelRead.rowsForChunk(opts, lay, outPos,
                   p.requiredPositions.length, chunks(p.chunkIndex))
+                catch {
+                  case e: java.io.FileNotFoundException =>
+                    verifyPlannedVersion(); throw e
+                }
             // post-check: the layout just read must belong to the
             // planned version the chunks came from. The iterator is
             // already constructed (it holds an open workbook handle),

@@ -26,31 +26,13 @@ object ExcelRead {
       sheetName: Option[String],
       sheetIndex: Option[Int],
       skipRows: Int,
-      // >1 splits ONE sheet into N row-aligned chunk partitions spilled
-      // in one planning pass over the inflated part (SURVEY §7.4): xlsx
+      // >1 splits ONE sheet into N row-aligned chunk partitions, spilled
+      // once by the first task over the inflated part (SURVEY §7.4): xlsx
       // needs r= row refs, xlsb always splits (BIFF12 row headers carry
       // absolute row ids)
       sheetPartitions: Int = 1,
       // "unique" (default) or "reference" — see HeaderNames
-      headerDedup: String = "unique",
-      // per-file splitting is skipped past this many files (planning
-      // would inflate+spill every sheet on the driver); None defers to
-      // the graft.excel.maxSplitFiles system property, default 16
-      maxSplitFiles: Option[Int] = None,
-      // opt-in: fold a content CRC (first/last 64 KiB + length) into
-      // the split-scan version stamp, closing the one documented
-      // staleness window — an in-place rewrite with equal length inside
-      // the mtime granularity (same inode, so fileKey matches too).
-      // Off by default, and DELIBERATELY not auto-enabled under a size
-      // threshold (considered, r12 ADVICE): the mode is part of the
-      // cache-key identity, so a threshold would silently flip modes
-      // as a workbook grows past it — churning its spills at exactly
-      // the boundary — and the risk the CRC guards (an editor that
-      // rewrites in place preserving length/mtime/inode) is a property
-      // of the WORKLOAD, not of file size. Callers who face that
-      // editor behavior opt in explicitly; the cost is up to 128 KiB
-      // of I/O per stamp check
-      contentStamp: Boolean = false)
+      headerDedup: String = "unique")
 
   final case class SheetLayout(
       target: String,
@@ -124,8 +106,10 @@ object ExcelRead {
 
     private val wb = WorkbookSource.open(opts.path)
     private val cells =
-      if (chunkPath != null) wb.chunkCells(chunkPath)
-      else wb.cellsForScan(lay.target)
+      try {
+        if (chunkPath != null) wb.chunkCells(chunkPath)
+        else wb.cellsForScan(lay.target)
+      } catch { case t: Throwable => wb.close(); throw t }
     private var pendingRow = -1
     private var pending: Array[AnyRef] = _
     private var nextRow: Array[AnyRef] = _

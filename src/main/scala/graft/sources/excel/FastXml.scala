@@ -65,11 +65,14 @@ final class FastXml(rd: Reader) {
   }
 
   /** Attribute value of the CURRENT start tag, or null. LIFETIME: the
-    * backing buffers are reused by the next start tag, so attr() must
-    * be called before the next `next()` — every call site does (and a
+    * backing buffers are reused by the next start tag, so attr() is
+    * valid only while the current event is that start tag; after any
+    * other event it throws instead of returning a stale value (a
     * returned String is an immutable copy, safe to keep).
     */
   def attr(key: String): String = {
+    if (event != EVENT_START)
+      throw new IllegalStateException(s"attr($key) outside a start tag (event $event)")
     var i = 0
     while (i < attrCount) {
       if (bufIs(attrNames(i), key)) return attrValues(i).toString

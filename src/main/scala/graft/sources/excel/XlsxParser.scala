@@ -394,7 +394,7 @@ object XlsxParser {
       files.map(_.getAbsolutePath).toSeq
     }
 
-    /** Cell stream over one spilled chunk file (see [[spillChunks]]):
+    /** Cell stream over one spilled chunk file (see [[spillRowChunks]]):
       * complete row elements only, parsed in strict row-ref mode (a
       * fragment has no preceding rows to count from).
       */

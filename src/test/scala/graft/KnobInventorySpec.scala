@@ -7,9 +7,11 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every JVM property and environment variable main source reads is a
-  * knob a run can be steered by without a trace in its conf or its
-  * output. The set is pinned here so a new one cannot creep in unseen:
+/** Every JVM property and environment variable main source reads
+  * (`sys.props`, `sys.env`, `System.getProperty`/`getenv`, or the
+  * `Integer.getInteger`/`Long.getLong`/`Boolean.getBoolean` property
+  * getters) is a knob a run can be steered by without a trace in its
+  * conf or its output. The set is pinned here so a new one cannot creep in unseen:
   * adding a read means changing this list, in review. Each read must
   * name its key as a string literal, so the scan can see it.
   */
@@ -21,7 +23,8 @@ class KnobInventorySpec extends AnyFunSuite {
     "SPARK_GRAFT_CPUS", // Bench/Verify/tool core count
     "SPARK_GRAFT_BENCH_ONLY") // Bench subset for iteration
 
-  private val access = """sys\.props|sys\.env|System\.getProperty|System\.getenv"""
+  private val access = """sys\.props|sys\.env|System\.getProperty|System\.getenv|""" +
+    """\bInteger\.getInteger|\bLong\.getLong|\bBoolean\.getBoolean"""
   private val keyed = (s"(?:$access)" +
     """(?:\s*\.\s*(?:get|getOrElse|contains|apply|remove))?\s*\(\s*"([^"]+)"""").r
 

@@ -2,12 +2,11 @@ package graft.sources.excel
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Version-stamp semantics under CRC degradation (ADVICE r12): a
-  * hashed stamp whose content CRC cannot be read must become
-  * UNVERIFIABLE — never-equal to any other stamp — rather than
-  * degrading to an empty hash that compares EQUAL to another failure
-  * and silently disables the in-place-rewrite detection the
-  * `contentStamp` option promises.
+/** Version-stamp semantics under CRC degradation (ADVICE r12): a stamp
+  * whose content CRC cannot be read must become UNVERIFIABLE —
+  * never-equal to any other stamp — rather than degrading to an empty
+  * hash that compares EQUAL to another failure and silently disables
+  * the in-place-rewrite detection the stamp's CRC exists for.
   */
 class ContentStampSpec extends AnyFunSuite {
 
@@ -15,30 +14,27 @@ class ContentStampSpec extends AnyFunSuite {
     val missing = new java.io.File(
       java.nio.file.Files.createTempDirectory("stamp").toFile,
       "never_written.xlsx")
-    val a = ExcelScan.versionStamp(missing, contentHash = true)
-    val b = ExcelScan.versionStamp(missing, contentHash = true)
+    val a = ExcelScan.versionStamp(missing)
+    val b = ExcelScan.versionStamp(missing)
     assert(a != b,
       "a failed CRC must stamp a per-call sentinel: two failures " +
         "comparing equal would silently disable rewrite detection")
-    assert(ExcelScan.stampHasHash(a._3),
-      "the sentinel still reads as a hashed stamp (consumers re-derive " +
-        "with the hash iff the planned stamp carried one)")
-    assert(!ExcelScan.stampHashVerified(a._3) &&
-      !ExcelScan.stampHashVerified(b._3),
-      "an unverifiable stamp must never count as content evidence")
   }
 
-  test("a readable file's hashed stamp is verified, stable, and " +
-      "distinct from its unhashed stamp") {
+  test("a readable file's stamp is stable and changes with its content") {
     val dir = java.nio.file.Files.createTempDirectory("stamp")
     val f = new java.io.File(dir.toFile, "wb.bin")
     java.nio.file.Files.write(f.toPath, Array.fill(1024)(7.toByte))
-    val h1 = ExcelScan.versionStamp(f, contentHash = true)
-    val h2 = ExcelScan.versionStamp(f, contentHash = true)
-    val u = ExcelScan.versionStamp(f, contentHash = false)
-    assert(h1 == h2, "hashing an unchanged file is deterministic")
-    assert(ExcelScan.stampHashVerified(h1._3))
-    assert(!ExcelScan.stampHasHash(u._3))
-    assert(h1._3 != u._3)
+    val mtime = f.lastModified()
+    val s1 = ExcelScan.versionStamp(f)
+    assert(s1 == ExcelScan.versionStamp(f),
+      "stamping an unchanged file is deterministic")
+    // same length, same inode, mtime forced back: only the CRC differs
+    val out = new java.io.FileOutputStream(f)
+    try out.write(Array.fill(1024)(8.toByte)) finally out.close()
+    assert(f.setLastModified(mtime))
+    val s2 = ExcelScan.versionStamp(f)
+    assert((s2._1, s2._2) == (s1._1, s1._2))
+    assert(s2 != s1, "the content CRC must tell the rewrite apart")
   }
 }

@@ -84,12 +84,6 @@ class ConvertRowCountSpec extends AnyFunSuite {
       "the split scan should write several part files")
   }
 
-  test("writePartitions = 4") {
-    val in = xlsx("wide.xlsx", dense(6000))
-    assert(converted(Options(in, out("wide"), writePartitions = 4)) == 6000L)
-    assert(spark.read.parquet(out("wide")).inputFiles.length == 4)
-  }
-
   test("a single-file serial conversion is one Spark job") {
     val in = xlsx("one.xlsx", dense(500))
     val group = "convert-row-count-spec"

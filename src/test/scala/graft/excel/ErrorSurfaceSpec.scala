@@ -57,4 +57,23 @@ class ErrorSurfaceSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("workbook.xml missing"))
   }
+
+  test("an unknown read option fails the read, naming the key and the " +
+      "accepted set") {
+    val path = fixture()
+    // two retired options and a typo of sheetPartitions
+    for ((key, value) <- Seq("contentStamp" -> "true", "maxSplitFiles" -> "2",
+        "sheetPartiton" -> "2")) {
+      val e = intercept[IllegalArgumentException] {
+        spark.read.format("excel").option(key, value).load(path).collect()
+      }
+      assert(e.getMessage.contains(s"'$key'"), e.getMessage)
+      assert(e.getMessage.contains(
+        "path, sheetName, sheetIndex, skipRows, sheetPartitions, headerDedup"),
+        e.getMessage)
+    }
+    // the accepted keys still read, in any case
+    assert(spark.read.format("excel").option("SHEETINDEX", "0")
+      .option("skiprows", "0").load(path).count() == 1)
+  }
 }

@@ -75,10 +75,11 @@ class RowGroupGeometrySpec extends AnyFunSuite {
     XlsxWriter.write(in, fixture(1100))
     val out = dir.resolve("out.parquet").toString
     ExcelToParquet.convert(spark,
-      ExcelToParquet.Options(in, out, batchSize = 250, writePartitions = 2))
-    // the range partitioner's sampled boundary makes the per-file split
-    // approximate (e.g. 560/540) — the geometry contract is per FILE:
-    // every group is full at 250 rows except a final partial one
+      ExcelToParquet.Options(in, out, batchSize = 250, sheetPartitions = 2))
+    // each chunk task of the split scan writes its own part file, and
+    // the byte-range chunk boundary makes the per-file split approximate
+    // (e.g. 560/540) — the geometry contract is per FILE: every group is
+    // full at 250 rows except a final partial one
     val files = perFileGroupSizes(out)
     assert(files.size == 2, files.toString)
     assert(files.flatten.sum == 1100L, files.toString)
@@ -86,5 +87,11 @@ class RowGroupGeometrySpec extends AnyFunSuite {
       assert(groups.init.forall(_ == 250L), files.toString)
       assert(groups.last <= 250L && groups.last > 0L, files.toString)
     }
+    // and lexicographic part-file order is sheet row order (each part
+    // read on its own: a multi-file Spark read orders splits by size)
+    val parts = Files.list(java.nio.file.Paths.get(out)).iterator().asScala
+      .map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted
+    assert(parts.flatMap(p => spark.read.parquet(p).collect().map(_.getString(0))) ==
+      (1 to 1100).map(_.toString))
   }
 }

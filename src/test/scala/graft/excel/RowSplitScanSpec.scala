@@ -191,140 +191,48 @@ class RowSplitScanSpec extends AnyFunSuite {
     XlsxWriter.write(path, Seq(Sheet.dense("data",
       Seq(Option(XShared("id"): XCell)) +:
         (1 to n).map(i => Seq(Option(XNum(i): XCell))))))
-  private def withGraceMs[A](ms: Long)(body: => A): A = {
-    val prev = System.getProperty("graft.excel.evictGraceMs")
-    System.setProperty("graft.excel.evictGraceMs", ms.toString)
-    try body
-    finally if (prev == null) System.clearProperty("graft.excel.evictGraceMs")
-    else System.setProperty("graft.excel.evictGraceMs", prev)
-  }
-
-  test("a replaced workbook's superseded chunk spills are swept once the " +
-      "grace window elapses") {
-    withGraceMs(0) {
-      val dir = Files.createTempDirectory("evict")
-      val path = dir.resolve("wb.xlsx").toString
-      val before = spillDirs()
-      writeWb(path, 3000)
-      assert(spark.read.format("excel").option("sheetPartitions", "3")
-        .load(path).count() == 3000)
-      val v1Dirs = (spillDirs() -- before).filter(nonEmpty)
-      assert(v1Dirs.nonEmpty, "first split scan should have spilled chunks")
-      // replace the workbook (delete + rewrite: new size, mtime, inode)
-      Files.delete(java.nio.file.Paths.get(path))
-      writeWb(path, 4000)
-      new java.io.File(path).setLastModified(System.currentTimeMillis() + 2000)
-      assert(spark.read.format("excel").option("sheetPartitions", "3")
-        .load(path).count() == 4000)
-      assert(v1Dirs.forall(!nonEmpty(_)),
-        "superseded chunk files must be deleted once out of grace, " +
-          "not at JVM exit")
-    }
-  }
-
-  test("inside the grace window superseded chunks stay readable for " +
-      "in-flight scans") {
-    withGraceMs(10 * 60 * 1000L) {
-      val dir = Files.createTempDirectory("evictgrace")
-      val path = dir.resolve("wb.xlsx").toString
-      val before = spillDirs()
-      writeWb(path, 3000)
-      // plan a lazy scan against v1 but do NOT execute it yet — its
-      // tasks will read the v1 chunk paths later, the in-flight shape
-      // the grace window exists for
-      val inFlight = spark.read.format("excel").option("sheetPartitions", "3")
-        .load(path)
-      assert(inFlight.count() == 3000)
-      val v1Dirs = (spillDirs() -- before).filter(nonEmpty)
-      assert(v1Dirs.nonEmpty)
-      Files.delete(java.nio.file.Paths.get(path))
-      writeWb(path, 4000)
-      new java.io.File(path).setLastModified(System.currentTimeMillis() + 2000)
-      // the v2 spill condemns v1 but must not delete it inside grace
-      assert(spark.read.format("excel").option("sheetPartitions", "3")
-        .load(path).count() == 4000)
-      assert(v1Dirs.exists(nonEmpty),
-        "condemned chunk files must survive the grace window")
-    }
-  }
-
-  test("a cache-HIT lookup sweeps expired condemned chunks — a driver " +
-      "that replaces a workbook once and then only re-scans the new " +
-      "version must not keep the superseded spill until JVM exit") {
-    withGraceMs(250) {
-      val dir = Files.createTempDirectory("evicthit")
-      val path = dir.resolve("wb.xlsx").toString
-      val before = spillDirs()
-      writeWb(path, 3000)
-      assert(spark.read.format("excel").option("sheetPartitions", "3")
-        .load(path).count() == 3000)
-      val v1Dirs = (spillDirs() -- before).filter(nonEmpty)
-      assert(v1Dirs.nonEmpty)
-      Files.delete(java.nio.file.Paths.get(path))
-      writeWb(path, 4000)
-      new java.io.File(path).setLastModified(System.currentTimeMillis() + 2000)
-      // condemns v1; still inside the 250 ms grace, so it survives
-      assert(spark.read.format("excel").option("sheetPartitions", "3")
-        .load(path).count() == 4000)
-      assert(v1Dirs.exists(nonEmpty))
-      Thread.sleep(400) // let the grace elapse with NO further miss
-      // this scan is a pure cache hit for v2 — it must still sweep v1
-      assert(spark.read.format("excel").option("sheetPartitions", "3")
-        .load(path).count() == 4000)
-      assert(v1Dirs.forall(!nonEmpty(_)),
-        "expired condemned chunks must be swept on the cache-hit path")
-    }
+  test("a replaced workbook's superseded chunk spills are deleted as " +
+      "soon as the new version spills") {
+    val dir = Files.createTempDirectory("evict")
+    val path = dir.resolve("wb.xlsx").toString
+    val before = spillDirs()
+    writeWb(path, 3000)
+    assert(spark.read.format("excel").option("sheetPartitions", "3")
+      .load(path).count() == 3000)
+    val v1Dirs = (spillDirs() -- before).filter(nonEmpty)
+    assert(v1Dirs.nonEmpty, "first split scan should have spilled chunks")
+    // replace the workbook (delete + rewrite: new size, mtime, inode)
+    Files.delete(java.nio.file.Paths.get(path))
+    writeWb(path, 4000)
+    new java.io.File(path).setLastModified(System.currentTimeMillis() + 2000)
+    assert(spark.read.format("excel").option("sheetPartitions", "3")
+      .load(path).count() == 4000)
+    assert(v1Dirs.forall(!nonEmpty(_)),
+      "superseded chunk files must be deleted by the new version's " +
+        "spill, not at JVM exit")
   }
 
   test("corpora past maxSplitFiles ignore sheetPartitions instead of " +
       "spilling every sheet at plan time") {
     // sheetPartitions stays a PER-FILE knob (few huge workbooks split
-    // into files × sheetPartitions tasks), but past maxSplitFiles the
-    // scan is directory-scale and the planner must NOT inflate+spill
-    // each sheet on the driver — partition count stays one per file
-    val prev = System.getProperty("graft.excel.maxSplitFiles")
-    System.setProperty("graft.excel.maxSplitFiles", "2")
-    try {
-      val dir = Files.createTempDirectory("manyfiles")
-      val header = Seq(Option(XShared("id"): XCell))
-      for (f <- Seq("a", "b", "c"))
-        XlsxWriter.write(dir.resolve(s"$f.xlsx").toString,
-          Seq(Sheet.dense("data", header +:
-            (1 to 100).map(i => Seq(Option(XStr(s"${f}_$i"): XCell))))))
-      val before = spillDirs()
-      val df = spark.read.format("excel").option("sheetPartitions", "3")
-        .load(dir.toString)
-      assert(df.rdd.getNumPartitions == 3,
-        s"expected one task per file, got ${df.rdd.getNumPartitions}")
-      assert(df.count() == 300)
-      assert((spillDirs() -- before).filter(nonEmpty).isEmpty,
-        "the guarded plan must not spill chunk files")
-    } finally {
-      if (prev == null) System.clearProperty("graft.excel.maxSplitFiles")
-      else System.setProperty("graft.excel.maxSplitFiles", prev)
-    }
-  }
-
-  test("maxSplitFiles is a per-read option, overriding the property") {
-    val dir = Files.createTempDirectory("manyfilesopt")
+    // into files × sheetPartitions tasks), but past maxSplitFiles (16)
+    // the scan is directory-scale and no sheet is spilled — partition
+    // count stays one per file
+    val dir = Files.createTempDirectory("manyfiles")
     val header = Seq(Option(XShared("id"): XCell))
-    for (f <- Seq("a", "b", "c"))
+    val names = (1 to 17).map(i => f"f$i%02d")
+    for (f <- names)
       XlsxWriter.write(dir.resolve(s"$f.xlsx").toString,
         Seq(Sheet.dense("data", header +:
-          (1 to 200).map(i => Seq(Option(XStr(s"${f}_$i"): XCell))))))
-    // option below the file count → guard fires, one task per file
-    val guarded = spark.read.format("excel")
-      .option("sheetPartitions", "2").option("maxSplitFiles", "2")
+          (1 to 100).map(i => Seq(Option(XStr(s"${f}_$i"): XCell))))))
+    val before = spillDirs()
+    val df = spark.read.format("excel").option("sheetPartitions", "3")
       .load(dir.toString)
-    assert(guarded.rdd.getNumPartitions == 3)
-    assert(guarded.count() == 600)
-    // option above the file count → per-file splits proceed
-    val split = spark.read.format("excel")
-      .option("sheetPartitions", "2").option("maxSplitFiles", "8")
-      .load(dir.toString)
-    assert(split.rdd.getNumPartitions == 6,
-      s"expected 2 chunks per file, got ${split.rdd.getNumPartitions}")
-    assert(split.count() == 600)
+    assert(df.rdd.getNumPartitions == 17,
+      s"expected one task per file, got ${df.rdd.getNumPartitions}")
+    assert(df.count() == 1700)
+    assert((spillDirs() -- before).filter(nonEmpty).isEmpty,
+      "the guarded plan must not spill chunk files")
   }
 
   test("a workbook replaced between planning and execution fails LOUDLY " +
@@ -398,14 +306,10 @@ class RowSplitScanSpec extends AnyFunSuite {
     val path = dir.resolve("wb.xlsx").toString
     writeWb(path, 5)
     val f = new java.io.File(path)
-    val stamp = {
-      val fk = String.valueOf(java.nio.file.Files.readAttributes(
-        f.toPath, classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey())
-      (f.length(), f.lastModified(), fk)
-    }
+    val stamp = ExcelScan.versionStamp(f)
     // materialize the chunk cache for this version (5 rows can never
     // fill 8 chunks, so surplus ordinals exist)
-    val chunks = ExcelScan.chunksFor(path, None, None, 8, Some(stamp))
+    val chunks = ExcelScan.chunksFor(path, None, None, 8, stamp)
     assert(chunks.length < 8, s"fixture must under-fill: ${chunks.length}")
     // replace the workbook with bytes no parser could open: a surplus
     // intent must not care (its planned-version content is provably
@@ -421,9 +325,9 @@ class RowSplitScanSpec extends AnyFunSuite {
     val surplus = new ExcelReaderFactory().createReader(part(chunks.length))
     try assert(!surplus.next(), "surplus intent must be empty")
     finally surplus.close()
-    // the grace window keeps the v1 chunks cache-served, so the loud
-    // failure here comes from the reader's own version verification —
-    // the layout-side torn-read guard
+    // no other version has spilled, so the v1 chunks are still
+    // cache-served: the loud failure here comes from the reader's own
+    // version verification — the layout-side torn-read guard
     val err = intercept[java.io.FileNotFoundException] {
       new ExcelReaderFactory().createReader(part(0))
     }
@@ -452,13 +356,14 @@ class RowSplitScanSpec extends AnyFunSuite {
     } finally { zin.close(); zout.close() }
   }
 
-  test("contentStamp detects a same-length same-mtime in-place rewrite " +
-      "that the cheap stamp provably cannot") {
-    // the one documented staleness window: an in-place rewrite (same
-    // inode → same fileKey) with EQUAL length inside the mtime
-    // granularity. Constructed exactly: two equal-length workbook byte
-    // images (ZIP comment padding equalizes), second written over the
-    // first in place, mtime forced back.
+  test("the version stamp detects a same-length same-mtime in-place " +
+      "rewrite with no option set") {
+    // the window a (length, mtime, fileKey) stamp cannot see: an
+    // in-place rewrite (same inode → same fileKey) with EQUAL length
+    // inside the mtime granularity. Constructed exactly: two
+    // equal-length workbook byte images (ZIP comment padding
+    // equalizes), second written over the first in place, mtime forced
+    // back. The stamp's content CRC must see it.
     val dir = Files.createTempDirectory("contentstamp")
     def build(tag: String): String = {
       val p = dir.resolve(s"src_$tag.xlsx").toString
@@ -486,80 +391,27 @@ class RowSplitScanSpec extends AnyFunSuite {
     val path = dir.resolve("wb.xlsx")
     Files.write(path, bytesA)
     val mtime = path.toFile.lastModified()
-    def readAll(contentStamp: Boolean): Seq[String] =
+    def readAll(): Seq[String] =
       spark.read.format("excel")
         .option("sheetPartitions", "3")
-        .option("contentStamp", contentStamp.toString)
         .load(path.toString)
         .collect().map(_.getString(0)).toSeq
-    withGraceMs(250) {
-      assert(readAll(contentStamp = false) ==
-        (1 to 3000).map(i => s"aaa_$i"), "baseline read")
-      // in-place rewrite: same inode, same length, mtime forced back
-      val out = new java.io.FileOutputStream(path.toFile)
-      try out.write(bytesB) finally out.close()
-      assert(path.toFile.setLastModified(mtime))
-      // the cheap stamp CANNOT see this rewrite — the cached chunks of
-      // the old content serve (the documented window, pinned here so
-      // the option's value is demonstrated, not asserted)
-      assert(readAll(contentStamp = false) ==
-        (1 to 3000).map(i => s"aaa_$i"),
-        "without contentStamp the equal-stamp rewrite is undetectable " +
-          "by construction — cached chunks serve")
-      // the content hash sees it: fresh spill, new rows
-      assert(readAll(contentStamp = true) ==
-        (1 to 3000).map(i => s"bbb_$i"),
-        "contentStamp must detect the in-place rewrite")
-      // and the hashed key caches normally (second read, same content)
-      assert(readAll(contentStamp = true) ==
-        (1 to 3000).map(i => s"bbb_$i"))
-      // REPAIR semantics: the hashed scan, having observed the new
-      // bytes, condemned the stale unhashed spill — once the grace
-      // elapses, even cheap-stamp reads stop serving the old content
-      // (without this, one in-place rewrite would poison unhashed
-      // reads forever)
-      Thread.sleep(400)
-      assert(readAll(contentStamp = false) ==
-        (1 to 3000).map(i => s"bbb_$i"),
-        "a hashed scan's observation must repair the unhashed cache " +
-          "after the grace window")
-    }
-  }
-
-  test("alternating contentStamp modes on an unchanged workbook pays " +
-      "ONE hashed re-spill, then hits in both modes") {
-    // the r12 churn finding: a hashed scan rightly condemns an
-    // unhashed spill it cannot verify, but the chunks it spills ITSELF
-    // are verified content — published under the unhashed key too, so
-    // the alternation U,H,U,H,... re-spills exactly once (at the first
-    // hashed scan), not O(sheet) per alternation
-    val path = bigSheet(6000)
-    def readAll(contentStamp: Boolean): Long =
-      spark.read.format("excel")
-        .option("sheetPartitions", "3")
-        .option("contentStamp", contentStamp.toString)
-        .load(path).count()
-    withGraceMs(250) {
-      val before = spillDirs()
-      assert(readAll(contentStamp = false) == 6000)
-      val afterU = spillDirs() -- before
-      assert(afterU.nonEmpty, "first unhashed read spills")
-      assert(readAll(contentStamp = true) == 6000)
-      val afterH = spillDirs() -- before
-      assert(afterH.size > afterU.size,
-        "the first hashed read must re-spill (the unhashed spill is " +
-          "unverifiable against the content the hash observed)")
-      // grace elapses: the condemned unhashed spill's files are reaped,
-      // but the re-published verified chunks keep serving both modes
-      Thread.sleep(400)
-      for (_ <- 1 to 3) {
-        assert(readAll(contentStamp = false) == 6000)
-        assert(readAll(contentStamp = true) == 6000)
-      }
-      val finalDirs = (spillDirs() -- before).filter(nonEmpty)
-      assert(finalDirs.subsetOf(afterH),
-        "no alternation after the first hashed scan may spill new chunks")
-    }
+    val before = spillDirs()
+    assert(readAll() == (1 to 3000).map(i => s"aaa_$i"), "baseline read")
+    val v1Dirs = (spillDirs() -- before).filter(nonEmpty)
+    // in-place rewrite: same inode, same length, mtime forced back
+    val out = new java.io.FileOutputStream(path.toFile)
+    try out.write(bytesB) finally out.close()
+    assert(path.toFile.setLastModified(mtime))
+    assert(readAll() == (1 to 3000).map(i => s"bbb_$i"),
+      "the stamp must detect the in-place rewrite: fresh spill, new rows")
+    assert(v1Dirs.forall(!nonEmpty(_)),
+      "the old content's chunks are superseded by the new spill")
+    // and the new version caches normally (second read, same content)
+    val v2Dirs = (spillDirs() -- before).filter(nonEmpty)
+    assert(readAll() == (1 to 3000).map(i => s"bbb_$i"))
+    assert((spillDirs() -- before).filter(nonEmpty) == v2Dirs,
+      "a second read of the unchanged file must reuse its spill")
   }
 
   test("split-scan PLANNING does not inflate or spill sheets — the " +
