@@ -19,7 +19,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale: one input file = one task. A 100 TB conversion is many files;
   * `convertMany` fans out per-file conversions across the cluster while
-  * each file streams through the single-pass DSv2 reader.
+  * each file streams through the single-pass DSv2 reader. Within a task
+  * the reader is a two-stage pipeline (PipelinedRowReader): a producer
+  * thread inflates, scans and pivots rows while the task thread encodes
+  * and writes Parquet, so one big sheet costs about max(read, write)
+  * instead of their sum.
   */
 object ExcelToParquet {
 

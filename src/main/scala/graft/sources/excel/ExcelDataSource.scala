@@ -5,14 +5,13 @@ import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.CustomMetric
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 `format("excel")` — the Spark-native equivalent of the
   * reference's xlsx scan (R1, /root/reference/src/lib.rs:30-65).
@@ -32,7 +31,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale: one InputPartition per workbook file, so a directory or glob
   * of N files is an N-task scan. With `sheetPartitions = n` each file's
-  * sheet is additionally split into n chunk tasks (see ExcelScan).
+  * sheet is additionally split into n chunk tasks (see ExcelScan). Each
+  * task scans on a producer thread while it encodes (PipelinedRowReader).
   */
 class ExcelDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "excel"
@@ -255,6 +255,8 @@ final class ExcelScan(fullSchema: StructType, required: StructType, options: Cas
 
   override def createReaderFactory(): PartitionReaderFactory =
     new ExcelReaderFactory
+
+  override def supportedCustomMetrics(): Array[CustomMetric] = PipelinedRowReader.metrics
 }
 
 object ExcelScan {
@@ -495,23 +497,30 @@ final class ExcelReaderFactory extends PartitionReaderFactory {
             "re-run the query to read the current file")
     }
     // Layout re-derivation on the executor is one header-prefix scan —
-    // cheap, and avoids serializing driver state into the partition.
-    // Deferred behind the chunk resolution for split tasks so SURPLUS
-    // intents (a sheet that yielded fewer chunks than planned) return
-    // empty without opening the workbook at all.
-    def withLayout(
-        build: (ExcelRead.SheetLayout, Array[Int]) => Iterator[Array[AnyRef]] with AutoCloseable)
-        : Iterator[Array[AnyRef]] with AutoCloseable = {
-      val lay = ExcelRead.layout(opts)
-      if (p.expectedNames != null && lay.names != p.expectedNames.toSeq)
-        throw new IllegalArgumentException(
-          s"${p.path}: header ${lay.names.mkString("[", ",", "]")} does not match " +
-            s"the scan schema ${p.expectedNames.mkString("[", ",", "]")} — " +
-            "all files of a multi-file excel scan must share the header row")
-      val outPos = Array.fill(lay.numCols)(-1)
-      p.requiredPositions.zipWithIndex.foreach { case (pos, out) => outPos(pos) = out }
-      build(lay, outPos)
+    // cheap, and avoids serializing driver state into the partition. It
+    // reads from the same open workbook as the rows (the row iterator
+    // takes it over), so the shared-strings table is parsed once per
+    // task. Deferred behind the chunk resolution for split tasks so
+    // SURPLUS intents (a sheet that yielded fewer chunks than planned)
+    // return empty without opening the workbook at all.
+    def openRows(chunkPath: String): ExcelRead.RowIterator = {
+      val wb = WorkbookSource.open(p.path)
+      val (lay, outPos) =
+        try {
+          val lay = ExcelRead.layout(wb, opts)
+          if (p.expectedNames != null && lay.names != p.expectedNames.toSeq)
+            throw new IllegalArgumentException(
+              s"${p.path}: header ${lay.names.mkString("[", ",", "]")} does not match " +
+                s"the scan schema ${p.expectedNames.mkString("[", ",", "]")} — " +
+                "all files of a multi-file excel scan must share the header row")
+          val outPos = Array.fill(lay.numCols)(-1)
+          p.requiredPositions.zipWithIndex.foreach { case (pos, out) => outPos(pos) = out }
+          (lay, outPos)
+        } catch { case t: Throwable => wb.close(); throw t }
+      ExcelRead.rows(wb, lay, outPos, p.requiredPositions.length, chunkPath)
     }
+    // The row stream is opened, and both version checks run, on the task
+    // thread before the pipeline's producer starts.
     val rows: Iterator[Array[AnyRef]] with AutoCloseable =
       if (p.chunkIndex >= 0) {
         // intent partition: resolve (and on first touch, materialize)
@@ -527,55 +536,38 @@ final class ExcelReaderFactory extends PartitionReaderFactory {
           ExcelRead.noRows
         else {
           verifyPlannedVersion()
-          withLayout { (lay, outPos) =>
-            val r =
-              if (chunks.isEmpty)
-                // sheet not spillable into chunks (no data rows):
-                // ordinal 0 degrades to the serial scan so the file is
-                // still read exactly once; sibling intents were empty
-                ExcelRead.rows(opts, lay, outPos, p.requiredPositions.length)
-              else
-                // a chunk set is deleted only when another version of
-                // the file spilled: report a vanished chunk as the
-                // version change it is
-                try ExcelRead.rowsForChunk(opts, lay, outPos,
-                  p.requiredPositions.length, chunks(p.chunkIndex))
-                catch {
-                  case e: java.io.FileNotFoundException =>
-                    verifyPlannedVersion(); throw e
-                }
-            // post-check: the layout just read must belong to the
-            // planned version the chunks came from. The iterator is
-            // already constructed (it holds an open workbook handle),
-            // so a failing check must close it — nothing downstream
-            // ever receives it to close. The close itself may fail on
-            // the same replaced file; that error rides as suppressed,
-            // never masking the version-mismatch signal
-            try verifyPlannedVersion()
-            catch {
-              case t: Throwable =>
-                try r.close()
-                catch { case c: Throwable => t.addSuppressed(c) }
-                throw t
-            }
-            r
+          val r =
+            if (chunks.isEmpty)
+              // sheet not spillable into chunks (no data rows):
+              // ordinal 0 degrades to the serial scan so the file is
+              // still read exactly once; sibling intents were empty
+              openRows(null)
+            else
+              // a chunk set is deleted only when another version of
+              // the file spilled: report a vanished chunk as the
+              // version change it is
+              try openRows(chunks(p.chunkIndex))
+              catch {
+                case e: java.io.FileNotFoundException =>
+                  verifyPlannedVersion(); throw e
+              }
+          // post-check: the layout just read must belong to the
+          // planned version the chunks came from. The iterator is
+          // already constructed (it holds an open workbook handle),
+          // so a failing check must close it — nothing downstream
+          // ever receives it to close. The close itself may fail on
+          // the same replaced file; that error rides as suppressed,
+          // never masking the version-mismatch signal
+          try verifyPlannedVersion()
+          catch {
+            case t: Throwable =>
+              try r.close()
+              catch { case c: Throwable => t.addSuppressed(c) }
+              throw t
           }
+          r
         }
-      } else withLayout { (lay, outPos) =>
-        ExcelRead.rows(opts, lay, outPos, p.requiredPositions.length)
-      }
-
-    new PartitionReader[InternalRow] {
-      private var current: Array[AnyRef] = _
-      override def next(): Boolean = {
-        if (rows.hasNext) { current = rows.next(); true } else false
-      }
-      override def get(): InternalRow =
-        // cells are UTF8String already (encoded at parse time, on the
-        // worker pool for chunked scans) and the pivot array is per-row —
-        // wrap it directly, no copy
-        new GenericInternalRow(current.asInstanceOf[Array[Any]])
-      override def close(): Unit = rows.close()
-    }
+      } else openRows(null)
+    new PipelinedRowReader(rows, p.requiredPositions.length)
   }
 }

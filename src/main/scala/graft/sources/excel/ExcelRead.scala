@@ -45,27 +45,33 @@ object ExcelRead {
   /** Driver-side: resolve sheet, used range, and header names. */
   def layout(opts: Options): SheetLayout = {
     val wb = WorkbookSource.open(opts.path)
+    try layout(wb, opts) finally wb.close()
+  }
+
+  /** The same, over a workbook the caller holds open: a partition reader
+    * reads the layout and then its rows from one open workbook, so the
+    * shared-strings table the header scan parses serves the rows too.
+    */
+  def layout(wb: WorkbookSource, opts: Options): SheetLayout = {
+    val sheet = wb.resolveSheet(opts.sheetName, opts.sheetIndex)
+    val dim = wb.dimensions(sheet.target)
+      .getOrElse(XlsxParser.Dimensions(0, 0, 0, 0)) // empty sheet
+    val headerRowIdx = dim.startRow + opts.skipRows
+    val headerCells = mutable.Map.empty[Int, String]
+    val it = wb.cells(sheet.target)
     try {
-      val sheet = wb.resolveSheet(opts.sheetName, opts.sheetIndex)
-      val dim = wb.dimensions(sheet.target)
-        .getOrElse(XlsxParser.Dimensions(0, 0, 0, 0)) // empty sheet
-      val headerRowIdx = dim.startRow + opts.skipRows
-      val headerCells = mutable.Map.empty[Int, String]
-      val it = wb.cells(sheet.target)
-      try {
-        var done = false
-        while (!done && it.hasNext) {
-          val c = it.next()
-          if (c.row > headerRowIdx) done = true
-          else if (c.row == headerRowIdx) headerCells(c.col) = c.text.toString
-        }
-      } finally it.close()
-      val raw = (0 until dim.numCols).map { i =>
-        headerCells.get(dim.startCol + i).filter(_.nonEmpty)
+      var done = false
+      while (!done && it.hasNext) {
+        val c = it.next()
+        if (c.row > headerRowIdx) done = true
+        else if (c.row == headerRowIdx) headerCells(c.col) = c.text.toString
       }
-      SheetLayout(sheet.target, dim.startRow, dim.startCol, dim.numCols,
-        headerRowIdx, HeaderNames.build(raw, opts.headerDedup))
-    } finally wb.close()
+    } finally it.close()
+    val raw = (0 until dim.numCols).map { i =>
+      headerCells.get(dim.startCol + i).filter(_.nonEmpty)
+    }
+    SheetLayout(sheet.target, dim.startRow, dim.startCol, dim.numCols,
+      headerRowIdx, HeaderNames.build(raw, opts.headerDedup))
   }
 
   /** Empty row stream for surplus split-scan intents (the sheet
@@ -86,25 +92,25 @@ object ExcelRead {
     * without copying.
     */
   def rows(opts: Options, lay: SheetLayout, outPos: Array[Int], outWidth: Int): RowIterator =
-    new RowIterator(opts, lay, outPos, outWidth, null)
+    rows(WorkbookSource.open(opts.path), lay, outPos, outWidth, null)
 
-  /** Chunk variant for the splittable single-sheet scan: reads one
-    * spilled chunk file of complete rows (planned by the workbook's
-    * spillRowChunks — XML row elements for xlsx, BIFF12 records for
-    * xlsb). The workbook is still opened for the shared-strings table;
-    * the sheet part itself is never re-inflated.
+  /** The same over an open workbook, which the iterator takes over and
+    * closes. A non-null `chunkPath` reads one spilled chunk file of
+    * complete rows (planned by the workbook's spillRowChunks — XML row
+    * elements for xlsx, BIFF12 records for xlsb) for the splittable
+    * single-sheet scan; the workbook then serves only the shared-strings
+    * table, and the sheet part itself is never re-inflated.
     */
-  def rowsForChunk(
-      opts: Options, lay: SheetLayout, outPos: Array[Int], outWidth: Int,
+  def rows(
+      wb: WorkbookSource, lay: SheetLayout, outPos: Array[Int], outWidth: Int,
       chunkPath: String): RowIterator =
-    new RowIterator(opts, lay, outPos, outWidth, chunkPath)
+    new RowIterator(wb, lay, outPos, outWidth, chunkPath)
 
   final class RowIterator(
-      opts: Options, lay: SheetLayout, outPos: Array[Int], outWidth: Int,
+      wb: WorkbookSource, lay: SheetLayout, outPos: Array[Int], outWidth: Int,
       chunkPath: String)
       extends Iterator[Array[AnyRef]] with AutoCloseable {
 
-    private val wb = WorkbookSource.open(opts.path)
     private val cells =
       try {
         if (chunkPath != null) wb.chunkCells(chunkPath)
@@ -151,7 +157,15 @@ object ExcelRead {
       }
     }
 
-    advance()
+    // nobody holds the iterator if the first row fails (a bad cell ref,
+    // a strict r= violation in the first parallel chunk): close the cell
+    // stream, with its parser pool, and the workbook here
+    try advance()
+    catch {
+      case t: Throwable =>
+        try close() catch { case c: Throwable => t.addSuppressed(c) }
+        throw t
+    }
 
     override def hasNext: Boolean = nextRow != null
     override def next(): Array[AnyRef] = {

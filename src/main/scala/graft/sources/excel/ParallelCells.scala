@@ -1,7 +1,7 @@
 package graft.sources.excel
 
 import java.io.{CharArrayReader, Reader}
-import java.util.concurrent.{Callable, ExecutorService, Executors, Future => JFuture}
+import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Executors, Future => JFuture, TimeUnit}
 
 /** Pipelined xlsx sheet scan — the Spark-side analogue of the reference's
   * 1-reader + N-encoder worker pipeline (/root/reference/src/lib.rs:240-270):
@@ -160,7 +160,10 @@ final class ParallelCells(
     refillPipeline()
     val f = inFlight.poll()
     if (f != null) {
-      current = f.get()
+      // surface a worker's parse failure as itself, as the serial scan does
+      current =
+        try f.get()
+        catch { case e: ExecutionException if e.getCause != null => throw e.getCause }
       pos = 0
     } else if (tail != null && tail.hasNext) {
       // in-flight chunks are drained; stream the serial remainder in
@@ -184,8 +187,15 @@ final class ParallelCells(
     c
   }
 
+  /** Stops the pool and waits for its workers: an idle worker exits at
+    * once, one mid-chunk after that chunk's parse, so no parser thread
+    * outlives the scan that started it.
+    */
   override def close(): Unit = {
     pool.shutdownNow()
-    rd.close()
+    try rd.close()
+    finally
+      try pool.awaitTermination(1, TimeUnit.MINUTES)
+      catch { case _: InterruptedException => Thread.currentThread().interrupt() }
   }
 }

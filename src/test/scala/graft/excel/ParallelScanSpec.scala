@@ -12,23 +12,7 @@ import graft.sources.excel.XlsxWriter._
   * to engage it, including sparse rows and every cell type.
   */
 class ParallelScanSpec extends AnyFunSuite {
-
-  private lazy val bigFixture: String = {
-    val p = Paths.get(System.getProperty("java.io.tmpdir"), "graft_parallel_scan.xlsx")
-    if (!Files.exists(p)) {
-      val rows = (1 to 80000).map { i =>
-        Seq(
-          Some(XNum(i): XCell),
-          if (i % 7 == 0) None else Some(XStr(s"text value $i")),
-          if (i % 11 == 0) Some(XEmpty) else Some(XNum(i * 0.125)),
-          Some(XShared(s"shared${i % 100}")),
-          if (i % 13 == 0) Some(XErr("#N/A")) else Some(XBool(i % 2 == 0)))
-      }
-      XlsxWriter.write(p.toString, Seq(Sheet.dense("data",
-        Seq("a", "b", "c", "d", "e").map(h => Option(XShared(h): XCell)) +: rows)))
-    }
-    p.toString
-  }
+  import ParallelScanSpec.bigFixture
 
   test("parallel scan emits the identical cell stream") {
     val wb = new XlsxParser.Workbook(bigFixture)
@@ -92,5 +76,28 @@ class ParallelScanSpec extends AnyFunSuite {
       val target = wb.resolveSheet(None, None).target
       assert(!wb.cellsForScan(target).isInstanceOf[graft.sources.excel.ParallelCells])
     } finally wb.close()
+  }
+}
+
+object ParallelScanSpec {
+
+  /** An 80k-row, 5-column sheet, big enough (≥ 4 MiB of sheet XML) to
+    * engage the parallel scanner; written once per temp dir.
+    */
+  lazy val bigFixture: String = {
+    val p = Paths.get(System.getProperty("java.io.tmpdir"), "graft_parallel_scan.xlsx")
+    if (!Files.exists(p)) {
+      val rows = (1 to 80000).map { i =>
+        Seq(
+          Some(XNum(i): XCell),
+          if (i % 7 == 0) None else Some(XStr(s"text value $i")),
+          if (i % 11 == 0) Some(XEmpty) else Some(XNum(i * 0.125)),
+          Some(XShared(s"shared${i % 100}")),
+          if (i % 13 == 0) Some(XErr("#N/A")) else Some(XBool(i % 2 == 0)))
+      }
+      XlsxWriter.write(p.toString, Seq(Sheet.dense("data",
+        Seq("a", "b", "c", "d", "e").map(h => Option(XShared(h): XCell)) +: rows)))
+    }
+    p.toString
   }
 }
