@@ -24,6 +24,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * thread inflates, scans and pivots rows while the task thread encodes
   * and writes Parquet, so one big sheet costs about max(read, write)
   * instead of their sum.
+  *
+  * The write is graft's conversion sink (ConvertSink), a DataSource V2
+  * write that runs Spark's own Parquet writer, so the part files are the
+  * ones `df.write.parquet` would write. Its driver prepares the writer
+  * once per job and ships the prepared Hadoop conf as one broadcast
+  * instead of inside every task's closure; a single-file conversion is
+  * one Spark job, and the footer count after it reuses the conf it
+  * already holds.
   */
 object ExcelToParquet {
 
@@ -66,10 +74,11 @@ object ExcelToParquet {
     if (!multi && !lower.endsWith(".xlsx") && !lower.endsWith(".xlsb"))
       throw new IllegalArgumentException(
         s"Unsupported file extension for input: ${opts.input} (expected .xlsx or .xlsb)")
-    val w = read(spark, opts).write.mode("overwrite").option("compression", "zstd")
+    val w = read(spark, opts).write.format(classOf[ConvertSink].getName)
+      .mode("overwrite").option("compression", "zstd")
     // R8 (see above); the option reaches the task-side Hadoop conf
     if (opts.batchSize > 0) w.option("parquet.block.row.count.limit", opts.batchSize)
-    w.parquet(opts.output)
+    w.save(opts.output)
     committedRows(spark, opts.output)
   }
 
@@ -79,9 +88,13 @@ object ExcelToParquet {
     */
   private def committedRows(spark: SparkSession, output: String): Long = {
     import org.apache.hadoop.fs.Path
+    import org.apache.parquet.HadoopReadOptions
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sessionState.newHadoopConf()
+    // open(InputFile) alone builds a fresh Configuration, re-parsing
+    // Hadoop's default XML resources on every footer
+    val readOpts = HadoopReadOptions.builder(conf).build()
     val dir = new Path(output)
     dir.getFileSystem(conf).listStatus(dir)
       .filter { st =>
@@ -89,7 +102,7 @@ object ExcelToParquet {
         st.isFile && !name.startsWith("_") && !name.startsWith(".")
       }
       .map { st =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf), readOpts)
         try reader.getRecordCount finally reader.close()
       }
       .sum

@@ -101,7 +101,8 @@ object Tables {
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).headOption
       .getOrElse(throw new IllegalStateException(s"no parquet part files under $path"))
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(part, conf))
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(part, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
     val annotation =
       try reader.getFooter.getFileMetaData.getSchema
         .getType(Seq("ts"): _*).asPrimitiveType().getLogicalTypeAnnotation

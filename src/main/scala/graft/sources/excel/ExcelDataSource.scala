@@ -88,7 +88,8 @@ object ExcelDataSource {
     * output row order, is lexicographic by file path (matching
     * part-file reader convention).
     *
-    * Resolution uses the active session's Hadoop configuration, but the
+    * Resolution reads the active SparkContext's Hadoop configuration
+    * (read-only, not a per-call clone of the session's), but the
     * workbooks themselves must be on the local filesystem: the ZIP
     * container needs random access (`java.util.zip.ZipFile`), so any
     * non-`file:` scheme is rejected loudly instead of mis-resolving.
@@ -96,7 +97,7 @@ object ExcelDataSource {
   def resolvePaths(spec: String): Seq[String] = {
     import org.apache.hadoop.fs.Path
     val conf = org.apache.spark.sql.SparkSession.getActiveSession
-      .map(_.sessionState.newHadoopConf())
+      .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new org.apache.hadoop.conf.Configuration())
     val p = new Path(spec)
     val fs = p.getFileSystem(conf)

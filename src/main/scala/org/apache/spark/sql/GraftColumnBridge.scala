@@ -33,4 +33,9 @@ object GraftColumnBridge {
     * an explicit aggregate rather than blocking on `get`.
     */
   def observationGetOrEmpty(o: Observation): Map[String, Any] = o.getOrEmpty
+
+  /** V1 writes' duplicate-column check and error (`SchemaUtils` is
+    * private[spark]). */
+  def checkColumnNameDuplication(names: Seq[String], caseSensitive: Boolean): Unit =
+    util.SchemaUtils.checkColumnNameDuplication(names, caseSensitive)
 }
