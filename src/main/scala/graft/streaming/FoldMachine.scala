@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-
-import graft.operators.ProductQuantizer.HouseM
 
 /** THE canonical serving-path state machine for the streaming index
   * family: gap folding and pointer adoption taken off the trigger
@@ -78,10 +76,8 @@ final class FoldMachine(
     * the probe behind the `ptr_reads_bounded` contract. */
   def recordReads(): Long = SwitchLog.recordReads(switchRoot)
 
-  def frozenModels(dir: String): (DataFrame, DataFrame) =
-    (graft.queries.LlmOps.modelScaleStamp(
-      spark.read.parquet(s"$dir/coarse"), stampMsg),
-      spark.read.parquet(s"$dir/books"))
+  def frozenModels(dir: String): IndexLifecycle.Models =
+    IndexLifecycle.models(spark, dir, stampMsg)
 
   /** The gap-fold worker: re-encodes the sealed range
     * `(sealed_from, sealed_to]` under the requested retrain's frozen
@@ -97,31 +93,15 @@ final class FoldMachine(
     // exists caps to 0, and waiting on log/gen=0 would be the exact
     // 300 s daemon hang the cap exists to prevent
     val gateGen = rec.getAs[Long]("gate_gen")
-    if (gated && gateGen > 0) {
-      // Hadoop FileSystem, not java.io.File (r14 consistency pass):
-      // the gate probes the same durable tree Handoff's done markers
-      // live on, so the cross-cluster shape runs this exact code;
-      // local paths resolve to the local FS and behave identically
-      val gate = new org.apache.hadoop.fs.Path(
-        s"$idx/log/gen=$gateGen/_SUCCESS")
-      val gateFs =
-        gate.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val deadline = System.nanoTime() + 300L * 1000 * 1000 * 1000
-      while (!gateFs.exists(gate)) {
-        if (System.nanoTime() > deadline)
-          throw new IllegalStateException(
-            s"$label fold gate timed out waiting for gen $gateGen")
-        Thread.sleep(100)
-      }
-    }
+    if (gated && gateGen > 0)
+      IndexLifecycle.awaitMarker(spark, s"$idx/log/gen=$gateGen/_SUCCESS",
+        s"$label fold gate", IndexLifecycle.MarkerTimeoutMs)
     val rr = rec.getAs[Long]("retrain_req")
     val rdir = s"$idx/retrain/req=$rr"
-    val (coarseR, booksR) = frozenModels(rdir)
+    val m = frozenModels(rdir)
     (rec.getAs[Long]("sealed_from") + 1 to rec.getAs[Long]("sealed_to"))
       .foreach { gg =>
-        graft.operators.ProductQuantizer.ivfPqEncodeWith(
-            spark.read.parquet(s"$idx/arrived/gen=$gg"),
-            "vec_id", "embedding", HouseM, coarseR, booksR)
+        m.encode(spark.read.parquet(s"$idx/arrived/gen=$gg"))
           .write.mode("overwrite").parquet(s"$rdir/fold/gen=$gg")
       }
     ()
@@ -251,7 +231,30 @@ final class FoldMachine(
     ()
   }
 
+  /** The maintenance belt: join, [[maintain]] at `atGen`, repeat until
+    * the machine reports QUIET (nothing requested, in flight or
+    * adopted). Each round re-arms, seals, adopts or is the terminal
+    * no-op, so a fixed bound suffices — and a machine still busy after
+    * it is a fault, thrown, never a silently unadopted pointer.
+    */
+  def settle(atGen: Long): Unit = {
+    val quiet = (1 to FoldMachine.SettleRounds).exists { _ =>
+      joinAll()
+      val (requested, inflight, adopted) = maintain(atGen)
+      !requested && !inflight && !adopted
+    }
+    joinAll()
+    if (!quiet)
+      throw new IllegalStateException(s"$label not quiet after " +
+        s"${FoldMachine.SettleRounds} maintenance rounds at gen $atGen")
+  }
+
   /** Join both workers — retrain first (the fold depends on its
     * artifacts), then the fold. */
   def joinAll(): Unit = { retrainH.joinAll(); foldH.joinAll() }
+}
+
+object FoldMachine {
+  /** Rounds [[FoldMachine.settle]] allows before declaring a fault. */
+  private val SettleRounds = 8
 }

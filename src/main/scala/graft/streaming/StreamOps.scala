@@ -3,7 +3,11 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.ProductQuantizer
 import graft.operators.ProductQuantizer.HouseM
+import graft.queries.LlmOps
+
+import IndexLifecycle._
 
 /** Structured Streaming over the bounded `events` table: the stream is
   * driven to completion with processAllAvailable() against a memory sink,
@@ -21,14 +25,7 @@ object StreamOps {
   private val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
   // ---- shared helpers for the persisted-index streaming family ------
-
-  /** Recursively delete `f` — the per-run scratch-state wipe (harness
-    * state is local by construction; production SWEEPS go through
-    * [[sweepDir]]). */
-  private def wipeDir(f: java.io.File): Unit = {
-    Option(f.listFiles()).toSeq.flatten.foreach(wipeDir)
-    f.delete(); ()
-  }
+  // (the rest live in IndexLifecycle)
 
   /** Delete a superseded generation/epoch directory through the Hadoop
     * FileSystem API — the SWEEP half of an adoption is production
@@ -38,9 +35,8 @@ object StreamOps {
     * paths, because sweeps are replayed idempotently (an adopting
     * trigger that re-runs re-sweeps directories its first run already
     * removed). Completes the r13 finding that markers/sweeps were
-    * `java.io.File`-only: markers moved in [[Handoff]], sweeps here;
-    * the remaining `java.io` uses are delivery-gate scaffolding and
-    * scratch wipes, documented as harness-only.
+    * `java.io.File`-only: markers and gate waits moved to the Hadoop
+    * API too; the remaining `java.io` uses are harness scratch wipes.
     */
   private[graft] def sweepDir(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -83,38 +79,8 @@ object StreamOps {
       .map(_.toLong).sorted
   }
 
-  /** The canonical (cell_id, vec_id, codes) projection of a stored
-    * code generation. */
-  private def codeCols(df: DataFrame): DataFrame =
-    df.select(col("cell_id"), col("vec_id"), col("codes"))
-
-  /** The manifest-last PUBLISH half every fold and adoption shares:
-    * one 1-row manifest write for epoch `prevEpoch + 1` covering
-    * generations ≤ `gen` (plus caller extras — purge accounting), then
-    * the sweep of the superseded live generations and prior epochs.
-    * Idempotent: the manifest is overwrite-keyed and re-sweeping
-    * already-swept directories is a no-op, so a replayed fold or
-    * adoption republishes coherently. Extracted once (r14 review
-    * finding): the same 7-line tail lived inline in every fold body,
-    * and the round's sweep port had to edit each clone — a protocol
-    * change must have exactly one place to land.
-    */
-  private[graft] def publishEpoch(
-      spark: SparkSession, liveRoot: String, epochRoot: String,
-      manifestRoot: String, prevEpoch: Long, gen: Long,
-      extras: Seq[org.apache.spark.sql.Column] = Nil): Unit = {
-    spark.range(1)
-      .select(lit(prevEpoch + 1).as("epoch") +:
-        lit(gen).as("folded_through") +: extras: _*)
-      .write.mode("overwrite").parquet(s"$manifestRoot/epoch=${prevEpoch + 1}")
-    genDirs(spark, liveRoot, "gen=").filter(_ <= gen)
-      .foreach(g => sweepDir(spark, s"$liveRoot/gen=$g"))
-    genDirs(spark, epochRoot, "epoch=").filter(_ <= prevEpoch)
-      .foreach(p => sweepDir(spark, s"$epochRoot/epoch=$p"))
-  }
-
-  /** The compaction ADOPTION body — [[publishEpoch]] on the code
-    * family's directory names, plus the close-cycle sweep of the
+  /** The compaction ADOPTION body — [[EpochFamily.publish]] on the code
+    * family, plus the close-cycle sweep of the
     * adopted fold REQUEST records (q94 discipline applied to the
     * compaction family: a request at-or-below the new manifest's
     * `folded_through` is subsumed by it, and leaving the records would
@@ -126,34 +92,15 @@ object StreamOps {
     */
   private[graft] def adoptCompactEpoch(
       spark: SparkSession, idx: String, prevEpoch: Long, req: Long): Unit = {
-    publishEpoch(spark, s"$idx/codes", s"$idx/compact", s"$idx/manifest",
-      prevEpoch, req)
+    EpochFamily.codes(spark, idx).publish(prevEpoch, req)
     genDirs(spark, s"$idx/freq", "req=").filter(_ <= req)
       .foreach(r => sweepDir(spark, s"$idx/freq/req=$r"))
   }
 
-  /** One row, one boolean `outCol`: the two code tables are
-    * ROW-IDENTICAL — same ids, same cell assignments, same PQ codes
-    * (full outer join; a null on either side or any field mismatch
-    * counts against). The shared equality contract every fold/handoff
-    * query (q86/q87/q88) proves against its one-shot shape.
-    */
-  private def sameCodeRows(
-      streamed: DataFrame, oneShot: DataFrame, outCol: String): DataFrame =
-    streamed.select(col("vec_id"), col("cell_id").as("c_s"),
-        col("codes").as("k_s"))
-      .join(oneShot.select(col("vec_id"), col("cell_id").as("c_b"),
-        col("codes").as("k_b")), Seq("vec_id"), "full")
-      .agg((count(when(col("c_s").isNull || col("c_b").isNull ||
-        col("c_s") =!= col("c_b") || col("k_s") =!= col("k_b"), 1)) === 0)
-        .as(outCol))
-
-  /** Streaming view of events.parquet (nanos → micros like Tables.load).
-    * The file-stream source requires a DIRECTORY; testdata ships a single
-    * parquet file, so stage a symlink to it in a per-sf temp directory.
-    */
-  /** Stage a single-file table behind a directory (the file-stream
-    * source requires one) and open it as a stream.
+  /** Stage a single-file table behind a directory and open it as a
+    * stream: the file-stream source requires a DIRECTORY and testdata
+    * ships a single parquet file, so a symlink to it is staged in a
+    * per-sf temp directory.
     */
   private def tableStream(
       spark: SparkSession, sfDir: String, table: String): DataFrame = {
@@ -717,66 +664,33 @@ object StreamOps {
     * so micro-batch slicing must not change the index).
     */
   def streamIndexAppend(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.operators.ProductQuantizer
-    import graft.queries.LlmOps
-    val e = graft.Tables.load(spark, sfDir, "embeddings")
-    val query = e.filter(col("vec_id") === 0).select(col("embedding")).limit(1)
-    val base = e.filter(col("vec_id") =!= 0 && pmod(col("vec_id"), lit(10)) =!= 9)
-    val arriving = e.filter(col("vec_id") =!= 0 && pmod(col("vec_id"), lit(10)) === 9)
-    val idx = graft.RunPaths.scratch(
-      "graft_q69_index_" + graft.RunPaths.keyFor(sfDir))
-    // offline build: the shared persist-first frozen layout (every
-    // stored artifact derives from the READ-BACK frozen floats)
-    val (coarseF, booksF) = LlmOps.buildFrozenIndex(spark, sfDir, base, idx,
+    val fx = new Fixture(spark, sfDir)
+    val key = graft.RunPaths.keyFor(sfDir)
+    val idx = graft.RunPaths.scratch("graft_q69_index_" + key)
+    val m = buildFrozen(spark, sfDir, fx.base, idx,
       "q69 frozen coarse-centroid table", withOccupancy = false)
-    // deliver the arrivals across 4 hash-scrambled micro-batches
-    val splitDir = graft.RunPaths.scratch(
-      "graft_q69_arrivals_" + graft.RunPaths.keyFor(sfDir))
-    arriving.repartition(4, xxhash64(col("vec_id")))
+    // deliver the arrivals across 4 hash-scrambled micro-batches; gen 0
+    // is the base build, micro-batch b lands as gen b+1 (overwrite per
+    // generation keeps re-runs idempotent)
+    val splitDir = graft.RunPaths.scratch("graft_q69_arrivals_" + key)
+    fx.arriving.repartition(4, xxhash64(col("vec_id")))
       .write.mode("overwrite").parquet(splitDir)
-    val schema = spark.read.parquet(splitDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(splitDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // gen 0 is the base build; micro-batch id b lands as gen b+1.
-        // overwrite per generation keeps re-runs idempotent.
-        ProductQuantizer.ivfPqEncodeWith(
-            batch, "vec_id", "embedding", HouseM, coarseF, booksF)
-          .write.mode("overwrite").parquet(s"$idx/codes/gen=${id + 1}")
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    drive(spark, splitDir) { (batch, id) =>
+      m.encode(batch).write.mode("overwrite").parquet(s"$idx/codes/gen=${id + 1}")
+    }
     val stored = spark.read.parquet(s"$idx/codes")
-    def serve(codes: DataFrame): DataFrame = ProductQuantizer.ivfPqTopK(
-      query, "embedding", HouseM, coarseF, booksF,
-      codes.select(col("cell_id"), col("vec_id"), col("codes")), "vec_id",
-      nProbe = 4, k = 10)
-    val top = serve(stored)
-    // one-shot comparison: base generation + a single batch-append of
-    // ALL arrivals — the index micro-batch slicing must reproduce
-    val oneShot = serve(
-      spark.read.parquet(s"$idx/codes/gen=0")
-        .select(col("cell_id"), col("vec_id"), col("codes"))
-        .unionByName(ProductQuantizer.ivfPqEncodeWith(
-          arriving, "vec_id", "embedding", HouseM, coarseF, booksF)))
-    val same = top.select(col("vec_id"), col("adc_dist").as("d_s"))
-      .join(oneShot.select(col("vec_id"), col("adc_dist").as("d_b")),
-        Seq("vec_id"), "full")
-      .agg((count(lit(1)) === 10).as("n_ok"),
-        (count(when(col("d_s").isNull || col("d_b").isNull ||
-          col("d_s") =!= col("d_b"), 1)) === 0).as("dist_ok"))
+    val top = m.topK(fx.query, codeCols(stored))
+    val oneShot = m.topK(fx.query,
+      codeCols(spark.read.parquet(s"$idx/codes/gen=0"))
+        .unionByName(m.encode(fx.arriving)))
     stored.agg(count(lit(1)).as("n_index"),
         (count(when(col("gen") >= 1, 1))).as("n_arrived"),
         (countDistinct(when(col("gen") >= 1, col("gen"))) >= 2)
           .as("multi_trigger_ok"))
-      .crossJoin(top.agg(count(lit(1)).as("n_results")))
-      .crossJoin(same)
+      .crossJoin(nResults(top))
+      .crossJoin(sameServed(top, oneShot, "same_as_batch_append"))
       .select(col("n_index"), col("n_arrived"), col("multi_trigger_ok"),
-        col("n_results"),
-        (col("n_ok") && col("dist_ok")).as("same_as_batch_append"))
+        col("n_results"), col("same_as_batch_append"))
   }
 
   /** Streaming DELETES for the persisted ANN index — the missing half
@@ -807,69 +721,40 @@ object StreamOps {
     */
   def streamIndexDeleteSliced(
       spark: SparkSession, sfDir: String, slices: Int): DataFrame = {
-    import graft.operators.ProductQuantizer
-    import graft.queries.LlmOps
-    val e = graft.Tables.load(spark, sfDir, "embeddings")
-    val query = e.filter(col("vec_id") === 0).select(col("embedding")).limit(1)
-    val merged = e.filter(col("vec_id") =!= 0)
-    val idx = graft.RunPaths.scratch(
-      s"graft_q75_index_${graft.RunPaths.keyFor(sfDir)}_$slices")
-    // offline build: the shared persist-first frozen layout (every
-    // stored artifact derives from the READ-BACK frozen floats)
-    val (coarseF, booksF) = LlmOps.buildFrozenIndex(
-      spark, sfDir, merged, idx, "q75 frozen coarse-centroid table", withOccupancy = false)
-    val gens = spark.read.parquet(s"$idx/codes")
-      .select(col("cell_id"), col("vec_id"), col("codes"))
-    def serve(codes: DataFrame): DataFrame = ProductQuantizer.ivfPqTopK(
-      query, "embedding", HouseM, coarseF, booksF,
-      codes.select(col("cell_id"), col("vec_id"), col("codes")), "vec_id",
-      nProbe = 4, k = 10)
+    val fx = new Fixture(spark, sfDir)
+    val key = s"${graft.RunPaths.keyFor(sfDir)}_$slices"
+    val idx = graft.RunPaths.scratch(s"graft_q75_index_$key")
+    val m = buildFrozen(spark, sfDir, fx.corpus, idx,
+      "q75 frozen coarse-centroid table", withOccupancy = false)
+    val gens = codeCols(spark.read.parquet(s"$idx/codes"))
     // delete set: every id ≡ 3 (mod 7) PLUS the raw top-1 (one
     // driver-scale row) — the q70 construction that makes the negative
     // control structural rather than a property of this table
-    val rawTopId = serve(gens)
+    val rawTopId = m.topK(fx.query, gens)
       .select(col("vec_id")).limit(1).collect().head.getLong(0)
-    val deletes = merged.filter(pmod(col("vec_id"), lit(7)) === 3 ||
+    val deletes = fx.corpus.filter(pmod(col("vec_id"), lit(7)) === 3 ||
       col("vec_id") === rawTopId).select(col("vec_id"))
-    // deliver the delete requests across hash-scrambled micro-batches
-    val splitDir = graft.RunPaths.scratch(
-      s"graft_q75_deletes_${graft.RunPaths.keyFor(sfDir)}_$slices")
+    val splitDir = graft.RunPaths.scratch(s"graft_q75_deletes_$key")
     deletes.repartition(slices, xxhash64(col("vec_id")))
       .write.mode("overwrite").parquet(splitDir)
-    val schema = spark.read.parquet(splitDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(splitDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // one tombstone generation per trigger; overwrite per
-        // generation keeps at-least-once retries idempotent
-        batch.write.mode("overwrite").parquet(s"$idx/deletes/gen=$id")
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    drive(spark, splitDir) { (batch, id) =>
+      batch.write.mode("overwrite").parquet(s"$idx/deletes/gen=$id")
+    }
     val deadGens = spark.read.parquet(s"$idx/deletes")
     val dead = deadGens.select(col("vec_id"))
-    val live = serve(gens.join(dead, Seq("vec_id"), "left_anti"))
+    val live = m.topK(fx.query, gens.join(dead, Seq("vec_id"), "left_anti"))
     // one-shot comparison: a single batch anti-join of the same id set,
-    // straight from the corpus — the streamed tombstone path (parquet
-    // roundtrip + generation union) must be invisible to queries
-    val oneShot = serve(gens.join(deletes, Seq("vec_id"), "left_anti"))
-    val same = live.select(col("vec_id"), col("adc_dist").as("d_s"))
-      .join(oneShot.select(col("vec_id"), col("adc_dist").as("d_b")),
-        Seq("vec_id"), "full")
-      .agg(((count(lit(1)) === 10) &&
-        (count(when(col("d_s").isNull || col("d_b").isNull ||
-          col("d_s") =!= col("d_b"), 1)) === 0)).as("same_as_batch_delete"))
-    val rawHasDead = serve(gens).join(dead, Seq("vec_id"), "left_semi")
+    // straight from the corpus
+    val oneShot = m.topK(fx.query, gens.join(deletes, Seq("vec_id"), "left_anti"))
+    val rawHasDead = m.topK(fx.query, gens)
+      .join(dead, Seq("vec_id"), "left_semi")
       .agg((count(lit(1)) >= 1).as("deletes_visible_raw"))
     gens.agg(count(lit(1)).as("n_index"))
       .crossJoin(deadGens.agg(
         (countDistinct(col("gen")) >= 2).as("multi_trigger_ok")))
-      .crossJoin(live.agg(count(lit(1)).as("n_results")))
+      .crossJoin(nResults(live))
       .crossJoin(rawHasDead)
-      .crossJoin(same)
+      .crossJoin(sameServed(live, oneShot, "same_as_batch_delete"))
       .select(col("n_index"), col("multi_trigger_ok"), col("n_results"),
         col("deletes_visible_raw"), col("same_as_batch_delete"))
   }
@@ -910,105 +795,39 @@ object StreamOps {
   def streamIndexCompact(
       spark: SparkSession, sfDir: String,
       k: Int = 3, slices: Int = 8): DataFrame = {
-    import graft.operators.ProductQuantizer
-    import graft.queries.LlmOps
     require(k >= 2, "k < 2 cannot hold an epoch plus one live generation")
-    val e = graft.Tables.load(spark, sfDir, "embeddings")
-    val query = e.filter(col("vec_id") === 0).select(col("embedding")).limit(1)
-    val merged = e.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding"))
-    val base = merged.filter(pmod(col("vec_id"), lit(10)) =!= 9)
-    val arriving = merged.filter(pmod(col("vec_id"), lit(10)) === 9)
+    val fx = new Fixture(spark, sfDir)
     val idx = graft.RunPaths.scratch(
       s"graft_q87_index_${graft.RunPaths.keyFor(sfDir)}_${k}_$slices")
-    Seq("codes", "compact", "manifest", "log")
-      .foreach(d => wipeDir(new java.io.File(s"$idx/$d")))
-    val (coarseF, booksF) = LlmOps.buildFrozenIndex(spark, sfDir, base, idx,
+    wipe(idx, "codes", "compact", "manifest", "log")
+    val m = buildFrozen(spark, sfDir, fx.base, idx,
       "q87 frozen coarse-centroid table", withOccupancy = false)
-
-    // (epoch, folded_through), max-epoch-wins; epoch 0 is the base
-    // build (codes/gen=0), nothing folded
-    def manifest(): (Long, Long) = genDirs(spark, s"$idx/manifest", "epoch=")
-      .maxOption.map(ep =>
-        (ep, spark.read.parquet(s"$idx/manifest/epoch=$ep")
-          .select(col("folded_through")).collect()(0).getLong(0)))
-      .getOrElse((0L, 0L))
-    def epochDir(ep: Long): String =
-      if (ep == 0L) s"$idx/codes/gen=0" else s"$idx/compact/epoch=$ep"
-    // the union serving reads: the current epoch + unfolded generations
-    def servingParts(): Seq[String] = {
-      val (ep, f) = manifest()
-      epochDir(ep) +: genDirs(spark, s"$idx/codes", "gen=").filter(_ > f)
-        .map(g => s"$idx/codes/gen=$g")
-    }
-
-    val splitDir = s"$idx/src/arrivals"
-    // q78 exactness discipline: one file per micro-batch, `slices`
-    // residue classes of the arriving ids (≡ 9 mod 10) — all non-empty
-    // from `slices` rows up
-    for (i <- 0 until slices)
-      arriving.filter(pmod(col("vec_id"), lit(10L * slices)) === 9 + 10 * i)
-        .coalesce(1)
-        .write.mode(if (i == 0) "overwrite" else "append").parquet(splitDir)
-    val schema = spark.read.parquet(splitDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(splitDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+    val codes = EpochFamily.codes(spark, idx)
+    drive(spark, writePhase(s"$idx/src/arrivals", fx.arrivalSlices(slices))) {
+      (batch, id) =>
         val gen = id + 1
-        ProductQuantizer.ivfPqEncodeWith(
-            batch, "vec_id", "embedding", HouseM, coarseF, booksF)
-          .write.mode("overwrite").parquet(s"$idx/codes/gen=$gen")
-        val before = servingParts()
+        m.encode(batch).write.mode("overwrite").parquet(codes.genDir(gen))
+        val before = codes.parts()
         val folded = before.length >= k
-        if (folded) {
-          val (ep, _) = manifest()
-          // fold: epoch + live generations → one cell-clustered epoch
-          // (at scale: partitionBy(cell_id) → probe partition pruning)
-          before.map(p => codeCols(spark.read.parquet(p)))
-            .reduce(_.unionByName(_))
-            .repartition(col("cell_id"))
-            .write.mode("overwrite").parquet(s"$idx/compact/epoch=${ep + 1}")
-          // durable pointer LAST (persist-first), then sweep what the
-          // new manifest no longer references
-          publishEpoch(spark, s"$idx/codes", s"$idx/compact",
-            s"$idx/manifest", ep, gen)
-        }
-        spark.range(1)
-          .select(lit(gen).as("gen"),
-            lit(before.length.toLong).as("serving_before"),
-            lit(folded).as("folded"),
-            lit(servingParts().length.toLong).as("serving_after"))
-          .write.mode("overwrite").parquet(s"$idx/log/gen=$gen")
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-
-    val serving = servingParts()
-      .map(p => codeCols(spark.read.parquet(p)))
-      .reduce(_.unionByName(_))
-    // one-shot comparison: base + ALL arrivals encoded in one batch
-    // under the same frozen models — folding must be invisible
-    val oneShot = codeCols(ProductQuantizer.ivfPqEncodeWith(
-        base.unionByName(spark.read.parquet(splitDir)),
-        "vec_id", "embedding", HouseM, coarseF, booksF))
-    val same = sameCodeRows(serving, oneShot, "fold_invisible")
-    val served = ProductQuantizer.ivfPqTopK(
-      query, "embedding", HouseM, coarseF, booksF, serving, "vec_id",
-      nProbe = 4, k = 10)
-    val onDisk = servingParts().length.toLong
-    val log = spark.read.parquet(s"$idx/log")
-    log.agg(
+        // at scale: partitionBy(cell_id) → probe partition pruning
+        if (folded)
+          codes.fold(gen, codeCols(union(spark, before)).repartition(col("cell_id")))
+        logRow(spark, idx, gen,
+          lit(before.length.toLong).as("serving_before"),
+          lit(folded).as("folded"),
+          lit(codes.parts().length.toLong).as("serving_after"))
+    }
+    val finalParts = codes.parts()
+    val serving = codeCols(union(spark, finalParts))
+    val onDisk = finalParts.length.toLong
+    spark.read.parquet(s"$idx/log").agg(
         count(lit(1)).as("n_triggers"),
         count(when(col("folded"), 1)).as("n_folds"),
         (max(col("serving_before")) <= k && max(col("serving_after")) <= k &&
           lit(onDisk) <= k).as("gens_bounded"))
-      .crossJoin(serving.agg(count(lit(1)).as("n_index"),
-        (count(lit(1)) === countDistinct(col("vec_id"))).as("ids_unique")))
-      .crossJoin(same)
-      .crossJoin(served.agg(count(lit(1)).as("n_results")))
+      .crossJoin(indexStats(serving))
+      .crossJoin(sameCodeRows(serving, m.encode(fx.corpus), "fold_invisible"))
+      .crossJoin(nResults(m.topK(fx.query, serving)))
       .select(col("n_triggers"), col("n_folds"), col("gens_bounded"),
         col("n_index"), col("ids_unique"), col("fold_invisible"),
         col("n_results"))
@@ -1055,138 +874,63 @@ object StreamOps {
     */
   def streamIndexCompactAsync(
       spark: SparkSession, sfDir: String, k: Int = 3): DataFrame = {
-    import graft.operators.ProductQuantizer
-    import graft.queries.LlmOps
     require(k >= 2, "k < 2 cannot hold an epoch plus one live generation")
     val step = math.max(3, k - 1)
     val slices = (k - 1) + 2 * step
-    val e = graft.Tables.load(spark, sfDir, "embeddings")
-    val query = e.filter(col("vec_id") === 0).select(col("embedding")).limit(1)
-    val merged = e.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding"))
-    val base = merged.filter(pmod(col("vec_id"), lit(10)) =!= 9)
-    val arriving = merged.filter(pmod(col("vec_id"), lit(10)) === 9)
+    val fx = new Fixture(spark, sfDir)
     val idx = graft.RunPaths.scratch(
       s"graft_q89_index_${graft.RunPaths.keyFor(sfDir)}_${k}_$slices")
-    Seq("codes", "compact", "manifest", "freq", "log")
-      .foreach(d => wipeDir(new java.io.File(s"$idx/$d")))
-    val (coarseF, booksF) = LlmOps.buildFrozenIndex(spark, sfDir, base, idx,
+    wipe(idx, "codes", "compact", "manifest", "freq", "log")
+    val m = buildFrozen(spark, sfDir, fx.base, idx,
       "q89 frozen coarse-centroid table", withOccupancy = false)
+    val codes = EpochFamily.codes(spark, idx)
 
-    // ---- durable state ------------------------------------------------
-    // manifest/epoch=E: (epoch, folded_through) — adopted folds, max wins
     // freq/req=N: (req_gen, epoch_at_req, folded_from) — a fold request
-    //   naming its sealed inputs; compact/epoch=E+1 + _FOLD_DONE is the
-    //   thread's output; adoption = the manifest write
-    def manifest(): (Long, Long) = genDirs(spark, s"$idx/manifest", "epoch=")
-      .maxOption.map(ep =>
-        (ep, spark.read.parquet(s"$idx/manifest/epoch=$ep")
-          .select(col("folded_through")).collect()(0).getLong(0)))
-      .getOrElse((0L, 0L))
-    def epochDir(ep: Long): String =
-      if (ep == 0L) s"$idx/codes/gen=0" else s"$idx/compact/epoch=$ep"
-    def servingParts(): Seq[String] = {
-      val (ep, f) = manifest()
-      epochDir(ep) +: genDirs(spark, s"$idx/codes", "gen=").filter(_ > f)
-        .map(g => s"$idx/codes/gen=$g")
-    }
-    // the shared async-handoff machine: durable request → detached
-    // pooled worker → done marker after artifacts → one-write adoption
-    // → restart re-arm (see Handoff). The worker's gate is delivery
-    // scaffolding (the q86 overlap discipline): hold the rewrite until
-    // the trigger two generations past the request has fully
-    // completed, so those appends provably land with the fold in
-    // flight.
+    // naming its SEALED inputs (restart recovery re-derives the same
+    // fold from it); compact/epoch=E+1 + _FOLD_DONE is the worker's
+    // output; adoption = the manifest write. The gate is delivery
+    // scaffolding: the trigger two generations past the request must
+    // complete first, so those appends provably land mid-fold.
     val handoff = new Handoff(spark, s"$idx/freq",
       r => s"$idx/freq/req=$r/_FOLD_DONE",
       "graft-q89-fold")({ (reqGen, rec) =>
-      val gateGen = math.min(reqGen + 2, slices.toLong)
-      val gate = new java.io.File(s"$idx/log/gen=$gateGen/_SUCCESS")
-      val deadline = System.nanoTime() + 300L * 1000 * 1000 * 1000
-      while (!gate.exists()) {
-        if (System.nanoTime() > deadline)
-          throw new IllegalStateException(
-            s"q89 fold gate timed out waiting for gen $gateGen")
-        Thread.sleep(100)
-      }
-      // the SEALED input set (read from the durable request record —
-      // restart recovery re-derives the same fold): the epoch at
-      // request time + the generations the request covered — all
-      // immutable, so the rewrite needs no coordination with ongoing
-      // appends
+      awaitMarker(spark,
+        s"$idx/log/gen=${math.min(reqGen + 2, slices.toLong)}/_SUCCESS",
+        "q89 fold gate", MarkerTimeoutMs)
       val epochAtReq = rec.getAs[Long]("epoch_at_req")
-      val foldedFrom = rec.getAs[Long]("folded_from")
-      val inputs = epochDir(epochAtReq) +:
-        genDirs(spark, s"$idx/codes", "gen=")
-          .filter(g => g > foldedFrom && g <= reqGen)
-          .map(g => s"$idx/codes/gen=$g")
-      inputs.map(p => codeCols(spark.read.parquet(p)))
-        .reduce(_.unionByName(_))
+      codeCols(union(spark, codes.epochDir(epochAtReq).toSeq ++
+          codes.gensIn(rec.getAs[Long]("folded_from"), reqGen)))
         .repartition(col("cell_id"))
-        .write.mode("overwrite")
-        .parquet(s"$idx/compact/epoch=${epochAtReq + 1}")
+        .write.mode("overwrite").parquet(codes.epochDir(epochAtReq + 1).get)
       ()
     })
-    // adoption: one manifest write + sweep, idempotent, runnable from a
-    // trigger or the driver-side maintenance pass (body shared with the
-    // q89_adopt_trigger bench — the benched path IS this path)
+    // adoption body shared with the q89_adopt_trigger bench; the ids to
+    // forget are captured BEFORE it sweeps their directories (prune()
+    // could never classify them as done afterwards)
     def adoptIfReady(): Boolean = {
-      val (ep, f) = manifest()
+      val (ep, f) = codes.manifest()
       handoff.adoptNewestReady(r => r <= f) { r =>
-        // ids to forget must be captured BEFORE the adoption body
-        // sweeps their directories (the in-JVM entries would otherwise
-        // leak: the sweep takes the done markers with it, after which
-        // prune() can never classify the requests as done)
         val closed = handoff.requests().filter(_ <= r)
         adoptCompactEpoch(spark, idx, ep, r)
         closed.foreach(handoff.forget)
       }
     }
 
-    val splitDir = s"$idx/src/arrivals"
-    for (i <- 0 until slices)
-      arriving.filter(pmod(col("vec_id"), lit(10L * slices)) === 9 + 10 * i)
-        .coalesce(1)
-        .write.mode(if (i == 0) "overwrite" else "append").parquet(splitDir)
-    // three phases (k+1, step, step-2 files — see the scaladoc
-    // derivation) with a driver join between each: every ADOPTING
-    // trigger (the first of a phase) runs strictly after the fold it
-    // adopts has landed, so the adoption schedule is deterministic
-    // rather than a race against fold duration
-    val phaseSizes = Seq(k + 1, step, step - 2)
-    val phaseDirs = phaseSizes.indices.map(i => s"$idx/src/phase_$i")
-    val files = Option(new java.io.File(splitDir).listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val phaseOffsets = phaseSizes.scanLeft(0)(_ + _)
-    phaseDirs.zipWithIndex.foreach { case (d, pi) =>
-      wipeDir(new java.io.File(d))
-      new java.io.File(d).mkdirs()
-      files.slice(phaseOffsets(pi), phaseOffsets(pi + 1)).foreach { f =>
-        java.nio.file.Files.copy(f.toPath,
-          java.nio.file.Paths.get(d, f.getName))
-      }
-    }
-
-    def drive(srcDir: String, genOffset: Int): Unit = {
-      val schema = spark.read.parquet(splitDir).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
+    // three phases (k+1, step, step-2 files) with a driver join between
+    // each: every ADOPTING trigger runs strictly after its fold landed
+    val all = fx.arrivalSlices(slices)
+    val offsets = Seq(k + 1, step, step - 2).scanLeft(0)(_ + _)
+    offsets.sliding(2).zipWithIndex.foreach { case (Seq(from, to), pi) =>
+      drive(spark, writePhase(s"$idx/src/phase_$pi", all.slice(from, to))) {
+        (batch, id) =>
           val t0 = System.nanoTime()
-          val gen = genOffset + id + 1
-          ProductQuantizer.ivfPqEncodeWith(
-              batch, "vec_id", "embedding", HouseM, coarseF, booksF)
-            .write.mode("overwrite").parquet(s"$idx/codes/gen=$gen")
+          val gen = from + id + 1
+          m.encode(batch).write.mode("overwrite").parquet(codes.genDir(gen))
           val adopted = adoptIfReady()
-          val parts = servingParts()
-          val (ep, f) = manifest()
-          // restart recovery (the q86 discipline): a pending fold whose
-          // worker died with a previous driver re-arms from its durable
-          // request record — a no-op on every healthy trigger (the
-          // Handoff's launched set), a re-launch exactly when durable
-          // state says an unadopted request has no done marker
+          val (ep, f) = codes.manifest()
+          val parts = codes.parts((ep, f))
+          // restart recovery: re-arm a pending fold whose worker died
+          // with a previous driver (a no-op on every healthy trigger)
           handoff.rearm(handoff.requests().filter(_ > f))
           val pending = handoff.requests().exists(r => r > f)
           val requested = parts.length >= k && !pending
@@ -1194,326 +938,226 @@ object StreamOps {
             handoff.submit(gen, spark.range(1)
               .select(lit(gen).as("req_gen"), lit(ep).as("epoch_at_req"),
                 lit(f).as("folded_from")))
-          // per-trigger wall time in the log row (written LAST, so the
-          // measured span covers everything the trigger synchronously
-          // paid — including an adoption's manifest write + sweep):
-          // BENCH tracks the adopting trigger's cost from this
-          spark.range(1)
-            .select(lit(gen).as("gen"),
-              lit(parts.length.toLong).as("parts"),
-              lit(adopted).as("adopted"),
-              lit(requested).as("requested"),
-              lit(pending && !requested).as("fold_inflight"),
-              lit((System.nanoTime() - t0) / 1000000L).as("ms"))
-            .write.mode("overwrite").parquet(s"$idx/log/gen=$gen")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-
-    phaseDirs.zipWithIndex.foreach { case (d, pi) =>
-      drive(d, phaseOffsets(pi))
-      // the join makes each phase's pending fold land before the NEXT
-      // phase's first (adopting) trigger — sequencing scaffolding only;
-      // the stream itself never waited (the inflight flags prove it)
+          // written LAST: `ms` covers everything the trigger paid,
+          // an adoption's manifest write + sweep included
+          logRow(spark, idx, gen,
+            lit(parts.length.toLong).as("parts"),
+            lit(adopted).as("adopted"),
+            lit(requested).as("requested"),
+            lit(pending && !requested).as("fold_inflight"),
+            lit((System.nanoTime() - t0) / 1000000L).as("ms"))
+      }
       handoff.joinAll()
     }
     // maintenance: adopt whatever completed after the last trigger
     adoptIfReady()
 
-    val serving = servingParts()
-      .map(p => codeCols(spark.read.parquet(p)))
-      .reduce(_.unionByName(_))
-    val oneShot = codeCols(ProductQuantizer.ivfPqEncodeWith(
-        base.unionByName(spark.read.parquet(splitDir)),
-        "vec_id", "embedding", HouseM, coarseF, booksF))
-    val same = sameCodeRows(serving, oneShot, "fold_invisible")
-    val served = ProductQuantizer.ivfPqTopK(
-      query, "embedding", HouseM, coarseF, booksF, serving, "vec_id",
-      nProbe = 4, k = 10)
-    val finalParts = servingParts().length.toLong
-    val log = spark.read.parquet(s"$idx/log")
-    log.agg(
+    val finalParts = codes.parts()
+    val serving = codeCols(union(spark, finalParts))
+    spark.read.parquet(s"$idx/log").agg(
         count(lit(1)).as("n_triggers"),
         count(when(col("requested"), 1)).as("n_requests"),
         count(when(col("adopted"), 1)).as("n_adopted_in_stream"),
         count(when(col("fold_inflight"), 1)).as("n_gens_during_fold"),
-        (lit(finalParts) === 1).as("final_single_epoch"))
-      .crossJoin(serving.agg(count(lit(1)).as("n_index"),
-        (count(lit(1)) === countDistinct(col("vec_id"))).as("ids_unique")))
-      .crossJoin(same)
-      .crossJoin(served.agg(count(lit(1)).as("n_results")))
+        lit(finalParts.length == 1).as("final_single_epoch"))
+      .crossJoin(indexStats(serving))
+      .crossJoin(sameCodeRows(serving, m.encode(fx.corpus), "fold_invisible"))
+      .crossJoin(nResults(m.topK(fx.query, serving)))
       .select(col("n_triggers"), col("n_requests"),
         col("n_adopted_in_stream"), col("n_gens_during_fold"),
         col("final_single_epoch"), col("n_index"), col("ids_unique"),
         col("fold_invisible"), col("n_results"))
   }
 
-  /** The FULL streamed index lifecycle with BOTH creep families
-    * bounded — q69 (streamed appends), q75 (streamed tombstones), and
-    * q87 (in-loop compaction) composed: micro-batches carry adds AND
-    * deletes; every trigger lands a code generation or a tombstone
-    * generation, and whenever either family reaches `k` directories the
-    * trigger folds it. The two folds differ deliberately:
-    *   - CODE fold (q87's): epoch + live generations, PRE-APPLYING the
-    *     full tombstone set (folded rows a query can never see are not
-    *     carried), cell-clustered, manifest-last, superseded dirs swept;
-    *   - TOMBSTONE fold: the union of the tombstone epoch + live
-    *     tombstone dirs into one id-set epoch. A set union is
-    *     order-independent and idempotent, so this fold is trivially
-    *     replay-safe — and the tombstone epoch is NEVER absorbed into
-    *     the code fold, because a tombstone outlives the rows it
-    *     deleted: a LATE RE-ARRIVAL of a deleted id (at-least-once
-    *     delivery, backfills) must stay dead, which only works if the
-    *     id set survives every code compaction. q75 grew one tombstone
-    *     dir per delete trigger forever; this caps both families at
-    *     `k` directories.
-    *
-    * Delivery (phased drives, the q78 exactness discipline): 3 add
-    * batches, then 3 delete batches (every base id ≡ 3 mod 7 — a pure
-    * residue class, so counts stay closed-form; q70's raw-top-1
-    * injection is structurally unavailable here, see the inline note),
-    * then one more add batch, then — order pinned by its own drive —
-    * a batch RE-DELIVERING half the deleted ids.
-    * Contracts (one row, deterministic): 8 triggers; exactly 2 code
-    * folds + 1 tombstone fold; both directory families ≤ k at every
-    * trigger; serving row-identical to the one-shot batch shape
-    * (encode(base ∪ arrivals ∪ redeliveries) anti-joined by the full
-    * delete set — the redelivered deleted ids stay dead THROUGH the
-    * folds); conservation n_live = n_encoded − n_dead; raw serving
-    * (tombstones ignored) provably surfaces a deleted id; k=10 probe.
+  /** One streamed add/delete delivery for [[purgeLifecycle]]: `phases`
+    * of ("add" | "del", one file per trigger), then one add trigger
+    * re-delivering `staysDead` (ids still tombstoned at that point) and
+    * `resurfaces` (ids whose tombstones were purged).
     */
-  def streamIndexLifecycle(
-      spark: SparkSession, sfDir: String, k: Int = 3): DataFrame = {
-    import graft.operators.ProductQuantizer
-    import graft.queries.LlmOps
-    val e = graft.Tables.load(spark, sfDir, "embeddings")
-    val query = e.filter(col("vec_id") === 0).select(col("embedding")).limit(1)
-    val merged = e.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding"))
-    val base = merged.filter(pmod(col("vec_id"), lit(10)) =!= 9)
-    val arriving = merged.filter(pmod(col("vec_id"), lit(10)) === 9)
+  private final case class PurgeDelivery(phases: Seq[(String, Seq[DataFrame])],
+      staysDead: DataFrame, resurfaces: Option[DataFrame])
+
+  /** The streamed lifecycle shared by q88, q91 and q92: micro-batches
+    * carry adds AND deletes; every trigger lands a code generation or a
+    * tombstone generation `(vec_id, del_gen)`, and whenever either
+    * family reaches `k` directories the trigger folds it:
+    *   - CODE fold: epoch + live generations, PRE-APPLYING the full
+    *     tombstone set (folded rows a query can never see are not
+    *     carried), cell-clustered, manifest-last, superseded dirs swept;
+    *   - TOMBSTONE fold: newest `del_gen` wins per id (a re-deleted id's
+    *     horizon clock restarts), then the PURGE anti-join. The
+    *     tombstone epoch is never absorbed into the code fold, because
+    *     a tombstone outlives the rows it deleted: a late re-arrival of
+    *     a deleted id (at-least-once delivery, backfills) must stay
+    *     dead, which only works if the id set survives compaction.
+    *
+    * The purge policy is `horizonAt(foldGen)`: an id leaves the epoch
+    * iff (a) its newest delete landed at or before the horizon (the
+    * pipeline's delivery watermark — a generation here, a timestamp in
+    * production) AND (b) no serving code part still physically carries
+    * its rows (anti-join against the serving parts' ids, paid only
+    * inside the already-O(epoch) fold). A tombstone whose rows a code
+    * fold has not yet removed is load-bearing regardless of age. `None`
+    * purges nothing.
+    *
+    * Returns the superset contract row (each query selects its own
+    * columns) and the index directory.
+    */
+  private def purgeLifecycle(spark: SparkSession, sfDir: String,
+      tag: String, k: Int, horizonAt: Long => Option[Long])(
+      delivery: Fixture => PurgeDelivery): (DataFrame, String) = {
+    val fx = new Fixture(spark, sfDir)
     val idx = graft.RunPaths.scratch(
-      s"graft_q88_index_${graft.RunPaths.keyFor(sfDir)}_$k")
-    Seq("codes", "compact", "manifest", "tombs", "tepoch", "tmanifest", "log")
-      .foreach(d => wipeDir(new java.io.File(s"$idx/$d")))
-    val (coarseF, booksF) = LlmOps.buildFrozenIndex(spark, sfDir, base, idx,
-      "q88 frozen coarse-centroid table", withOccupancy = false)
+      s"graft_${tag}_index_${graft.RunPaths.keyFor(sfDir)}_$k")
+    wipe(idx, "codes", "compact", "manifest", "tombs", "tepoch", "tmanifest", "log")
+    val m = buildFrozen(spark, sfDir, fx.base, idx,
+      s"$tag frozen coarse-centroid table", withOccupancy = false)
+    val codes = EpochFamily.codes(spark, idx)
+    val tombs = EpochFamily.tombs(spark, idx)
+    def tombIds(parts: Seq[String]): Option[DataFrame] =
+      if (parts.isEmpty) None
+      else Some(union(spark, parts).select(col("vec_id")).distinct())
 
-    def maxManifest(dir: String): Long =
-      genDirs(spark, dir, "epoch=").maxOption.getOrElse(0L)
-    def foldedThrough(): Long = {
-      val ep = maxManifest(s"$idx/manifest")
-      if (ep == 0L) 0L
-      else spark.read.parquet(s"$idx/manifest/epoch=$ep")
-        .select(col("folded_through")).collect()(0).getLong(0)
-    }
-    def codeParts(): Seq[String] = {
-      val ep = maxManifest(s"$idx/manifest")
-      val epochDir =
-        if (ep == 0L) s"$idx/codes/gen=0" else s"$idx/compact/epoch=$ep"
-      epochDir +: genDirs(spark, s"$idx/codes", "gen=").filter(_ > foldedThrough())
-        .map(g => s"$idx/codes/gen=$g")
-    }
-    def tombParts(): Seq[String] = {
-      val tp = maxManifest(s"$idx/tmanifest")
-      val tFolded =
-        if (tp == 0L) 0L
-        else spark.read.parquet(s"$idx/tmanifest/epoch=$tp")
-          .select(col("folded_through")).collect()(0).getLong(0)
-      (if (tp == 0L) Seq.empty else Seq(s"$idx/tepoch/epoch=$tp")) ++
-        genDirs(spark, s"$idx/tombs", "gen=").filter(_ > tFolded)
-          .map(g => s"$idx/tombs/gen=$g")
-    }
-    def tombIds(): Option[DataFrame] = {
-      val ps = tombParts()
-      if (ps.isEmpty) None
-      else Some(ps.map(p => spark.read.parquet(p).select(col("vec_id")))
-        .reduce(_.unionByName(_)).distinct())
-    }
-
-    def serve(codes: DataFrame): DataFrame = ProductQuantizer.ivfPqTopK(
-      query, "embedding", HouseM, coarseF, booksF, codes, "vec_id",
-      nProbe = 4, k = 10)
-    // q70/q75 injected the raw top-1 id into the delete set so RAW
-    // serving provably surfaced a deleted id — that control is
-    // structurally unavailable here: the tombstone-applying code fold
-    // REMOVES dead rows from storage, which is its point. The
-    // detection-power control is raw_carries_redelivered below (the
-    // not-yet-folded generation must still physically hold the dead
-    // re-delivered rows) + the one-shot row equality (a serving path
-    // that forgot the anti-join would include those rows and fail).
-    // Keeping the delete set a pure residue class also makes every
-    // count closed-form for the oracle.
-    val deletes = base.filter(pmod(col("vec_id"), lit(7)) === 3)
-      .select(col("vec_id"))
-
-    def drive(srcDir: String, genOffset: Int, op: String): Unit = {
-      val schema = spark.read.parquet(srcDir).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val gen = genOffset + id + 1
-          if (op == "add")
-            ProductQuantizer.ivfPqEncodeWith(
-                batch, "vec_id", "embedding", HouseM, coarseF, booksF)
-              .write.mode("overwrite").parquet(s"$idx/codes/gen=$gen")
-          else
-            batch.select(col("vec_id"))
-              .write.mode("overwrite").parquet(s"$idx/tombs/gen=$gen")
-          val (cBefore, tBefore) = (codeParts(), tombParts())
-          val foldCodes = cBefore.length >= k
-          if (foldCodes) {
-            val ep = maxManifest(s"$idx/manifest")
-            val live = cBefore.map(p => codeCols(spark.read.parquet(p)))
-              .reduce(_.unionByName(_))
-            // pre-apply the CURRENT tombstone set to the folded rows —
-            // the tombstones themselves are NOT consumed (see scaladoc)
-            tombIds().map(live.join(_, Seq("vec_id"), "left_anti"))
-              .getOrElse(live)
-              .repartition(col("cell_id"))
-              .write.mode("overwrite").parquet(s"$idx/compact/epoch=${ep + 1}")
-            publishEpoch(spark, s"$idx/codes", s"$idx/compact",
-              s"$idx/manifest", ep, gen)
-          }
-          val foldTombs = tBefore.length >= k
-          if (foldTombs) {
-            val tp = maxManifest(s"$idx/tmanifest")
-            tBefore.map(p => spark.read.parquet(p).select(col("vec_id")))
-              .reduce(_.unionByName(_)).distinct()
-              .coalesce(1)
-              .write.mode("overwrite").parquet(s"$idx/tepoch/epoch=${tp + 1}")
-            publishEpoch(spark, s"$idx/tombs", s"$idx/tepoch",
-              s"$idx/tmanifest", tp, gen)
-          }
-          spark.range(1)
-            .select(lit(gen).as("gen"), lit(op).as("op"),
-              lit(cBefore.length.toLong).as("codes_before"),
-              lit(tBefore.length.toLong).as("tombs_before"),
-              lit(foldCodes).as("folded_codes"),
-              lit(foldTombs).as("folded_tombs"))
-            .write.mode("overwrite").parquet(s"$idx/log/gen=$gen")
-          ()
+    val d = delivery(fx)
+    val redelivered = d.resurfaces.fold(d.staysDead)(_.unionByName(d.staysDead))
+    val phases = d.phases :+ ("add" -> Seq(redelivered))
+    val offsets = phases.scanLeft(0)(_ + _._2.length)
+    // one drive per phase, so the generation order is pinned rather
+    // than left to the file source's mtime sort
+    phases.zip(offsets).zipWithIndex.foreach { case (((op, batches), off), pi) =>
+      drive(spark, writePhase(s"$idx/src/phase_$pi", batches)) { (batch, id) =>
+        val gen = off + id + 1
+        if (op == "add")
+          m.encode(batch).write.mode("overwrite").parquet(codes.genDir(gen))
+        else
+          batch.select(col("vec_id"), lit(gen).as("del_gen"))
+            .write.mode("overwrite").parquet(tombs.genDir(gen))
+        val (cBefore, tBefore) = (codes.parts(), tombs.parts())
+        val foldCodes = cBefore.length >= k
+        if (foldCodes) {
+          val live = codeCols(union(spark, cBefore))
+          codes.fold(gen, tombIds(tBefore)
+            .fold(live)(live.join(_, Seq("vec_id"), "left_anti"))
+            .repartition(col("cell_id")))
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+        val foldTombs = tBefore.length >= k
+        val nPurged = if (!foldTombs) 0L else {
+          val newest = union(spark, tBefore)
+            .groupBy(col("vec_id")).agg(max(col("del_gen")).as("del_gen"))
+          val horizon = horizonAt(gen)
+          val purged = horizon.map(h => newest.filter(col("del_gen") <= h)
+            .join(union(spark, codes.parts()).select(col("vec_id")),
+              Seq("vec_id"), "left_anti"))
+          val n = purged.fold(0L)(_.count())
+          tombs.fold(gen,
+            purged.fold(newest)(p => newest.join(p.select(col("vec_id")),
+              Seq("vec_id"), "left_anti")).coalesce(1),
+            lit(n).as("n_purged") +: horizon.map(h => lit(h).as("horizon")).toSeq)
+          n
+        }
+        logRow(spark, idx, gen, lit(op).as("op"),
+          lit(cBefore.length.toLong).as("codes_before"),
+          lit(tBefore.length.toLong).as("tombs_before"),
+          lit(foldCodes).as("folded_codes"),
+          lit(foldTombs).as("folded_tombs"),
+          lit(nPurged).as("n_purged"))
+      }
     }
 
-    // phase 1: three add batches (arriving ids ≡ 9 mod 10, residues
-    // mod 40 ∈ {9,19,29} — each non-empty from 4 arrivals up)
-    val addDir1 = s"$idx/src/adds1"
-    for ((r, i) <- Seq(9, 19, 29).zipWithIndex)
-      arriving.filter(pmod(col("vec_id"), lit(40)) === r)
-        .coalesce(1)
-        .write.mode(if (i == 0) "overwrite" else "append").parquet(addDir1)
-    drive(addDir1, 0, "add")
-    // phase 2: three delete batches (deleted base ids split by mod 21
-    // residues {3,10,17} of the ≡3-mod-7 class)
-    val delDir = s"$idx/src/dels"
-    for ((r, i) <- Seq(3, 10, 17).zipWithIndex)
-      deletes.filter(pmod(col("vec_id"), lit(21)) === r)
-        .coalesce(1)
-        .write.mode(if (i == 0) "overwrite" else "append").parquet(delDir)
-    drive(delDir, 3, "del")
-    // phase 3: the last arrival slice (gen 7), then — as its OWN drive,
-    // so the generation order is pinned rather than left to the file
-    // source's mtime sort — a RE-DELIVERY of half the deleted ids
-    // (same vec_id, same embedding — the at-least-once / backfill
-    // shape) as gen 8: it must land AFTER the t7 code fold so the k=3
-    // contract (dead rows physically present in the unfolded
-    // generation) is deterministic
-    val addDir2 = s"$idx/src/adds2"
-    arriving.filter(pmod(col("vec_id"), lit(40)) === 39)
-      .coalesce(1).write.mode("overwrite").parquet(addDir2)
-    drive(addDir2, 6, "add")
-    val addDir3 = s"$idx/src/redeliver"
-    base.filter(pmod(col("vec_id"), lit(14)) === 3)
-      .coalesce(1).write.mode("overwrite").parquet(addDir3)
-    drive(addDir3, 7, "add")
-
-    // ---- final state ------------------------------------------------
-    val codes = codeParts().map(p => codeCols(spark.read.parquet(p)))
-      .reduce(_.unionByName(_))
-    val dead = tombIds().get
-    val living = codes.join(dead, Seq("vec_id"), "left_anti")
-    // one-shot shape: everything ever delivered, encoded in one batch,
-    // anti-joined by the full delete set
-    val redelivered = base.filter(pmod(col("vec_id"), lit(14)) === 3)
-    val oneShot = codeCols(ProductQuantizer.ivfPqEncodeWith(
-        base.unionByName(arriving).unionByName(redelivered),
-        "vec_id", "embedding", HouseM, coarseF, booksF))
-      .join(deletes, Seq("vec_id"), "left_anti")
-      .distinct() // redelivered survivors would be exact duplicates;
-                  // none survive (redelivery ⊆ deletes), belt only
-    val same = sameCodeRows(living, oneShot, "lifecycle_invisible")
-    // physical-presence control: the stored codes must still CARRY the
-    // dead re-delivered rows (they arrived after the last code fold, so
-    // only a bug — e.g. tombstones applied to unfolded generations, or
-    // the redelivery generation folded early — could remove them; the
-    // anti-join is what hides them from queries, and forgetting IT
-    // fails the one-shot equality instead)
-    val rawCarries = codes.join(redelivered.select(col("vec_id")),
-        Seq("vec_id"), "left_semi")
-      .agg(count(lit(1)).as("n_raw_redeliv"))
+    val (codeParts, tombParts) = (codes.parts(), tombs.parts())
+    val stored = codeCols(union(spark, codeParts))
+    val dead = tombIds(tombParts).get
+    val living = stored.join(dead, Seq("vec_id"), "left_anti")
+    // expected live set, closed form: everything delivered minus the
+    // full delete set, plus the re-delivered PURGED ids
+    val deletes = residue(fx.base, 7, 3).select(col("vec_id"))
+    val expected = d.resurfaces.map(m.encode).foldLeft(
+      m.encode(fx.corpus).join(deletes, Seq("vec_id"), "left_anti"))(
+      _.unionByName(_))
+    val resurfaces = d.resurfaces.getOrElse(d.staysDead.limit(0))
+    def nLiving(ids: DataFrame, as: String) = living
+      .join(ids.select(col("vec_id")), Seq("vec_id"), "left_semi")
+      .agg(count(lit(1)).as(as))
+    // physical control: the redelivery generation is unfolded, so the
+    // stored codes must still CARRY every re-delivered id — only the
+    // anti-join hides the dead ones (countDistinct: a dead id's base
+    // copy may legitimately still be stored too)
+    val rawCarries = stored
+      .join(redelivered.select(col("vec_id")), Seq("vec_id"), "left_semi")
+      .agg(countDistinct(col("vec_id")).as("n_raw"))
       .crossJoin(redelivered.agg(count(lit(1)).as("n_redeliv")))
-      .select((col("n_raw_redeliv") === col("n_redeliv"))
-        .as("raw_carries_redelivered"))
-    val served = serve(living)
-    val onDiskOk =
-      codeParts().length <= k && tombParts().length <= k
-    // accounting note: the q70-style "n_live = n_encoded − n_dead"
-    // conservation law does not hold here BY DESIGN — the t7 code fold
-    // pre-applies the tombstone set, so dead base rows are no longer in
-    // the stored codes to subtract. n_live is closed-form instead
-    // (deletes are a pure residue class), and the row-level accounting
-    // lives in lifecycle_invisible.
-    val log = spark.read.parquet(s"$idx/log")
-    log.agg(
+      .select((col("n_raw") === col("n_redeliv")).as("raw_carries_redelivered"))
+    val onDiskOk = codeParts.length <= k && tombParts.length <= k
+    val row = spark.read.parquet(s"$idx/log").agg(
         count(lit(1)).as("n_triggers"),
         count(when(col("folded_codes"), 1)).as("code_folds"),
         count(when(col("folded_tombs"), 1)).as("tomb_folds"),
         (max(col("codes_before")) <= k && max(col("tombs_before")) <= k &&
-          lit(onDiskOk)).as("both_bounded"))
-      .crossJoin(living.agg(count(lit(1)).as("n_live"),
-        (count(lit(1)) === countDistinct(col("vec_id"))).as("ids_unique")))
-      .crossJoin(same)
+          lit(onDiskOk)).as("both_bounded"),
+        max(col("n_purged")).as("n_purged"))
+      .crossJoin(dead.agg(count(lit(1)).as("tomb_epoch_rows")))
+      .crossJoin(indexStats(living, "n_live"))
+      .crossJoin(sameCodeRows(living, expected, "lifecycle_invisible"))
+      .crossJoin(nLiving(d.staysDead, "n_dead_alive"))
+      .crossJoin(nLiving(resurfaces, "n_alive"))
+      .crossJoin(resurfaces.agg(count(lit(1)).as("n_resurfacing")))
       .crossJoin(rawCarries)
-      .crossJoin(served.agg(count(lit(1)).as("n_results")))
-      .select(col("n_triggers"), col("code_folds"), col("tomb_folds"),
-        col("both_bounded"), col("n_live"), col("ids_unique"),
-        col("lifecycle_invisible"), col("raw_carries_redelivered"),
-        col("n_results"))
+      .crossJoin(nResults(m.topK(fx.query, living)))
+      .withColumn("inside_horizon_redelivery_dead", col("n_dead_alive") === 0)
+      .withColumn("purged_redelivery_resurfaces",
+        col("n_alive") === col("n_resurfacing") && col("n_resurfacing") > 0)
+    (row, idx)
   }
+
+  /** The FULL streamed index lifecycle with BOTH creep families
+    * bounded — q69 (streamed appends), q75 (streamed tombstones), and
+    * q87 (in-loop compaction) composed through [[purgeLifecycle]] with
+    * NO purge: the tombstone epoch grows with total deletes, and every
+    * re-delivered deleted id stays dead through both folds.
+    *
+    * Delivery (phased drives, the q78 exactness discipline): 3 add
+    * batches (arrivals, residues {9,19,29} mod 40), then 3 delete
+    * batches (every base id ≡ 3 mod 7, split by residues {3,10,17}
+    * mod 21 — a pure residue class, so counts stay closed-form), then
+    * one more add batch (residue 39), then — order pinned by its own
+    * drive — a batch RE-DELIVERING half the deleted ids (≡ 3 mod 14).
+    * q70's raw-top-1 injection is structurally unavailable here: the
+    * tombstone-applying code fold REMOVES dead rows from storage, which
+    * is its point; the detection-power control is
+    * raw_carries_redelivered plus the one-shot row equality.
+    * Contracts (one row, deterministic): 8 triggers; exactly 2 code
+    * folds + 1 tombstone fold; both directory families ≤ k at every
+    * trigger; serving row-identical to the one-shot batch shape
+    * (everything delivered anti-joined by the full delete set — the
+    * redelivered deleted ids stay dead THROUGH the folds); n_live is
+    * closed-form (the code fold pre-applies tombstones, so the q70
+    * conservation law does not hold by design); the unfolded
+    * redelivery generation physically carries the dead rows; k=10
+    * probe.
+    */
+  def streamIndexLifecycle(
+      spark: SparkSession, sfDir: String, k: Int = 3): DataFrame =
+    purgeLifecycle(spark, sfDir, "q88", k, _ => None) { fx =>
+      PurgeDelivery(Seq(
+          "add" -> Seq(9, 19, 29).map(residue(fx.arriving, 40, _)),
+          "del" -> Seq(3, 10, 17).map(residue(fx.base, 21, _)),
+          "add" -> Seq(residue(fx.arriving, 40, 39))),
+        staysDead = residue(fx.base, 14, 3), resurfaces = None)
+    }._1.select(col("n_triggers"), col("code_folds"), col("tomb_folds"),
+      col("both_bounded"), col("n_live"), col("ids_unique"),
+      col("lifecycle_invisible"), col("raw_carries_redelivered"),
+      col("n_results"))
 
   /** [[streamIndexLifecycle]] with the tombstone HORIZON PURGE made
     * real — the one unbounded artifact in the lifecycle story capped
-    * (r12 task 2). q88's tombstone id-set epoch grows with total
-    * deletes ever issued, deliberately: only a surviving id set keeps a
-    * re-delivered deleted id dead. The purge bounds it with an explicit
-    * delivery-watermark contract: at tombstone-fold time, an id is
-    * DROPPED from the epoch iff
-    *
-    *   (a) its delete landed at or before the `horizon` (the
-    *       pipeline's delivery watermark — "re-deliveries older than
-    *       this will not arrive"; a generation number here, a
-    *       timestamp in production), AND
-    *   (b) NO serving code part still physically carries its rows
-    *       (verified by an anti-join against the serving parts' ids —
-    *       O(epoch + k·batch), paid only inside the already-O(epoch)
-    *       fold, never on a quiet trigger). A tombstone whose rows a
-    *       code fold has not yet removed is load-bearing regardless of
-    *       age; dropping it would resurrect stored rows.
-    *
-    * Both sides of the contract are exercised by the delivery: after
-    * the purge, a re-delivery of a STILL-TOMBSTONED id (deleted past
-    * the horizon) stays dead through serving, and a re-delivery of a
-    * PURGED id resurfaces — the documented at-your-own-risk case that
-    * is the price of the bound (if the watermark lies, old data
-    * returns; that is a pipeline-policy trade, now visible in code and
-    * spec instead of prose).
+    * (r12 task 2), with a constant `horizon` (see [[purgeLifecycle]]
+    * for the two purge conditions). Both sides of the contract are
+    * exercised: after the purge, a re-delivery of a STILL-TOMBSTONED id
+    * (deleted past the horizon) stays dead through serving, and a
+    * re-delivery of a PURGED id resurfaces — the documented
+    * at-your-own-risk case that is the price of the bound (if the
+    * watermark lies, old data returns; a pipeline-policy trade, visible
+    * in code and spec instead of prose).
     *
     * Delivery (q78 exactness discipline): gens 1-2 add the first two
     * arrival slices — the code fold at gen 2 reaches k=3 and folds;
@@ -1537,238 +1181,21 @@ object StreamOps {
     */
   def streamIndexLifecyclePurge(
       spark: SparkSession, sfDir: String, k: Int = 3,
-      horizon: Long = 4L): DataFrame = {
-    import graft.operators.ProductQuantizer
-    import graft.queries.LlmOps
-    val e = graft.Tables.load(spark, sfDir, "embeddings")
-    val query = e.filter(col("vec_id") === 0).select(col("embedding")).limit(1)
-    val merged = e.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding"))
-    val base = merged.filter(pmod(col("vec_id"), lit(10)) =!= 9)
-    val arriving = merged.filter(pmod(col("vec_id"), lit(10)) === 9)
-    val idx = graft.RunPaths.scratch(
-      s"graft_q91_index_${graft.RunPaths.keyFor(sfDir)}_$k")
-    Seq("codes", "compact", "manifest", "tombs", "tepoch", "tmanifest", "log")
-      .foreach(d => wipeDir(new java.io.File(s"$idx/$d")))
-    val (coarseF, booksF) = LlmOps.buildFrozenIndex(spark, sfDir, base, idx,
-      "q91 frozen coarse-centroid table", withOccupancy = false)
-
-    def maxManifest(dir: String): Long =
-      genDirs(spark, dir, "epoch=").maxOption.getOrElse(0L)
-    def foldedThrough(): Long = {
-      val ep = maxManifest(s"$idx/manifest")
-      if (ep == 0L) 0L
-      else spark.read.parquet(s"$idx/manifest/epoch=$ep")
-        .select(col("folded_through")).collect()(0).getLong(0)
-    }
-    def codeParts(): Seq[String] = {
-      val ep = maxManifest(s"$idx/manifest")
-      val epochDir =
-        if (ep == 0L) s"$idx/codes/gen=0" else s"$idx/compact/epoch=$ep"
-      epochDir +: genDirs(spark, s"$idx/codes", "gen=").filter(_ > foldedThrough())
-        .map(g => s"$idx/codes/gen=$g")
-    }
-    // tombstone parts carry (vec_id, del_gen) — the delete's arrival
-    // generation is what the horizon is compared against
-    def tombParts(): Seq[String] = {
-      val tp = maxManifest(s"$idx/tmanifest")
-      val tFolded =
-        if (tp == 0L) 0L
-        else spark.read.parquet(s"$idx/tmanifest/epoch=$tp")
-          .select(col("folded_through")).collect()(0).getLong(0)
-      (if (tp == 0L) Seq.empty else Seq(s"$idx/tepoch/epoch=$tp")) ++
-        genDirs(spark, s"$idx/tombs", "gen=").filter(_ > tFolded)
-          .map(g => s"$idx/tombs/gen=$g")
-    }
-    def tombIds(): Option[DataFrame] = {
-      val ps = tombParts()
-      if (ps.isEmpty) None
-      else Some(ps.map(p => spark.read.parquet(p).select(col("vec_id")))
-        .reduce(_.unionByName(_)).distinct())
-    }
-    def serve(codes: DataFrame): DataFrame = ProductQuantizer.ivfPqTopK(
-      query, "embedding", HouseM, coarseF, booksF, codes, "vec_id",
-      nProbe = 4, k = 10)
-
-    val deletes = base.filter(pmod(col("vec_id"), lit(7)) === 3)
-      .select(col("vec_id"))
-
-    def drive(srcDir: String, genOffset: Int, op: String): Unit = {
-      val schema = spark.read.parquet(srcDir).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val gen = genOffset + id + 1
-          if (op == "add")
-            ProductQuantizer.ivfPqEncodeWith(
-                batch, "vec_id", "embedding", HouseM, coarseF, booksF)
-              .write.mode("overwrite").parquet(s"$idx/codes/gen=$gen")
-          else
-            batch.select(col("vec_id"), lit(gen).as("del_gen"))
-              .write.mode("overwrite").parquet(s"$idx/tombs/gen=$gen")
-          val (cBefore, tBefore) = (codeParts(), tombParts())
-          val foldCodes = cBefore.length >= k
-          if (foldCodes) {
-            val ep = maxManifest(s"$idx/manifest")
-            val live = cBefore.map(p => codeCols(spark.read.parquet(p)))
-              .reduce(_.unionByName(_))
-            // pre-apply the CURRENT tombstone set (q88 semantics); the
-            // tombstones are NOT consumed here — the PURGE below is
-            // the only place an id ever leaves the epoch
-            tombIds().map(live.join(_, Seq("vec_id"), "left_anti"))
-              .getOrElse(live)
-              .repartition(col("cell_id"))
-              .write.mode("overwrite").parquet(s"$idx/compact/epoch=${ep + 1}")
-            publishEpoch(spark, s"$idx/codes", s"$idx/compact",
-              s"$idx/manifest", ep, gen)
-          }
-          val foldTombs = tBefore.length >= k
-          var nPurged = 0L
-          if (foldTombs) {
-            val tp = maxManifest(s"$idx/tmanifest")
-            // newest delete generation wins per id (a re-deleted id's
-            // horizon clock restarts — it was re-delivered to deletion)
-            val mergedT = tBefore.map(p => spark.read.parquet(p)
-                .select(col("vec_id"), col("del_gen")))
-              .reduce(_.unionByName(_))
-              .groupBy(col("vec_id")).agg(max(col("del_gen")).as("del_gen"))
-            // the HORIZON PURGE — both conditions, each load-bearing:
-            // age alone must not drop a tombstone whose rows a code
-            // fold has not yet removed (anti-join against the ids the
-            // serving parts still carry: O(epoch + k·batch), inside
-            // the already-O(epoch) fold)
-            val carried = codeParts()
-              .map(p => spark.read.parquet(p).select(col("vec_id")))
-              .reduce(_.unionByName(_))
-            val purged = mergedT.filter(col("del_gen") <= horizon)
-              .join(carried, Seq("vec_id"), "left_anti")
-            nPurged = purged.count()
-            mergedT.join(purged.select(col("vec_id")),
-                Seq("vec_id"), "left_anti")
-              .coalesce(1)
-              .write.mode("overwrite").parquet(s"$idx/tepoch/epoch=${tp + 1}")
-            publishEpoch(spark, s"$idx/tombs", s"$idx/tepoch",
-              s"$idx/tmanifest", tp, gen,
-              extras = Seq(lit(nPurged).as("n_purged")))
-          }
-          spark.range(1)
-            .select(lit(gen).as("gen"), lit(op).as("op"),
-              lit(cBefore.length.toLong).as("codes_before"),
-              lit(tBefore.length.toLong).as("tombs_before"),
-              lit(foldCodes).as("folded_codes"),
-              lit(foldTombs).as("folded_tombs"),
-              lit(nPurged).as("n_purged"))
-            .write.mode("overwrite").parquet(s"$idx/log/gen=$gen")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-
-    // gens 1-2: first two arrival slices (mod 40 residues {9, 19}) —
-    // the gen-2 code fold reaches k and folds, BEFORE any delete
-    val addDir1 = s"$idx/src/adds1"
-    for ((r, i) <- Seq(9, 19).zipWithIndex)
-      arriving.filter(pmod(col("vec_id"), lit(40)) === r)
-        .coalesce(1)
-        .write.mode(if (i == 0) "overwrite" else "append").parquet(addDir1)
-    drive(addDir1, 0, "add")
-    // gens 3-4: deletes D1, D2
-    val delDir1 = s"$idx/src/dels1"
-    for ((r, i) <- Seq(3, 10).zipWithIndex)
-      deletes.filter(pmod(col("vec_id"), lit(21)) === r)
-        .coalesce(1)
-        .write.mode(if (i == 0) "overwrite" else "append").parquet(delDir1)
-    drive(delDir1, 2, "del")
-    // gens 5-6: last two arrival slices — the gen-6 code fold
-    // PRE-APPLIES D1∪D2, physically removing their rows from storage
-    val addDir2 = s"$idx/src/adds2"
-    for ((r, i) <- Seq(29, 39).zipWithIndex)
-      arriving.filter(pmod(col("vec_id"), lit(40)) === r)
-        .coalesce(1)
-        .write.mode(if (i == 0) "overwrite" else "append").parquet(addDir2)
-    drive(addDir2, 4, "add")
-    // gen 7: delete D3 — the tombstone fold fires WITH the horizon
-    val delDir2 = s"$idx/src/dels2"
-    deletes.filter(pmod(col("vec_id"), lit(21)) === 17)
-      .coalesce(1).write.mode("overwrite").parquet(delDir2)
-    drive(delDir2, 6, "del")
-    // gen 8: re-deliver half of PURGED D1 (resurfaces) and half of
-    // STILL-TOMBSTONED D3 (stays dead), as one add batch
-    val redelivD1 = base.filter(pmod(col("vec_id"), lit(42)) === 3)
-    val redelivD3 = base.filter(pmod(col("vec_id"), lit(42)) === 17)
-    val redelivDir = s"$idx/src/redeliver"
-    redelivD1.unionByName(redelivD3)
-      .coalesce(1).write.mode("overwrite").parquet(redelivDir)
-    drive(redelivDir, 7, "add")
-
-    // ---- final state ------------------------------------------------
-    val codes = codeParts().map(p => codeCols(spark.read.parquet(p)))
-      .reduce(_.unionByName(_))
-    val dead = tombIds().get
-    val living = codes.join(dead, Seq("vec_id"), "left_anti")
-    // expected live set, closed form: (everything delivered minus the
-    // full delete set) ∪ the re-delivered PURGED half — encoded under
-    // the same frozen models
-    val expected = codeCols(ProductQuantizer.ivfPqEncodeWith(
-        base.unionByName(arriving), "vec_id", "embedding", HouseM,
-        coarseF, booksF))
-      .join(deletes, Seq("vec_id"), "left_anti")
-      .unionByName(codeCols(ProductQuantizer.ivfPqEncodeWith(
-        redelivD1, "vec_id", "embedding", HouseM, coarseF, booksF)))
-    val same = sameCodeRows(living, expected, "lifecycle_invisible")
-    val deadCheck = living.join(redelivD3.select(col("vec_id")),
-        Seq("vec_id"), "left_semi")
-      .agg((count(lit(1)) === 0).as("inside_horizon_redelivery_dead"))
-    val aliveCheck = living.join(redelivD1.select(col("vec_id")),
-        Seq("vec_id"), "left_semi")
-      .agg(count(lit(1)).as("n_alive_d1"))
-      .crossJoin(redelivD1.agg(count(lit(1)).as("n_d1")))
-      .select((col("n_alive_d1") === col("n_d1") && col("n_d1") > 0)
-        .as("purged_redelivery_resurfaces"))
-    // physical control: gen 8 is unfolded, so the stored codes must
-    // still CARRY both re-delivered halves — only the anti-join hides
-    // the D3 half from queries
-    // countDistinct, not count: D3's BASE copies are legitimately still
-    // stored too (D3 was deleted after the last code fold), so a
-    // re-delivered D3 id matches two physical rows
-    val rawCarries = codes.join(
-        redelivD1.unionByName(redelivD3).select(col("vec_id")),
-        Seq("vec_id"), "left_semi")
-      .agg(countDistinct(col("vec_id")).as("n_raw"))
-      .crossJoin(redelivD1.unionByName(redelivD3)
-        .agg(count(lit(1)).as("n_redeliv")))
-      .select((col("n_raw") === col("n_redeliv"))
-        .as("raw_carries_redelivered"))
-    val served = serve(living)
-    val tombEpochRows = tombIds().get.count()
-    val onDiskOk = codeParts().length <= k && tombParts().length <= k
-    val log = spark.read.parquet(s"$idx/log")
-    log.agg(
-        count(lit(1)).as("n_triggers"),
-        count(when(col("folded_codes"), 1)).as("code_folds"),
-        count(when(col("folded_tombs"), 1)).as("tomb_folds"),
-        (max(col("codes_before")) <= k && max(col("tombs_before")) <= k &&
-          lit(onDiskOk)).as("both_bounded"),
-        max(col("n_purged")).as("n_purged"))
-      .crossJoin(spark.range(1)
-        .select(lit(tombEpochRows).as("tomb_epoch_rows")))
-      .crossJoin(living.agg(count(lit(1)).as("n_live"),
-        (count(lit(1)) === countDistinct(col("vec_id"))).as("ids_unique")))
-      .crossJoin(same)
-      .crossJoin(deadCheck)
-      .crossJoin(aliveCheck)
-      .crossJoin(rawCarries)
-      .crossJoin(served.agg(count(lit(1)).as("n_results")))
-      .select(col("n_triggers"), col("code_folds"), col("tomb_folds"),
-        col("both_bounded"), col("n_purged"), col("tomb_epoch_rows"),
-        col("n_live"), col("ids_unique"), col("lifecycle_invisible"),
-        col("inside_horizon_redelivery_dead"),
-        col("purged_redelivery_resurfaces"),
-        col("raw_carries_redelivered"), col("n_results"))
-  }
+      horizon: Long = 4L): DataFrame =
+    purgeLifecycle(spark, sfDir, "q91", k, _ => Some(horizon)) { fx =>
+      PurgeDelivery(Seq(
+          "add" -> Seq(9, 19).map(residue(fx.arriving, 40, _)),
+          "del" -> Seq(3, 10).map(residue(fx.base, 21, _)),
+          "add" -> Seq(29, 39).map(residue(fx.arriving, 40, _)),
+          "del" -> Seq(residue(fx.base, 21, 17))),
+        staysDead = residue(fx.base, 42, 17),
+        resurfaces = Some(residue(fx.base, 42, 3)))
+    }._1.select(col("n_triggers"), col("code_folds"), col("tomb_folds"),
+      col("both_bounded"), col("n_purged"), col("tomb_epoch_rows"),
+      col("n_live"), col("ids_unique"), col("lifecycle_invisible"),
+      col("inside_horizon_redelivery_dead"),
+      col("purged_redelivery_resurfaces"),
+      col("raw_carries_redelivered"), col("n_results"))
 
   /** [[streamIndexLifecyclePurge]] under an ADVANCING horizon — the
     * production shape (r13 task 5): q91 takes one constant horizon and
@@ -1818,215 +1245,19 @@ object StreamOps {
   def streamIndexLifecycleMultiPurge(
       spark: SparkSession, sfDir: String, k: Int = 3,
       lag: Long = 1L): DataFrame = {
-    import graft.operators.ProductQuantizer
-    import graft.queries.LlmOps
-    val e = graft.Tables.load(spark, sfDir, "embeddings")
-    val query = e.filter(col("vec_id") === 0).select(col("embedding")).limit(1)
-    val merged = e.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding"))
-    val base = merged.filter(pmod(col("vec_id"), lit(10)) =!= 9)
-    val arriving = merged.filter(pmod(col("vec_id"), lit(10)) === 9)
-    val idx = graft.RunPaths.scratch(
-      s"graft_q92_index_${graft.RunPaths.keyFor(sfDir)}_$k")
-    Seq("codes", "compact", "manifest", "tombs", "tepoch", "tmanifest", "log")
-      .foreach(d => wipeDir(new java.io.File(s"$idx/$d")))
-    val (coarseF, booksF) = LlmOps.buildFrozenIndex(spark, sfDir, base, idx,
-      "q92 frozen coarse-centroid table", withOccupancy = false)
-
-    def maxManifest(dir: String): Long =
-      genDirs(spark, dir, "epoch=").maxOption.getOrElse(0L)
-    def foldedThrough(): Long = {
-      val ep = maxManifest(s"$idx/manifest")
-      if (ep == 0L) 0L
-      else spark.read.parquet(s"$idx/manifest/epoch=$ep")
-        .select(col("folded_through")).collect()(0).getLong(0)
-    }
-    def codeParts(): Seq[String] = {
-      val ep = maxManifest(s"$idx/manifest")
-      val epochDir =
-        if (ep == 0L) s"$idx/codes/gen=0" else s"$idx/compact/epoch=$ep"
-      epochDir +: genDirs(spark, s"$idx/codes", "gen=").filter(_ > foldedThrough())
-        .map(g => s"$idx/codes/gen=$g")
-    }
-    def tombParts(): Seq[String] = {
-      val tp = maxManifest(s"$idx/tmanifest")
-      val tFolded =
-        if (tp == 0L) 0L
-        else spark.read.parquet(s"$idx/tmanifest/epoch=$tp")
-          .select(col("folded_through")).collect()(0).getLong(0)
-      (if (tp == 0L) Seq.empty else Seq(s"$idx/tepoch/epoch=$tp")) ++
-        genDirs(spark, s"$idx/tombs", "gen=").filter(_ > tFolded)
-          .map(g => s"$idx/tombs/gen=$g")
-    }
-    def tombIds(): Option[DataFrame] = {
-      val ps = tombParts()
-      if (ps.isEmpty) None
-      else Some(ps.map(p => spark.read.parquet(p).select(col("vec_id")))
-        .reduce(_.unionByName(_)).distinct())
-    }
-    def serve(codes: DataFrame): DataFrame = ProductQuantizer.ivfPqTopK(
-      query, "embedding", HouseM, coarseF, booksF, codes, "vec_id",
-      nProbe = 4, k = 10)
-
-    val deletes = base.filter(pmod(col("vec_id"), lit(7)) === 3)
-      .select(col("vec_id"))
-
-    def drive(srcDir: String, genOffset: Int, op: String): Unit = {
-      val schema = spark.read.parquet(srcDir).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val gen = genOffset + id + 1
-          if (op == "add")
-            ProductQuantizer.ivfPqEncodeWith(
-                batch, "vec_id", "embedding", HouseM, coarseF, booksF)
-              .write.mode("overwrite").parquet(s"$idx/codes/gen=$gen")
-          else
-            batch.select(col("vec_id"), lit(gen).as("del_gen"))
-              .write.mode("overwrite").parquet(s"$idx/tombs/gen=$gen")
-          val (cBefore, tBefore) = (codeParts(), tombParts())
-          val foldCodes = cBefore.length >= k
-          if (foldCodes) {
-            val ep = maxManifest(s"$idx/manifest")
-            val live = cBefore.map(p => codeCols(spark.read.parquet(p)))
-              .reduce(_.unionByName(_))
-            tombIds().map(live.join(_, Seq("vec_id"), "left_anti"))
-              .getOrElse(live)
-              .repartition(col("cell_id"))
-              .write.mode("overwrite").parquet(s"$idx/compact/epoch=${ep + 1}")
-            publishEpoch(spark, s"$idx/codes", s"$idx/compact",
-              s"$idx/manifest", ep, gen)
-          }
-          val foldTombs = tBefore.length >= k
-          var nPurged = 0L
-          if (foldTombs) {
-            // the ADVANCING horizon: the delivery watermark trails the
-            // current generation by a fixed lag — each fold purges
-            // against a fresher bound than the last (the production
-            // shape; q91's constant horizon is the single-purge case)
-            val horizon = gen - lag
-            val tp = maxManifest(s"$idx/tmanifest")
-            val mergedT = tBefore.map(p => spark.read.parquet(p)
-                .select(col("vec_id"), col("del_gen")))
-              .reduce(_.unionByName(_))
-              .groupBy(col("vec_id")).agg(max(col("del_gen")).as("del_gen"))
-            val carried = codeParts()
-              .map(p => spark.read.parquet(p).select(col("vec_id")))
-              .reduce(_.unionByName(_))
-            val purged = mergedT.filter(col("del_gen") <= horizon)
-              .join(carried, Seq("vec_id"), "left_anti")
-            nPurged = purged.count()
-            mergedT.join(purged.select(col("vec_id")),
-                Seq("vec_id"), "left_anti")
-              .coalesce(1)
-              .write.mode("overwrite").parquet(s"$idx/tepoch/epoch=${tp + 1}")
-            publishEpoch(spark, s"$idx/tombs", s"$idx/tepoch",
-              s"$idx/tmanifest", tp, gen,
-              extras = Seq(lit(nPurged).as("n_purged"),
-                lit(horizon).as("horizon")))
-          }
-          spark.range(1)
-            .select(lit(gen).as("gen"), lit(op).as("op"),
-              lit(cBefore.length.toLong).as("codes_before"),
-              lit(tBefore.length.toLong).as("tombs_before"),
-              lit(foldCodes).as("folded_codes"),
-              lit(foldTombs).as("folded_tombs"),
-              lit(nPurged).as("n_purged"))
-            .write.mode("overwrite").parquet(s"$idx/log/gen=$gen")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-
-    val redelivR = base.filter(pmod(col("vec_id"), lit(42)) === 3)
-    val redelivD3 = base.filter(pmod(col("vec_id"), lit(42)) === 17)
-    // gen 1: add A1
-    val addDir1 = s"$idx/src/adds1"
-    arriving.filter(pmod(col("vec_id"), lit(40)) === 9)
-      .coalesce(1).write.mode("overwrite").parquet(addDir1)
-    drive(addDir1, 0, "add")
-    // gens 2-3: deletes D1, D2
-    val delDir1 = s"$idx/src/dels1"
-    for ((r, i) <- Seq(3, 10).zipWithIndex)
-      deletes.filter(pmod(col("vec_id"), lit(21)) === r)
-        .coalesce(1)
-        .write.mode(if (i == 0) "overwrite" else "append").parquet(delDir1)
-    drive(delDir1, 1, "del")
-    // gen 4: add A2 — CODE FOLD 1 pre-applies D1∪D2
-    val addDir2 = s"$idx/src/adds2"
-    arriving.filter(pmod(col("vec_id"), lit(40)) === 19)
-      .coalesce(1).write.mode("overwrite").parquet(addDir2)
-    drive(addDir2, 3, "add")
-    // gen 5: RE-delete half of D1 (the restarted-clock case) —
-    // TOMB FOLD 1 at horizon 4
-    val delDirR = s"$idx/src/dels_r"
-    redelivR.select(col("vec_id"))
-      .coalesce(1).write.mode("overwrite").parquet(delDirR)
-    drive(delDirR, 4, "del")
-    // gens 6-7: adds A3, A4 — CODE FOLD 2 at gen 7
-    val addDir3 = s"$idx/src/adds3"
-    for ((r, i) <- Seq(29, 39).zipWithIndex)
-      arriving.filter(pmod(col("vec_id"), lit(40)) === r)
-        .coalesce(1)
-        .write.mode(if (i == 0) "overwrite" else "append").parquet(addDir3)
-    drive(addDir3, 5, "add")
-    // gen 8: delete D3 (after the last code fold — stays CARRIED)
-    val delDir2 = s"$idx/src/dels2"
-    deletes.filter(pmod(col("vec_id"), lit(21)) === 17)
-      .coalesce(1).write.mode("overwrite").parquet(delDir2)
-    drive(delDir2, 7, "del")
-    // gen 9: re-delete D2 (a delete of already-purged ids re-tombstones
-    // them with a fresh clock) — TOMB FOLD 2 at horizon 8
-    val delDir3 = s"$idx/src/dels3"
-    deletes.filter(pmod(col("vec_id"), lit(21)) === 10)
-      .coalesce(1).write.mode("overwrite").parquet(delDir3)
-    drive(delDir3, 8, "del")
-    // gen 10: re-deliver R (purged at fold 2 → resurfaces) and half of
-    // D3 (tombstoned → stays dead)
-    val redelivDir = s"$idx/src/redeliver"
-    redelivR.unionByName(redelivD3)
-      .coalesce(1).write.mode("overwrite").parquet(redelivDir)
-    drive(redelivDir, 9, "add")
-
-    // ---- final state ------------------------------------------------
-    val codes = codeParts().map(p => codeCols(spark.read.parquet(p)))
-      .reduce(_.unionByName(_))
-    val dead = tombIds().get
-    val living = codes.join(dead, Seq("vec_id"), "left_anti")
-    // expected live set, closed form: (everything delivered minus the
-    // full delete set) ∪ the re-delivered PURGED half R
-    val expected = codeCols(ProductQuantizer.ivfPqEncodeWith(
-        base.unionByName(arriving), "vec_id", "embedding", HouseM,
-        coarseF, booksF))
-      .join(deletes, Seq("vec_id"), "left_anti")
-      .unionByName(codeCols(ProductQuantizer.ivfPqEncodeWith(
-        redelivR, "vec_id", "embedding", HouseM, coarseF, booksF)))
-    val same = sameCodeRows(living, expected, "lifecycle_invisible")
-    val deadCheck = living.join(redelivD3.select(col("vec_id")),
-        Seq("vec_id"), "left_semi")
-      .agg((count(lit(1)) === 0).as("inside_horizon_redelivery_dead"))
-    val aliveCheck = living.join(redelivR.select(col("vec_id")),
-        Seq("vec_id"), "left_semi")
-      .agg(count(lit(1)).as("n_alive_r"))
-      .crossJoin(redelivR.agg(count(lit(1)).as("n_r")))
-      .select((col("n_alive_r") === col("n_r") && col("n_r") > 0)
-        .as("purged_redelivery_resurfaces"))
-    // physical control: gen 10 is unfolded — countDistinct because the
-    // D3 half legitimately matches its still-stored base copies too
-    val rawCarries = codes.join(
-        redelivR.unionByName(redelivD3).select(col("vec_id")),
-        Seq("vec_id"), "left_semi")
-      .agg(countDistinct(col("vec_id")).as("n_raw"))
-      .crossJoin(redelivR.unionByName(redelivD3)
-        .agg(count(lit(1)).as("n_redeliv")))
-      .select((col("n_raw") === col("n_redeliv"))
-        .as("raw_carries_redelivered"))
-    val served = serve(living)
-    val tombEpochRows = tombIds().get.count()
-    val onDiskOk = codeParts().length <= k && tombParts().length <= k
+    val (row, idx) =
+      purgeLifecycle(spark, sfDir, "q92", k, gen => Some(gen - lag)) { fx =>
+        val r = residue(fx.base, 42, 3)
+        PurgeDelivery(Seq(
+            "add" -> Seq(residue(fx.arriving, 40, 9)),
+            "del" -> Seq(3, 10).map(residue(fx.base, 21, _)),
+            "add" -> Seq(residue(fx.arriving, 40, 19)),
+            "del" -> Seq(r.select(col("vec_id"))),
+            "add" -> Seq(29, 39).map(residue(fx.arriving, 40, _)),
+            "del" -> Seq(residue(fx.base, 21, 17)),
+            "del" -> Seq(residue(fx.base, 21, 10))),
+          staysDead = residue(fx.base, 42, 17), resurfaces = Some(r))
+      }
     // per-fold purge accounting and the advancing horizon, from the
     // durable tombstone manifests (kept forever — 1-row records)
     val tm = genDirs(spark, s"$idx/tmanifest", "epoch=").map(ep =>
@@ -2035,26 +1266,10 @@ object StreamOps {
     require(tm.length == 2,
       s"q92 delivery must land exactly 2 tombstone folds, found " +
         s"${tm.length} manifests — schedule or fold-threshold drift")
-    val (purged1, h1) = (tm(0).getLong(0), tm(0).getLong(1))
-    val (purged2, h2) = (tm(1).getLong(0), tm(1).getLong(1))
-    val log = spark.read.parquet(s"$idx/log")
-    log.agg(
-        count(lit(1)).as("n_triggers"),
-        count(when(col("folded_codes"), 1)).as("code_folds"),
-        count(when(col("folded_tombs"), 1)).as("tomb_folds"),
-        (max(col("codes_before")) <= k && max(col("tombs_before")) <= k &&
-          lit(onDiskOk)).as("both_bounded"))
-      .crossJoin(spark.range(1)
-        .select(lit(h2 > h1).as("horizons_advanced"),
-          lit(purged1).as("n_purged_1"), lit(purged2).as("n_purged_2"),
-          lit(tombEpochRows).as("tomb_epoch_rows")))
-      .crossJoin(living.agg(count(lit(1)).as("n_live"),
-        (count(lit(1)) === countDistinct(col("vec_id"))).as("ids_unique")))
-      .crossJoin(same)
-      .crossJoin(deadCheck)
-      .crossJoin(aliveCheck)
-      .crossJoin(rawCarries)
-      .crossJoin(served.agg(count(lit(1)).as("n_results")))
+    row.crossJoin(spark.range(1).select(
+        lit(tm(1).getLong(1) > tm(0).getLong(1)).as("horizons_advanced"),
+        lit(tm(0).getLong(0)).as("n_purged_1"),
+        lit(tm(1).getLong(0)).as("n_purged_2")))
       .select(col("n_triggers"), col("code_folds"), col("tomb_folds"),
         col("both_bounded"), col("horizons_advanced"),
         col("n_purged_1"), col("n_purged_2"), col("tomb_epoch_rows"),
@@ -2074,9 +1289,12 @@ object StreamOps {
     * K-row count over the new generation, no vector re-assigned, no
     * state store. Delivery is two-phase so the contract is
     * deterministic: the in-distribution arrivals stream first (3
-    * round-robin micro-batches), then a deliberately drifted batch
-    * (the shared `IndexDrift.shifted` transform); each drift row is
-    * stamped with its delivery phase.
+    * one-file micro-batches, arrival residues {9,19,29} mod 30 — all
+    * non-empty from 3 rows up, and a corpus id blowup only permutes the
+    * residue set), then a deliberately drifted batch (the shared
+    * `IndexDrift.shifted` transform, ids offset by the observed id
+    * span); each drift row is stamped with its delivery phase — the
+    * phase itself, not a vec_id threshold a larger corpus could reach.
     *
     * Contracts (one row, deterministic booleans — PSI floats are
     * model-dependent and never surfaced): 4 triggers, ≥ 2 clean
@@ -2085,91 +1303,33 @@ object StreamOps {
     * threshold), and the one drifted generation DOES (rehearsed ~2.6).
     */
   def streamIndexDrift(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.operators.{IndexDrift, ProductQuantizer}
-    import graft.queries.LlmOps
-    val e = graft.Tables.load(spark, sfDir, "embeddings")
-    val merged = e.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding"))
-    val base = merged.filter(pmod(col("vec_id"), lit(10)) =!= 9)
-    val arriving = merged.filter(pmod(col("vec_id"), lit(10)) === 9)
-    val idx = graft.RunPaths.scratch(
-      "graft_q78_index_" + graft.RunPaths.keyFor(sfDir))
-    // offline build: the shared persist-first frozen layout (models +
-    // base codes + the base occupancy the per-append trigger reads)
-    val (coarseF, booksF) = LlmOps.buildFrozenIndex(spark, sfDir, base, idx,
+    import graft.operators.IndexDrift
+    val fx = new Fixture(spark, sfDir)
+    val key = graft.RunPaths.keyFor(sfDir)
+    val idx = graft.RunPaths.scratch("graft_q78_index_" + key)
+    val m = buildFrozen(spark, sfDir, fx.base, idx,
       "q78 frozen coarse-centroid table")
+    def phase(srcDir: String, genOffset: Int, drifted: Boolean): Unit =
+      drive(spark, srcDir) { (batch, id) =>
+        val gen = genOffset + id + 1
+        m.encode(batch).write.mode("overwrite").parquet(s"$idx/codes/gen=$gen")
+        IndexDrift.occupancyPsiFromOccupancies(
+            spark.read.parquet(s"$idx/base_occ"),
+            IndexDrift.occupancyOfCodes(
+              spark.read.parquet(s"$idx/codes/gen=$gen")),
+            m.coarse)
+          .select(lit(gen).as("gen"), col("n_batch"), col("psi"),
+            (col("psi") > RetrainPsi).as("retrain_needed"),
+            lit(drifted).as("drifted_batch"))
+          .write.mode("overwrite").parquet(s"$idx/drift/gen=$gen")
+      }
+    phase(writePhase(graft.RunPaths.scratch("graft_q78_arrivals_" + key),
+      (0 until 3).map(i => residue(fx.arriving, 30, 9 + 10 * i))), 0, drifted = false)
+    val split2 = graft.RunPaths.scratch("graft_q78_drifted_" + key)
+    fx.driftSrc.repartition(1).write.mode("overwrite").parquet(split2)
+    phase(split2, 3, drifted = true)
 
-    def drive(srcDir: String, genOffset: Int, drifted: Boolean): Unit = {
-      val schema = spark.read.parquet(srcDir).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val gen = genOffset + id + 1
-          ProductQuantizer.ivfPqEncodeWith(
-              batch, "vec_id", "embedding", HouseM, coarseF, booksF)
-            .write.mode("overwrite").parquet(s"$idx/codes/gen=$gen")
-          // the trigger's whole input is stored state: base occupancy
-          // from build time, generation occupancy from the codes just
-          // written — one K-row aggregate per trigger. The phase flag
-          // is the delivery phase itself (gens 1..3 clean, 4 drifted),
-          // NOT a vec_id threshold: a data-derived marker would
-          // misclassify clean batches on any corpus whose real ids
-          // reach the marker range (e.g. a 10× corpus blowup that adds
-          // rep·10^8 to vec_id).
-          IndexDrift.occupancyPsiFromOccupancies(
-              spark.read.parquet(s"$idx/base_occ"),
-              IndexDrift.occupancyOfCodes(
-                spark.read.parquet(s"$idx/codes/gen=$gen")),
-              coarseF)
-            .select(lit(gen).as("gen"), col("n_batch"), col("psi"),
-              (col("psi") > 0.75).as("retrain_needed"),
-              lit(drifted).as("drifted_batch"))
-            .write.mode("overwrite").parquet(s"$idx/drift/gen=$gen")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    // phase 1: in-distribution arrivals, 3 micro-batches. The trigger
-    // count is a CONTRACT (4 = 3 clean + 1 drifted), so the file count
-    // must be exact BY CONSTRUCTION: three coalesce(1) writes appended
-    // into one directory, one part file each. Neither round-robin
-    // repartition(3) (per-input-partition random start offsets can
-    // leave a target partition empty when no input partition holds 3+
-    // rows) nor a hash split (empty hash bucket at tiny corpora)
-    // guarantees 3 non-empty partitions — either shape yields fewer
-    // part files → fewer triggers → a loud-but-spurious verify
-    // failure. Slicing key: arriving ids are ≡ 9 (mod 10), so pmod 30
-    // cycles residues {9,19,29} every 3 arrivals — all three slices
-    // non-empty from 3 rows up, and a corpus id blowup
-    // (+rep·10^8, with 10^8 ≡ 10 mod 30) only PERMUTES the residue
-    // set, never collapses it. Which rows land in which batch is
-    // irrelevant to every contract (union of generations, per-batch
-    // PSI quietness).
-    val split1 = graft.RunPaths.scratch(
-      "graft_q78_arrivals_" + graft.RunPaths.keyFor(sfDir))
-    for (i <- 0 until 3)
-      arriving.filter(pmod(col("vec_id"), lit(30)) === lit(9 + 10 * i))
-        .coalesce(1)
-        .write.mode(if (i == 0) "overwrite" else "append").parquet(split1)
-    drive(split1, 0, drifted = false)
-    // phase 2: the drifted batch (shifted embeddings; ids offset only
-    // so clean and drifted copies of a vector stay distinct in the
-    // stored generations — by the OBSERVED id span, not a constant a
-    // larger corpus would outgrow)
-    val split2 = graft.RunPaths.scratch(
-      "graft_q78_drifted_" + graft.RunPaths.keyFor(sfDir))
-    val idSpan = merged.agg(max(col("vec_id"))).collect()(0).getLong(0) + 1
-    IndexDrift.shifted(arriving, "vec_id", "embedding")
-      .select((col("vec_id") + lit(idSpan)).as("vec_id"), col("embedding"))
-      .repartition(1)
-      .write.mode("overwrite").parquet(split2)
-    drive(split2, 3, drifted = true)
-
-    val drift = spark.read.parquet(s"$idx/drift")
-    drift.agg(
+    spark.read.parquet(s"$idx/drift").agg(
       count(lit(1)).as("n_triggers"),
       (countDistinct(when(!col("drifted_batch"), col("gen"))) >= 2)
         .as("multi_trigger_ok"),
@@ -2221,29 +1381,12 @@ object StreamOps {
   def streamIndexRetrain(
       spark: SparkSession, sfDir: String,
       postShifted: Boolean = false): DataFrame = {
-    import graft.operators.{IndexDrift, ProductQuantizer}
-    import graft.queries.LlmOps
-    val e = graft.Tables.load(spark, sfDir, "embeddings")
-    val all = e.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding"))
-    val base = all.filter(!pmod(col("vec_id"), lit(10)).isin(8, 9))
-    val clean = all.filter(pmod(col("vec_id"), lit(10)) === 8)
-    // fresh-id offsets derive from the OBSERVED id span (one 1-row
-    // aggregate), never a hard constant: a fixed +1M/+2M collides with
-    // genuine ids once the corpus outgrows it, failing the ids_unique
-    // contract spuriously at scale — drift copies live in
-    // [span, 2·span), post copies in [2·span, 3·span), disjoint from
-    // the originals by construction
-    val idSpan = all.agg(max(col("vec_id"))).collect()(0).getLong(0) + 1
-    val driftSrc = IndexDrift
-      .shifted(all.filter(pmod(col("vec_id"), lit(10)) === 9),
-        "vec_id", "embedding")
-      .select((col("vec_id") + lit(idSpan)).as("vec_id"), col("embedding"))
+    import graft.operators.IndexDrift
+    val fx = new Fixture(spark, sfDir)
     val idx = graft.RunPaths.scratch(
       "graft_q84_index_" + graft.RunPaths.keyFor(sfDir))
-    // offline build over base: the shared persist-first frozen layout
     val mDir = s"$idx/model"
-    LlmOps.buildFrozenIndex(spark, sfDir, base, mDir,
+    LlmOps.buildFrozenIndex(spark, sfDir, fx.driftBase, mDir,
       "q84 frozen coarse-centroid table")
 
     // NO driver-held serving state: the model pointer and the set of
@@ -2258,12 +1401,10 @@ object StreamOps {
     // BEFORE the current generation makes a replay bit-for-bit
     // deterministic: it re-reads the same pre-batch state, re-makes the
     // same decision, and overwrites the same artifacts.
-    def decisions(upTo: Long): Seq[(Long, Boolean)] = {
-      genDirs(spark, s"$idx/log", "gen=")
-        .filter(_ < upTo)
+    def decisions(upTo: Long): Seq[(Long, Boolean)] =
+      genDirs(spark, s"$idx/log", "gen=").filter(_ < upTo)
         .map(g => (g, spark.read.parquet(s"$idx/log/gen=$g")
           .select(col("retrain_fired")).collect()(0).getBoolean(0)))
-    }
     def modelBefore(gen: Long): String =
       decisions(gen).filter(_._2).lastOption
         .map { case (g, _) => s"$idx/branch/gen=$g/retrain" }
@@ -2273,92 +1414,50 @@ object StreamOps {
       all.collect { case (g, false) if g > lastFired =>
         s"$idx/branch/gen=$g/codes/gen=1" }
     }
+    // gen derives from the STABLE batch id (+ per-drive offset), never
+    // a counter: a retried batch must overwrite its OWN generation
+    def phase(srcDir: String, phase: String, genOffset: Int): Unit =
+      drive(spark, srcDir) { (batch, id) =>
+        val gen = genOffset + id + 1
+        // persist-then-reread: the retrain branch trains float models
+        // on this data, and storage is the one bit-stable handoff
+        batch.select(col("vec_id"), col("embedding"))
+          .write.mode("overwrite").parquet(s"$idx/arrived/gen=$gen")
+        val corpus = (1L until gen)
+          .map(g => spark.read.parquet(s"$idx/arrived/gen=$g"))
+          .foldLeft(fx.driftBase)(_.unionByName(_))
+        val (_, _, _, fired) = LlmOps.annMaybeRetrain(
+          spark, sfDir, modelBefore(gen), s"$idx/branch/gen=$gen", corpus,
+          spark.read.parquet(s"$idx/arrived/gen=$gen"))
+        logRow(spark, idx, gen, lit(fired).as("retrain_fired"),
+          lit(phase).as("phase"))
+      }
 
-    def drive(srcDir: String, phase: String, genOffset: Int): Unit = {
-      val schema = spark.read.parquet(srcDir).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // gen derives from the STABLE batch id (+ per-drive offset),
-          // never a counter: a retried batch must overwrite its OWN
-          // generation, not mint a new one
-          val gen = genOffset + id + 1
-          // persist-then-reread: the retrain branch trains float models
-          // on this data, and storage is the one bit-stable handoff
-          batch.select(col("vec_id"), col("embedding"))
-            .write.mode("overwrite").parquet(s"$idx/arrived/gen=$gen")
-          val corpus = (1L until gen)
-            .map(g => spark.read.parquet(s"$idx/arrived/gen=$g"))
-            .foldLeft(base)(_.unionByName(_))
-          val branch = s"$idx/branch/gen=$gen"
-          val (_, _, _, fired) = LlmOps.annMaybeRetrain(
-            spark, sfDir, modelBefore(gen), branch, corpus,
-            spark.read.parquet(s"$idx/arrived/gen=$gen"))
-          spark.range(1)
-            .select(lit(gen).as("gen"), lit(fired).as("retrain_fired"),
-              lit(phase).as("phase"))
-            .write.mode("overwrite").parquet(s"$idx/log/gen=$gen")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-
-    // wipe the decision log from any PRIOR run of this query in the
-    // same process (scratch paths are per-sfDir): the pointer is
-    // log-derived, and a stale fired entry would hand generation 1 the
-    // previous run's retrained model
-    wipeDir(new java.io.File(s"$idx/log"))
-
-    // phase 1: two clean micro-batches — explicit one-file writes (the
-    // q78 discipline: the trigger count is a contract, so the file
-    // count is exact by construction; clean ids are ≡ 8 mod 10, so
-    // pmod 20 splits them {8} / {18}, both non-empty from 2 rows up)
-    val cleanDir = s"$idx/src/clean"
-    for ((r, i) <- Seq(8, 18).zipWithIndex)
-      clean.filter(pmod(col("vec_id"), lit(20)) === r)
-        .coalesce(1)
-        .write.mode(if (i == 0) "overwrite" else "append").parquet(cleanDir)
-    drive(cleanDir, "clean", genOffset = 0)
-    // phase 2: the drifted batch — fires and retrains inline
-    val driftDir = s"$idx/src/drift"
-    driftSrc.coalesce(1).write.mode("overwrite").parquet(driftDir)
-    drive(driftDir, "drift", genOffset = 2)
-    // phase 3: a fresh-id copy of the merged corpus — exactly the
-    // retrained model's training distribution, must append quietly
-    // (postShifted: shifted AGAIN — out-of-distribution for the
-    // retrained model too, must fire a second retrain)
-    val postDir = s"$idx/src/post"
-    val mergedCopy = base.unionByName(clean).unionByName(driftSrc)
-    (if (postShifted)
-       IndexDrift.shifted(mergedCopy, "vec_id", "embedding")
-     else mergedCopy)
-      .select((col("vec_id") + lit(2 * idSpan)).as("vec_id"), col("embedding"))
-      .coalesce(1).write.mode("overwrite").parquet(postDir)
-    drive(postDir, "post", genOffset = 3)
+    // the pointer is log-derived: a stale fired entry from a PRIOR run
+    // in this process would hand generation 1 its retrained model
+    wipe(idx, "log")
+    phase(writePhase(s"$idx/src/clean",
+      Seq(8, 18).map(residue(fx.clean, 20, _))), "clean", genOffset = 0)
+    phase(writePhase(s"$idx/src/drift", Seq(fx.driftSrc)), "drift", genOffset = 2)
+    // a fresh-id copy of the merged corpus — exactly the retrained
+    // model's training distribution, must append quietly (postShifted:
+    // shifted AGAIN — must fire a second retrain)
+    val post = if (postShifted)
+      IndexDrift.shifted(fx.mergedCopy, "vec_id", "embedding") else fx.mergedCopy
+    phase(writePhase(s"$idx/src/post", Seq(fx.offset(post, 2))), "post", genOffset = 3)
 
     // final serving state, derived from the same durable log the
     // triggers wrote: the current pointer's base generation plus quiet
     // appends since the last retrain
-    val finalDecisions = decisions(Long.MaxValue)
     val modelIdx = modelBefore(Long.MaxValue)
-    val serving = appendedAfter(finalDecisions)
-      .map(p => spark.read.parquet(p)
-        .select(col("cell_id"), col("vec_id"), col("codes")))
-      .foldLeft(spark.read.parquet(s"$modelIdx/codes/gen=0")
-        .select(col("cell_id"), col("vec_id"), col("codes")))(_.unionByName(_))
-    val query = e.filter(col("vec_id") === 0).select(col("embedding")).limit(1)
-    val served = ProductQuantizer.ivfPqTopK(
-      query, "embedding", HouseM,
-      LlmOps.modelScaleStamp(spark.read.parquet(s"$modelIdx/coarse"),
-        "q84 serving coarse-centroid table"),
-      spark.read.parquet(s"$modelIdx/books"),
-      serving, "vec_id", nProbe = 4, k = 10)
+    val serving = appendedAfter(decisions(Long.MaxValue))
+      .map(p => codeCols(spark.read.parquet(p)))
+      .foldLeft(codeCols(spark.read.parquet(s"$modelIdx/codes/gen=0")))(
+        _.unionByName(_))
+    val served = models(spark, modelIdx, "q84 serving coarse-centroid table")
+      .topK(fx.query, serving)
 
-    val log = spark.read.parquet(s"$idx/log")
-    log.agg(
+    spark.read.parquet(s"$idx/log").agg(
         count(lit(1)).as("n_triggers"),
         (count(when(col("phase") === "clean" && col("retrain_fired"), 1))
           === 0).as("clean_quiet"),
@@ -2367,10 +1466,8 @@ object StreamOps {
           .as("drift_fires_once"),
         (count(when(col("phase") === "post" && col("retrain_fired"), 1))
           === 0).as("post_quiet"))
-      .crossJoin(serving.agg(count(lit(1)).as("n_index"),
-        (count(lit(1)) === countDistinct(col("vec_id")))
-          .as("ids_unique")))
-      .crossJoin(served.agg(count(lit(1)).as("n_results")))
+      .crossJoin(indexStats(serving))
+      .crossJoin(nResults(served))
       .select(col("n_triggers"), col("clean_quiet"), col("drift_fires_once"),
         col("post_quiet"), col("n_index"), col("ids_unique"),
         col("n_results"))
@@ -2441,6 +1538,13 @@ object StreamOps {
     * driver-side maintenance pass. Serving still covers every row
     * exactly once.
     *
+    * `dieAfterRequest` (spec-only): simulate the driver dying in the
+    * exact window restart recovery exists for — AFTER the durable
+    * request record lands, BEFORE the retrain thread starts. The
+    * firing trigger then launches nothing; the NEXT trigger's re-arm
+    * must observe the pending record and launch from durable state,
+    * and every contract must come out identical to the healthy run.
+    *
     * STATUS: q86 is a declared oracle query, and its contract is the
     * INLINE handoff: the post trigger itself adopts the retrained model
     * and folds the whole gap synchronously (`switchIfReady`) — exactly
@@ -2456,256 +1560,117 @@ object StreamOps {
       spark: SparkSession, sfDir: String,
       postShifted: Boolean = false,
       dieAfterRequest: Boolean = false): DataFrame = {
-    // dieAfterRequest (spec-only): simulate the driver dying in the
-    // exact window restart recovery exists for — AFTER the durable
-    // request record lands, BEFORE the retrain thread starts. The
-    // firing trigger then launches nothing; the NEXT trigger's re-arm
-    // must observe the pending record and launch from durable state,
-    // and every contract must come out identical to the healthy run.
-    import graft.operators.{IndexDrift, ProductQuantizer}
-    import graft.queries.LlmOps
-    val e = graft.Tables.load(spark, sfDir, "embeddings")
-    val all = e.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding"))
-    val base = all.filter(!pmod(col("vec_id"), lit(10)).isin(8, 9))
-    val clean = all.filter(pmod(col("vec_id"), lit(10)) === 8)
-    // fresh-id offsets from the OBSERVED id span (the q84 discipline:
-    // a hard constant collides once the corpus outgrows it)
-    val idSpan = all.agg(max(col("vec_id"))).collect()(0).getLong(0) + 1
-    val driftSrc = IndexDrift
-      .shifted(all.filter(pmod(col("vec_id"), lit(10)) === 9),
-        "vec_id", "embedding")
-      .select((col("vec_id") + lit(idSpan)).as("vec_id"), col("embedding"))
+    import graft.operators.IndexDrift
+    val fx = new Fixture(spark, sfDir)
     val idx = graft.RunPaths.scratch(
       s"graft_q86_index_${graft.RunPaths.keyFor(sfDir)}" +
         (if (postShifted) "_ps" else ""))
     val mDir = s"$idx/model"
+    val sroot = s"$idx/switch"
+    // adopted-set membership is a listing; only the pointer reads a
+    // record — ONE 1-row read for the MAX switch, O(1) in history
+    def adoptedSwitches(): Seq[Long] = SwitchLog.adopted(spark, sroot)
+    def pointer(): (String, Long) = SwitchLog.pointer(spark, sroot)
+      .map { case (g, f) => (s"$idx/retrain/req=$g", f) }
+      .getOrElse((mDir, 0L))
+    def frozen(dir: String): Models =
+      models(spark, dir, "q86 frozen coarse-centroid table")
 
-    // ---- durable-state accessors (decisions derive ONLY from these) --
-    // adopted-set membership needs only the request IDS (a directory
-    // listing); only the serving pointer reads a record — ONE 1-row
-    // read for the MAX switch, O(1) in switch history (the r13 lead
-    // finding: reading every historical record made per-trigger driver
-    // cost grow with total retrains over the stream's lifetime)
-    def adoptedSwitches(): Seq[Long] = SwitchLog.adopted(spark, s"$idx/switch")
-    // serving pointer: the LAST switched retrain, else the base model
-    def pointer(): (String, Long) =
-      SwitchLog.pointer(spark, s"$idx/switch")
-        .map { case (g, f) => (s"$idx/retrain/req=$g", f) }
-        .getOrElse((mDir, 0L))
-    def frozenModels(dir: String): (DataFrame, DataFrame) =
-      (LlmOps.modelScaleStamp(spark.read.parquet(s"$dir/coarse"),
-        "q86 frozen coarse-centroid table"),
-        spark.read.parquet(s"$dir/books"))
-
-    // ---- the async retrain ------------------------------------------
-    // the shared async-handoff machine (see Handoff): durable request →
-    // job-group-detached pooled worker → done marker strictly after the
-    // retrained layout lands → restart re-arm. The worker's gate is
-    // delivery scaffolding: hold training until gen 4's trigger has
-    // fully COMPLETED (its log row is the trigger's LAST write), so
-    // both gap triggers provably compute their inflight flag while the
-    // worker is still open — production launches immediately (see doc).
-    val handoff = new Handoff(spark, s"$idx/req",
-      g => s"$idx/retrain/req=$g/_RETRAIN_DONE",
-      "graft-q86-retrain")({ (reqGen, _) =>
-      val gate = new java.io.File(s"$idx/log/gen=4/_SUCCESS")
-      val deadline = System.nanoTime() + 300L * 1000 * 1000 * 1000
-      while (!gate.exists()) {
-        if (System.nanoTime() > deadline)
-          throw new IllegalStateException(
-            "q86 retrain gate timed out waiting for gen 4")
-        Thread.sleep(100)
-      }
-      // snapshot = base + arrived raws up to the firing generation,
-      // all READ BACK from storage (persist-then-reread: the one
-      // bit-stable handoff for float model training)
-      val snapshot = (1L to reqGen)
-        .map(g => spark.read.parquet(s"$idx/arrived/gen=$g"))
-        .foldLeft(base)(_.unionByName(_))
-        .localCheckpoint(true)
-      LlmOps.buildFrozenIndex(spark, sfDir, snapshot,
-        s"$idx/retrain/req=$reqGen", "q86 retrained coarse-centroid table")
-      ()
-    })
-
-    // ---- the switch: fold gap generations, flip the pointer ----------
-    // idempotent (everything overwrite-keyed by req/gen), runnable from
-    // a trigger (atGen = the observing generation) or from the
-    // driver-side maintenance pass after the stream ends
+    // the gate holds training until gen 4's trigger has fully
+    // COMPLETED (its log row is the trigger's LAST write), so both gap
+    // triggers provably compute their inflight flag while the worker
+    // is still open — production launches immediately
+    val handoff = retrainHandoff(spark, sfDir, idx, fx.driftBase,
+      "graft-q86-retrain", "q86 retrained coarse-centroid table") { _ =>
+      awaitMarker(spark, s"$idx/log/gen=4/_SUCCESS", "q86 retrain gate",
+        MarkerTimeoutMs)
+    }
+    // the switch: re-encode the RAW gap batches (appended under the old
+    // model while the retrain ran) with the new frozen models, then the
+    // durable pointer flip LAST. Idempotent; runnable from a trigger
+    // (atGen = the observing generation) or the maintenance pass.
     def switchIfReady(atGen: Long): Unit = {
       handoff.adoptNewestReady(adoptedSwitches().toSet) { g =>
         val rdir = s"$idx/retrain/req=$g"
-        val (coarseR, booksR) = frozenModels(rdir)
-        // fold: re-encode the RAW gap batches (appended under the old
-        // model while the retrain ran) with the new frozen models
+        val mR = frozen(rdir)
         genDirs(spark, s"$idx/arrived", "gen=")
           .filter(gg => gg > g && gg < atGen)
           .foreach { gg =>
-            ProductQuantizer.ivfPqEncodeWith(
-                spark.read.parquet(s"$idx/arrived/gen=$gg"),
-                "vec_id", "embedding", HouseM, coarseR, booksR)
+            mR.encode(spark.read.parquet(s"$idx/arrived/gen=$gg"))
               .write.mode("overwrite").parquet(s"$rdir/fold/gen=$gg")
           }
-        // the durable pointer flip, LAST (persist-first ordering)
-        SwitchLog.write(spark, s"$idx/switch", g, atGen - 1, atGen)
+        SwitchLog.write(spark, sroot, g, atGen - 1, atGen)
       }
+      ()
     }
 
-    def drive(srcDir: String, phase: String, genOffset: Int): Unit = {
-      val schema = spark.read.parquet(srcDir).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val t0 = System.nanoTime()
-          val reads0 = SwitchLog.recordReads(s"$idx/switch")
-          val gen = genOffset + id + 1
-          // 1. persist the raw batch (the fold and any later retrain
-          //    read THIS, never the in-memory batch)
-          batch.select(col("vec_id"), col("embedding"))
-            .write.mode("overwrite").parquet(s"$idx/arrived/gen=$gen")
-          // 2. adopt a completed retrain before touching models: folds
-          //    strictly-earlier gens, so this batch encodes fresh
-          switchIfReady(gen)
-          // 3. append-first under the current pointer — the stream
-          //    never waits for training
-          val (ptr, _) = pointer()
-          val (coarseF, booksF) = frozenModels(ptr)
-          ProductQuantizer.ivfPqEncodeWith(
-              spark.read.parquet(s"$idx/arrived/gen=$gen"),
-              "vec_id", "embedding", HouseM, coarseF, booksF)
-            .write.mode("overwrite").parquet(s"$idx/append/gen=$gen")
-          // 4. PSI gate from STORED state (1-row statistic)
-          val psi = IndexDrift.occupancyPsiFromOccupancies(
-              spark.read.parquet(s"$ptr/base_occ"),
-              IndexDrift.occupancyOfCodes(
-                spark.read.parquet(s"$idx/append/gen=$gen")),
-              coarseF)
-            .select(col("psi")).collect()(0).getDouble(0)
-          val fired = psi > 0.75
-          // 5. fired → REQUEST (durable record, then the concurrent
-          //    worker); coalesce if an earlier request is still open
-          val pendingBefore = handoff.requests()
-            .filterNot(adoptedSwitches().toSet).filter(_ < gen)
-          // restart recovery, not just documentation: a pending request
-          // whose worker died with a previous driver re-arms here — a
-          // no-op on every healthy trigger (the Handoff's launched
-          // set), a re-launch exactly when durable state says a request
-          // exists with no done marker
-          handoff.rearm(pendingBefore)
-          val requested = fired && pendingBefore.isEmpty
-          if (requested) {
-            // the simulated death leaves exactly the crash-window state
-            // (record durable, no worker) for the drifted trigger's
-            // request — recovery picks it up above
-            val rec = spark.range(1).select(lit(gen).as("gen"))
-            if (dieAfterRequest && gen == 2) handoff.submitRecord(gen, rec)
-            else handoff.submit(gen, rec)
-          }
-          // 6. durable per-generation log row, written LAST — `ms` is
-          //    the trigger's whole synchronous cost (what a 100 TB
-          //    stream pays per micro-batch while a retrain runs
-          //    concurrently), and `ptr_reads` the switch-RECORD reads
-          //    this trigger issued (the O(1)-in-history probe;
-          //    contract-asserted ≤ 1)
-          spark.range(1)
-            .select(lit(gen).as("gen"), lit(phase).as("phase"),
-              lit(fired).as("retrain_fired"),
-              lit(requested).as("retrain_requested"),
-              lit(pendingBefore.nonEmpty).as("inflight"),
-              lit(ptr != mDir).as("on_retrained"),
-              lit(SwitchLog.recordReads(s"$idx/switch") - reads0)
-                .as("ptr_reads"),
-              lit((System.nanoTime() - t0) / 1000000L).as("ms"))
-            .write.mode("overwrite").parquet(s"$idx/log/gen=$gen")
-          ()
+    def phase(srcDir: String, phase: String, genOffset: Int): Unit =
+      drive(spark, srcDir) { (batch, id) =>
+        val t0 = System.nanoTime()
+        val reads0 = SwitchLog.recordReads(sroot)
+        val gen = genOffset + id + 1
+        // 1. persist the raw batch (the fold and any later retrain read
+        //    THIS, never the in-memory batch)
+        batch.select(col("vec_id"), col("embedding"))
+          .write.mode("overwrite").parquet(s"$idx/arrived/gen=$gen")
+        // 2. adopt a completed retrain before touching models
+        switchIfReady(gen)
+        // 3. append-first under the current pointer
+        val (ptr, _) = pointer()
+        val mP = frozen(ptr)
+        mP.encode(spark.read.parquet(s"$idx/arrived/gen=$gen"))
+          .write.mode("overwrite").parquet(s"$idx/append/gen=$gen")
+        // 4. PSI gate from STORED state
+        val fired = psiFires(spark, ptr,
+          spark.read.parquet(s"$idx/append/gen=$gen"), mP.coarse)
+        // 5. fired → REQUEST, coalesced while an earlier one is open;
+        //    re-arm first (restart recovery: no-op on healthy triggers)
+        val pendingBefore = handoff.requests()
+          .filterNot(adoptedSwitches().toSet).filter(_ < gen)
+        handoff.rearm(pendingBefore)
+        val requested = fired && pendingBefore.isEmpty
+        if (requested) {
+          val rec = spark.range(1).select(lit(gen).as("gen"))
+          if (dieAfterRequest && gen == 2) handoff.submitRecord(gen, rec)
+          else handoff.submit(gen, rec)
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
+        // 6. log row LAST — `ms` is the trigger's whole synchronous
+        //    cost, `ptr_reads` its switch-record reads (asserted ≤ 1)
+        logRow(spark, idx, gen, lit(phase).as("phase"),
+          lit(fired).as("retrain_fired"),
+          lit(requested).as("retrain_requested"),
+          lit(pendingBefore.nonEmpty).as("inflight"),
+          lit(ptr != mDir).as("on_retrained"),
+          lit(SwitchLog.recordReads(sroot) - reads0).as("ptr_reads"),
+          lit((System.nanoTime() - t0) / 1000000L).as("ms"))
+      }
 
-    // wipe durable state from any PRIOR run of this query in the same
-    // process (scratch paths are per-sfDir): the pointer is log-derived
-    Seq("log", "req", "retrain", "switch", "arrived", "append")
-      .foreach(d => wipeDir(new java.io.File(s"$idx/$d")))
-
-    // offline build over base: the shared persist-first frozen layout
-    LlmOps.buildFrozenIndex(spark, sfDir, base, mDir,
+    wipe(idx, "log", "req", "retrain", "switch", "arrived", "append")
+    LlmOps.buildFrozenIndex(spark, sfDir, fx.driftBase, mDir,
       "q86 frozen coarse-centroid table")
-
-    // gen 1: one clean batch (ids ≡ 8 mod 30 — non-empty from 3 rows up)
-    val cleanDir = s"$idx/src/clean"
-    clean.filter(pmod(col("vec_id"), lit(30)) === 8)
-      .coalesce(1).write.mode("overwrite").parquet(cleanDir)
-    drive(cleanDir, "clean", genOffset = 0)
-    // gen 2: the drifted batch — fires, REQUESTS, keeps streaming
-    val driftDir = s"$idx/src/drift"
-    driftSrc.coalesce(1).write.mode("overwrite").parquet(driftDir)
-    drive(driftDir, "drift", genOffset = 1)
-    // gens 3-4: clean batches landing WHILE the retrain runs (the
-    // thread is gated on gen 4's trigger completing, so the overlap is
-    // structural)
-    val gapDir = s"$idx/src/gap"
-    for ((r, i) <- Seq(18, 28).zipWithIndex)
-      clean.filter(pmod(col("vec_id"), lit(30)) === r)
-        .coalesce(1)
-        .write.mode(if (i == 0) "overwrite" else "append").parquet(gapDir)
-    drive(gapDir, "gap", genOffset = 2)
-    // the handoff: wait for the retrain to LAND (sequencing only — the
-    // stream above already proved it keeps appending while training)
+    phase(writePhase(s"$idx/src/clean", Seq(residue(fx.clean, 30, 8))),
+      "clean", genOffset = 0)
+    phase(writePhase(s"$idx/src/drift", Seq(fx.driftSrc)), "drift", genOffset = 1)
+    phase(writePhase(s"$idx/src/gap", Seq(18, 28).map(residue(fx.clean, 30, _))),
+      "gap", genOffset = 2)
+    // sequencing only: the stream above already proved it keeps
+    // appending while training
     handoff.joinAll()
-    // gen 5: a fresh-id copy of the merged corpus — the switching
-    // trigger folds gens 3-4 and appends quietly on the retrained index
-    // (postShifted: shifted AGAIN — must fire a SECOND request)
-    val postDir = s"$idx/src/post"
-    val mergedCopy = base.unionByName(clean).unionByName(driftSrc)
-    (if (postShifted)
-       IndexDrift.shifted(mergedCopy, "vec_id", "embedding")
-     else mergedCopy)
-      .select((col("vec_id") + lit(2 * idSpan)).as("vec_id"), col("embedding"))
-      .coalesce(1).write.mode("overwrite").parquet(postDir)
-    drive(postDir, "post", genOffset = 4)
+    val post = if (postShifted)
+      IndexDrift.shifted(fx.mergedCopy, "vec_id", "embedding") else fx.mergedCopy
+    phase(writePhase(s"$idx/src/post", Seq(fx.offset(post, 2))), "post", genOffset = 4)
     // maintenance pass: adopt any retrain that completed after the
     // last trigger (the postShifted second fire lands here)
     handoff.joinAll()
-    val maxGen = genDirs(spark, s"$idx/arrived", "gen=").max
-    switchIfReady(maxGen + 1)
+    switchIfReady(genDirs(spark, s"$idx/arrived", "gen=").max + 1)
 
-    // ---- serving state, derived from the same durable records --------
     val (ptr, foldedThrough) = pointer()
-    val folds = genDirs(spark, s"$ptr/fold", "gen=")
-    val foldCodes = folds.map(g =>
-      codeCols(spark.read.parquet(s"$ptr/fold/gen=$g")))
-    val appendsAfter = genDirs(spark, s"$idx/append", "gen=")
-      .filter(_ > foldedThrough)
-    val appendCodes = appendsAfter.map(g =>
-      codeCols(spark.read.parquet(s"$idx/append/gen=$g")))
-    val serving = (foldCodes ++ appendCodes)
-      .foldLeft(codeCols(spark.read.parquet(s"$ptr/codes/gen=0")))(
-        _.unionByName(_))
-    // one-shot comparison: everything past the retrain snapshot,
-    // re-encoded in ONE batch under the same persisted models — the
-    // fold + post-switch-append plumbing must be invisible to queries
+    val serving = pointerServing(spark, ptr, s"$idx/append", foldedThrough)
+    val mP = frozen(ptr)
     val snapGen = adoptedSwitches().maxOption.getOrElse(0L)
-    val lateGens = genDirs(spark, s"$idx/arrived", "gen=").filter(_ > snapGen)
-    val (coarseP, booksP) = frozenModels(ptr)
-    val oneShot = lateGens
-      .map(g => spark.read.parquet(s"$idx/arrived/gen=$g"))
-      .reduceOption(_.unionByName(_))
-      .map(raws => codeCols(spark.read.parquet(s"$ptr/codes/gen=0"))
-        .unionByName(codeCols(ProductQuantizer.ivfPqEncodeWith(
-          raws, "vec_id", "embedding", HouseM, coarseP, booksP))))
-      .getOrElse(codeCols(spark.read.parquet(s"$ptr/codes/gen=0")))
-    val same = sameCodeRows(serving, oneShot, "same_as_oneshot_fold")
-    val query = e.filter(col("vec_id") === 0).select(col("embedding")).limit(1)
-    val served = ProductQuantizer.ivfPqTopK(
-      query, "embedding", HouseM, coarseP, booksP, serving, "vec_id",
-      nProbe = 4, k = 10)
-
-    val log = spark.read.parquet(s"$idx/log")
-    log.agg(
+    val oneShotCodes = oneShot(spark, ptr, genDirs(spark, s"$idx/arrived", "gen=")
+      .filter(_ > snapGen).map(g => s"$idx/arrived/gen=$g"), mP)
+    spark.read.parquet(s"$idx/log").agg(
         count(lit(1)).as("n_triggers"),
         (count(when(col("phase").isin("clean", "gap") &&
           col("retrain_fired"), 1)) === 0).as("clean_quiet"),
@@ -2719,13 +1684,10 @@ object StreamOps {
           === 0).as("post_on_retrained"),
         (count(when(col("phase") === "post" && col("retrain_fired"), 1))
           === 0).as("post_quiet"),
-        // O(1)-in-history: no trigger may read more than ONE switch
-        // record, no matter how many retrains the stream has adopted
         (max(col("ptr_reads")) <= 1).as("ptr_reads_bounded"))
-      .crossJoin(serving.agg(count(lit(1)).as("n_index"),
-        (count(lit(1)) === countDistinct(col("vec_id"))).as("ids_unique")))
-      .crossJoin(same)
-      .crossJoin(served.agg(count(lit(1)).as("n_results")))
+      .crossJoin(indexStats(serving))
+      .crossJoin(sameCodeRows(serving, oneShotCodes, "same_as_oneshot_fold"))
+      .crossJoin(nResults(mP.topK(fx.query, serving)))
       .select(col("n_triggers"), col("clean_quiet"), col("drift_fires_once"),
         col("gaps_inflight"), col("post_on_retrained"), col("post_quiet"),
         col("ptr_reads_bounded"),
@@ -2824,232 +1786,100 @@ object StreamOps {
   def streamIndexRetrainFoldAsync(
       spark: SparkSession, sfDir: String,
       postShifted: Boolean = false): DataFrame = {
-    import graft.operators.{IndexDrift, ProductQuantizer}
-    import graft.queries.LlmOps
-    val e = graft.Tables.load(spark, sfDir, "embeddings")
-    val all = e.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding"))
-    val base = all.filter(!pmod(col("vec_id"), lit(10)).isin(8, 9))
-    val clean = all.filter(pmod(col("vec_id"), lit(10)) === 8)
-    val idSpan = all.agg(max(col("vec_id"))).collect()(0).getLong(0) + 1
-    val driftSrc = IndexDrift
-      .shifted(all.filter(pmod(col("vec_id"), lit(10)) === 9),
-        "vec_id", "embedding")
-      .select((col("vec_id") + lit(idSpan)).as("vec_id"), col("embedding"))
+    import graft.operators.IndexDrift
+    val fx = new Fixture(spark, sfDir)
     val idx = graft.RunPaths.scratch(
       s"graft_q90_index_${graft.RunPaths.keyFor(sfDir)}" +
         (if (postShifted) "_ps" else ""))
     val mDir = s"$idx/model"
-
-    // ---- the retrain handoff + the canonical fold machine ------------
-    // durable-state accessors live in FoldMachine/SwitchLog: adopted-set
-    // membership from the directory listing, the serving pointer from
-    // ONE 1-row record read (O(1) in switch history — the r13 lead fix)
-    val retrainH = new Handoff(spark, s"$idx/req",
-      g => s"$idx/retrain/req=$g/_RETRAIN_DONE",
-      "graft-q90-retrain")({ (reqGen, _) =>
-      // delivery gate: both gap triggers must log inflight first
-      val gate = new java.io.File(s"$idx/log/gen=4/_SUCCESS")
-      val deadline = System.nanoTime() + 300L * 1000 * 1000 * 1000
-      while (!gate.exists()) {
-        if (System.nanoTime() > deadline)
-          throw new IllegalStateException(
-            "q90 retrain gate timed out waiting for gen 4")
-        Thread.sleep(100)
-      }
-      val snapshot = (1L to reqGen)
-        .map(g => spark.read.parquet(s"$idx/arrived/gen=$g"))
-        .foldLeft(base)(_.unionByName(_))
-        .localCheckpoint(true)
-      LlmOps.buildFrozenIndex(spark, sfDir, snapshot,
-        s"$idx/retrain/req=$reqGen", "q90 retrained coarse-centroid table")
-      ()
-    })
-    // THE canonical serving-path state machine (fold worker + the
-    // maintain() seal/re-arm/adopt decision + the SwitchLog pointer) —
-    // shared with FoldMachineSpec's synthetic-state cases; q86's inline
-    // switch stays only as q86's declared contract
+    // delivery gate: both gap triggers must log inflight first
+    val retrainH = retrainHandoff(spark, sfDir, idx, fx.driftBase,
+      "graft-q90-retrain", "q90 retrained coarse-centroid table") { _ =>
+      awaitMarker(spark, s"$idx/log/gen=4/_SUCCESS", "q90 retrain gate",
+        MarkerTimeoutMs)
+    }
     val fm = new FoldMachine(spark, idx, retrainH, "graft-q90-fold",
       "q90 frozen coarse-centroid table")
-    def frozenModels(dir: String): (DataFrame, DataFrame) =
-      fm.frozenModels(dir)
 
-    def drive(srcDir: String, phase: String, genOffset: Int): Unit = {
-      val schema = spark.read.parquet(srcDir).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val t0 = System.nanoTime()
-          val reads0 = fm.recordReads()
-          val gen = genOffset + id + 1
-          // 1. persist the raw batch (folds and retrains read THIS)
-          batch.select(col("vec_id"), col("embedding"))
-            .write.mode("overwrite").parquet(s"$idx/arrived/gen=$gen")
-          // 2. fold/adopt state machine — O(batch) at most (a request
-          //    or one switch write); the re-encode itself is fm.foldH's
-          val (foldRequested, foldInflight, adopted) = fm.maintain(gen)
-          // 3. append under the CURRENT pointer (old until adopted —
-          //    serving stays internally consistent under one model)
-          val (ptr, _) = fm.pointer(mDir)
-          val (coarseF, booksF) = frozenModels(ptr)
-          ProductQuantizer.ivfPqEncodeWith(
-              spark.read.parquet(s"$idx/arrived/gen=$gen"),
-              "vec_id", "embedding", HouseM, coarseF, booksF)
-            .write.mode("overwrite").parquet(s"$idx/append/gen=$gen")
-          // 4. PSI gate from STORED state (1-row statistic)
-          val psi = IndexDrift.occupancyPsiFromOccupancies(
-              spark.read.parquet(s"$ptr/base_occ"),
-              IndexDrift.occupancyOfCodes(
-                spark.read.parquet(s"$idx/append/gen=$gen")),
-              coarseF)
-            .select(col("psi")).collect()(0).getDouble(0)
-          val fired = psi > 0.75
-          // 5. fired → retrain REQUEST (coalesced while one is open);
-          //    membership is the same threshold maintain() uses (req >
-          //    max live adopted — sound because adoption order follows
-          //    request order and the newest switch is never archived),
-          //    from the listing alone, no record reads
-          val maxAd = fm.adopted().maxOption.getOrElse(Long.MinValue)
-          val pendingR = retrainH.requests()
-            .filter(r => r > maxAd && r < gen)
-          retrainH.rearm(pendingR)
-          val requested = fired && pendingR.isEmpty
-          if (requested)
-            retrainH.submit(gen, spark.range(1).select(lit(gen).as("gen")))
-          // 6. durable log row, LAST (ms = whole synchronous cost;
-          //    ptr_reads = switch-record reads this trigger issued —
-          //    the O(1)-in-history probe, contract-asserted ≤ 1)
-          spark.range(1)
-            .select(lit(gen).as("gen"), lit(phase).as("phase"),
-              lit(fired).as("retrain_fired"),
-              lit(requested).as("retrain_requested"),
-              lit(pendingR.nonEmpty && !retrainH.isDone(
-                pendingR.headOption.getOrElse(-1L))).as("retrain_inflight"),
-              lit(foldRequested).as("fold_requested"),
-              lit(foldInflight).as("fold_inflight"),
-              lit(adopted).as("adopted"),
-              lit(ptr != mDir).as("on_retrained"),
-              lit(fm.recordReads() - reads0).as("ptr_reads"),
-              lit((System.nanoTime() - t0) / 1000000L).as("ms"))
-            .write.mode("overwrite").parquet(s"$idx/log/gen=$gen")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    def phase(srcDir: String, phase: String, genOffset: Int): Unit =
+      drive(spark, srcDir) { (batch, id) =>
+        val t0 = System.nanoTime()
+        val reads0 = fm.recordReads()
+        val gen = genOffset + id + 1
+        // 1. persist the raw batch (folds and retrains read THIS)
+        batch.select(col("vec_id"), col("embedding"))
+          .write.mode("overwrite").parquet(s"$idx/arrived/gen=$gen")
+        // 2. fold/adopt state machine — a request or one switch write
+        val (foldRequested, foldInflight, adopted) = fm.maintain(gen)
+        // 3. append under the CURRENT pointer (old until adopted)
+        val (ptr, _) = fm.pointer(mDir)
+        val mP = fm.frozenModels(ptr)
+        mP.encode(spark.read.parquet(s"$idx/arrived/gen=$gen"))
+          .write.mode("overwrite").parquet(s"$idx/append/gen=$gen")
+        // 4. PSI gate from STORED state
+        val fired = psiFires(spark, ptr,
+          spark.read.parquet(s"$idx/append/gen=$gen"), mP.coarse)
+        // 5. fired → retrain REQUEST, coalesced while one is open;
+        //    membership is maintain()'s threshold (req > max adopted),
+        //    from the listing alone
+        val maxAd = fm.adopted().maxOption.getOrElse(Long.MinValue)
+        val pendingR = retrainH.requests().filter(r => r > maxAd && r < gen)
+        retrainH.rearm(pendingR)
+        val requested = fired && pendingR.isEmpty
+        if (requested)
+          retrainH.submit(gen, spark.range(1).select(lit(gen).as("gen")))
+        // 6. log row LAST
+        logRow(spark, idx, gen, lit(phase).as("phase"),
+          lit(fired).as("retrain_fired"),
+          lit(requested).as("retrain_requested"),
+          lit(pendingR.nonEmpty && !retrainH.isDone(
+            pendingR.headOption.getOrElse(-1L))).as("retrain_inflight"),
+          lit(foldRequested).as("fold_requested"),
+          lit(foldInflight).as("fold_inflight"),
+          lit(adopted).as("adopted"),
+          lit(ptr != mDir).as("on_retrained"),
+          lit(fm.recordReads() - reads0).as("ptr_reads"),
+          lit((System.nanoTime() - t0) / 1000000L).as("ms"))
+      }
 
-    // wipe durable state from any PRIOR run in this process
-    Seq("log", "req", "fold_req", "retrain", "switch", "arrived", "append")
-      .foreach(d => wipeDir(new java.io.File(s"$idx/$d")))
-    LlmOps.buildFrozenIndex(spark, sfDir, base, mDir,
+    wipe(idx, "log", "req", "fold_req", "retrain", "switch", "arrived", "append")
+    LlmOps.buildFrozenIndex(spark, sfDir, fx.driftBase, mDir,
       "q90 frozen coarse-centroid table")
+    phase(writePhase(s"$idx/src/clean", Seq(residue(fx.clean, 30, 8))),
+      "clean", genOffset = 0)
+    phase(writePhase(s"$idx/src/drift", Seq(fx.driftSrc)), "drift", genOffset = 1)
+    phase(writePhase(s"$idx/src/gap", Seq(18, 28).map(residue(fx.clean, 30, _))),
+      "gap", genOffset = 2)
+    fm.joinAll()
+    // fold phase A: gen 5 requests fold #1, gen 6 appends WHILE it
+    // folds; fresh-id full-clean copies keep the PSI gate quiet
+    phase(writePhase(s"$idx/src/fold_a", Seq(4L, 5L).map(fx.offset(fx.clean, _))),
+      "fold", genOffset = 4)
+    fm.joinAll()
+    // fold phase B: observes fold #1 done, seals the residual {6, 7}
+    phase(writePhase(s"$idx/src/fold_b", Seq(fx.offset(fx.clean, 6))),
+      "fold", genOffset = 6)
+    fm.joinAll()
+    // post: observes fold #2 done, residual empty → ADOPTS
+    phase(writePhase(s"$idx/src/post", Seq(fx.offset(fx.mergedCopy, 2))),
+      "post", genOffset = 7)
+    // cycle 2, LIVE: a drifted gen 9 fires a second retrain against the
+    // adopted pointer; the belt must adopt it WITHOUT folding
+    if (postShifted)
+      phase(writePhase(s"$idx/src/post2", Seq(fx.offset(
+          IndexDrift.shifted(fx.mergedCopy, "vec_id", "embedding"), 7))),
+        "post2", genOffset = 8)
+    // maintenance pass: nothing pending in the healthy schedule; the
+    // restart shapes Handoff advertises may need a re-arm, seal, adopt
+    fm.settle(genDirs(spark, s"$idx/arrived", "gen=").max + 1)
 
-    // gen 1: one clean batch (ids ≡ 8 mod 30)
-    val cleanDir = s"$idx/src/clean"
-    clean.filter(pmod(col("vec_id"), lit(30)) === 8)
-      .coalesce(1).write.mode("overwrite").parquet(cleanDir)
-    drive(cleanDir, "clean", genOffset = 0)
-    // gen 2: the drifted batch — fires, REQUESTS, keeps streaming
-    val driftDir = s"$idx/src/drift"
-    driftSrc.coalesce(1).write.mode("overwrite").parquet(driftDir)
-    drive(driftDir, "drift", genOffset = 1)
-    // gens 3-4: clean batches WHILE the retrain runs
-    val gapDir = s"$idx/src/gap"
-    for ((r, i) <- Seq(18, 28).zipWithIndex)
-      clean.filter(pmod(col("vec_id"), lit(30)) === r)
-        .coalesce(1)
-        .write.mode(if (i == 0) "overwrite" else "append").parquet(gapDir)
-    drive(gapDir, "gap", genOffset = 2)
-    fm.joinAll()
-    // gens 5-6: fold phase A — gen 5 requests fold #1 (seals 3..5),
-    // gen 6 appends WHILE it folds; fresh-id full-clean copies keep
-    // the PSI gate quiet on the old pointer
-    val foldADir = s"$idx/src/fold_a"
-    for ((off, i) <- Seq(4L, 5L).zipWithIndex)
-      clean.select((col("vec_id") + lit(off * idSpan)).as("vec_id"),
-          col("embedding"))
-        .coalesce(1)
-        .write.mode(if (i == 0) "overwrite" else "append").parquet(foldADir)
-    drive(foldADir, "fold", genOffset = 4)
-    fm.joinAll()
-    // gen 7: fold phase B — observes fold #1 done, seals the residual
-    // {6, 7} into fold #2
-    val foldBDir = s"$idx/src/fold_b"
-    clean.select((col("vec_id") + lit(6L * idSpan)).as("vec_id"),
-        col("embedding"))
-      .coalesce(1).write.mode("overwrite").parquet(foldBDir)
-    drive(foldBDir, "fold", genOffset = 6)
-    fm.joinAll()
-    // gen 8: post — observes fold #2 done, residual empty → ADOPTS,
-    // encodes itself under the new pointer, appends quietly
-    val postDir = s"$idx/src/post"
-    base.unionByName(clean).unionByName(driftSrc)
-      .select((col("vec_id") + lit(2 * idSpan)).as("vec_id"),
-        col("embedding"))
-      .coalesce(1).write.mode("overwrite").parquet(postDir)
-    drive(postDir, "post", genOffset = 7)
-    if (postShifted) {
-      // cycle 2, LIVE: a drifted gen 9 fires a second retrain against
-      // the adopted pointer; the belt below must adopt it WITHOUT
-      // folding (its snapshot covers gens 1-9), with the stale
-      // cycle-1 fold requests still on disk — the ADVICE-a scenario
-      val post2Dir = s"$idx/src/post2"
-      IndexDrift.shifted(base.unionByName(clean).unionByName(driftSrc),
-          "vec_id", "embedding")
-        .select((col("vec_id") + lit(7 * idSpan)).as("vec_id"),
-          col("embedding"))
-        .coalesce(1).write.mode("overwrite").parquet(post2Dir)
-      drive(post2Dir, "post2", genOffset = 8)
-    }
-    // maintenance pass: nothing pending in the healthy schedule (the
-    // adoption happened in-stream at gen 8); idempotent belt. Loop
-    // join+maintain until the machine reports QUIET — a single fixed
-    // number of rounds would leave a freshly re-armed or freshly
-    // sealed fold un-joined (its pointer un-flipped, its daemon
-    // worker's failure swallowed) in the restart shapes Handoff
-    // advertises; each round either re-arms, seals, adopts, or is the
-    // terminal no-op, so the loop is bounded by design (belt at 8)
-    val maxGenAll = genDirs(spark, s"$idx/arrived", "gen=").max
-    var quiet = false
-    var beltRounds = 0
-    while (!quiet && beltRounds < 8) {
-      fm.joinAll()
-      val (req, inflight, adopted) = fm.maintain(maxGenAll + 1)
-      quiet = !req && !inflight && !adopted
-      beltRounds += 1
-    }
-    fm.joinAll()
-
-    // ---- serving state, derived from the same durable records --------
     val (ptr, foldedThrough) = fm.pointer(mDir)
-    val foldCodes = genDirs(spark, s"$ptr/fold", "gen=").map(g =>
-      codeCols(spark.read.parquet(s"$ptr/fold/gen=$g")))
-    val appendCodes = genDirs(spark, s"$idx/append", "gen=")
-      .filter(_ > foldedThrough).map(g =>
-        codeCols(spark.read.parquet(s"$idx/append/gen=$g")))
-    val serving = (foldCodes ++ appendCodes)
-      .foldLeft(codeCols(spark.read.parquet(s"$ptr/codes/gen=0")))(
-        _.unionByName(_))
+    val serving = pointerServing(spark, ptr, s"$idx/append", foldedThrough)
+    val mP = fm.frozenModels(ptr)
     val snapGen = fm.adopted().maxOption.getOrElse(0L)
-    val lateGens = genDirs(spark, s"$idx/arrived", "gen=").filter(_ > snapGen)
-    val (coarseP, booksP) = frozenModels(ptr)
-    val oneShot = lateGens
-      .map(g => spark.read.parquet(s"$idx/arrived/gen=$g"))
-      .reduceOption(_.unionByName(_))
-      .map(raws => codeCols(spark.read.parquet(s"$ptr/codes/gen=0"))
-        .unionByName(codeCols(ProductQuantizer.ivfPqEncodeWith(
-          raws, "vec_id", "embedding", HouseM, coarseP, booksP))))
-      .getOrElse(codeCols(spark.read.parquet(s"$ptr/codes/gen=0")))
-    val same = sameCodeRows(serving, oneShot, "same_as_oneshot_fold")
-    val query = e.filter(col("vec_id") === 0).select(col("embedding")).limit(1)
-    val served = ProductQuantizer.ivfPqTopK(
-      query, "embedding", HouseM, coarseP, booksP, serving, "vec_id",
-      nProbe = 4, k = 10)
-
-    val log = spark.read.parquet(s"$idx/log")
-    log.agg(
+    val oneShotCodes = oneShot(spark, ptr, genDirs(spark, s"$idx/arrived", "gen=")
+      .filter(_ > snapGen).map(g => s"$idx/arrived/gen=$g"), mP)
+    spark.read.parquet(s"$idx/log").agg(
         count(lit(1)).as("n_triggers"),
         (count(when(col("phase").isin("clean", "gap", "fold") &&
           col("retrain_fired"), 1)) === 0).as("clean_quiet"),
@@ -3068,22 +1898,17 @@ object StreamOps {
           === 0).as("post_on_retrained"),
         (count(when(col("phase") === "post" && col("retrain_fired"), 1))
           === 0).as("post_quiet"),
-        // O(1)-in-history, stated as the invariant PAIR that survives
-        // any number of adoptions: a QUIET trigger reads at most ONE
-        // switch record (the pointer), and an ADOPTING trigger at most
-        // three (pointer + the amortized-O(1) archival consolidation —
-        // prior checkpoint + the records being archived, each a
-        // once-per-adoption job). A flat max ≤ 1 would hold only while
-        // the stream has at most keepSwitches adoptions, i.e. it would
-        // be a property of this fixture, not of the design
+        // O(1)-in-history as the invariant PAIR that survives any
+        // number of adoptions: a QUIET trigger reads at most ONE switch
+        // record (the pointer), an ADOPTING trigger at most three
+        // (pointer + the amortized-O(1) archival consolidation)
         (coalesce(max(when(!col("adopted"), col("ptr_reads"))), lit(0L))
           <= 1 &&
           coalesce(max(when(col("adopted"), col("ptr_reads"))), lit(0L))
           <= 3).as("ptr_reads_bounded"))
-      .crossJoin(serving.agg(count(lit(1)).as("n_index"),
-        (count(lit(1)) === countDistinct(col("vec_id"))).as("ids_unique")))
-      .crossJoin(same)
-      .crossJoin(served.agg(count(lit(1)).as("n_results")))
+      .crossJoin(indexStats(serving))
+      .crossJoin(sameCodeRows(serving, oneShotCodes, "same_as_oneshot_fold"))
+      .crossJoin(nResults(mP.topK(fx.query, serving)))
       .select(col("n_triggers"), col("clean_quiet"), col("drift_fires_once"),
         col("gaps_inflight"), col("n_fold_requests"),
         col("n_gens_during_fold"), col("old_pointer_until_adopted"),
@@ -3096,7 +1921,7 @@ object StreamOps {
   /** The as-of reconstruction shared by q93 ([[indexServeAsOf]]) and
     * q94 ([[indexSwitchArchive]]) — extracted because the next change
     * to the reconstruction protocol must have exactly one place to
-    * land (the publishEpoch lesson): resolve the switch active as of
+    * land (the `EpochFamily.publish` lesson): resolve the switch active as of
     * generation `g` from the durable log (the probe-counted AUDIT
     * path), then serving = that pointer's snapshot codes ∪ the appends
     * in `(folded_through, g]` — each of which was encoded under this
@@ -3108,8 +1933,6 @@ object StreamOps {
   private def asOfReconstruction(
       spark: SparkSession, idx: String, mDir: String, stampMsg: String,
       g: Long): (DataFrame, DataFrame, String, Long) = {
-    import graft.operators.ProductQuantizer
-    import graft.queries.LlmOps
     val sroot = s"$idx/switch"
     val reads0 = SwitchLog.recordReads(sroot)
     val p = SwitchLog.pointerAsOf(spark, sroot, g)
@@ -3122,17 +1945,10 @@ object StreamOps {
       .map(gg => codeCols(spark.read.parquet(s"$idx/append/gen=$gg")))
       .foldLeft(codeCols(spark.read.parquet(s"$pd/codes/gen=0")))(
         _.unionByName(_))
-    val cF = LlmOps.modelScaleStamp(
-      spark.read.parquet(s"$pd/coarse"), stampMsg)
-    val bF = spark.read.parquet(s"$pd/books")
-    val oneShot = (folded + 1 to g)
-      .map(gg => spark.read.parquet(s"$idx/arrived/gen=$gg"))
-      .reduceOption(_.unionByName(_))
-      .map(raws => codeCols(spark.read.parquet(s"$pd/codes/gen=0"))
-        .unionByName(codeCols(ProductQuantizer.ivfPqEncodeWith(
-          raws, "vec_id", "embedding", HouseM, cF, bF))))
-      .getOrElse(codeCols(spark.read.parquet(s"$pd/codes/gen=0")))
-    (serving, oneShot, pd, auditReads)
+    val oneShotCodes = oneShot(spark, pd,
+      (folded + 1 to g).map(gg => s"$idx/arrived/gen=$gg"),
+      models(spark, pd, stampMsg))
+    (serving, oneShotCodes, pd, auditReads)
   }
 
   /** TIME-TRAVEL serving from the durable switch log — the payoff of
@@ -3168,24 +1984,14 @@ object StreamOps {
     * G=6 reconstruction.
     */
   def indexServeAsOf(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.operators.ProductQuantizer
-    import graft.queries.LlmOps
-    val e = graft.Tables.load(spark, sfDir, "embeddings")
-    val all = e.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding"))
-    val base = all.filter(!pmod(col("vec_id"), lit(10)).isin(8, 9))
-    val clean = all.filter(pmod(col("vec_id"), lit(10)) === 8)
+    val fx = new Fixture(spark, sfDir)
     val idx = graft.RunPaths.scratch(
       s"graft_q93_index_${graft.RunPaths.keyFor(sfDir)}")
     val mDir = s"$idx/model"
-    Seq("arrived", "append", "switch", "retrain", "model")
-      .foreach(d => wipeDir(new java.io.File(s"$idx/$d")))
+    wipe(idx, "arrived", "append", "switch", "retrain", "model")
     val sroot = s"$idx/switch"
-
-    def models(dir: String) =
-      (LlmOps.modelScaleStamp(spark.read.parquet(s"$dir/coarse"),
-        "q93 frozen coarse-centroid table"),
-        spark.read.parquet(s"$dir/books"))
+    def frozen(dir: String) =
+      models(spark, dir, "q93 frozen coarse-centroid table")
     def ptrDir(p: Option[(Long, Long)]): (String, Long) =
       p.map { case (r, f) => (s"$idx/retrain/req=$r", f) }.getOrElse((mDir, 0L))
 
@@ -3193,26 +1999,23 @@ object StreamOps {
     // raw persisted first; a retrain adopted AT gens 3 and 6 (snapshot
     // read back from the raws — persist-then-reread); every append
     // encoded under the pointer active at its own generation
-    LlmOps.buildFrozenIndex(spark, sfDir, base, mDir,
+    LlmOps.buildFrozenIndex(spark, sfDir, fx.driftBase, mDir,
       "q93 frozen coarse-centroid table", withOccupancy = false)
     for (g <- 1L to 6L) {
-      clean.filter(pmod(col("vec_id"), lit(60)) === 8 + 10 * (g - 1))
+      residue(fx.clean, 60, 8 + 10 * (g - 1))
         .write.mode("overwrite").parquet(s"$idx/arrived/gen=$g")
       if (g == 3L || g == 6L) {
         val rr = g - 1 // the retrain "requested" at the previous gen
         val snapshot = (1L to rr)
           .map(gg => spark.read.parquet(s"$idx/arrived/gen=$gg"))
-          .foldLeft(base)(_.unionByName(_)).localCheckpoint(true)
+          .foldLeft(fx.driftBase)(_.unionByName(_)).localCheckpoint(true)
         LlmOps.buildFrozenIndex(spark, sfDir, snapshot,
           s"$idx/retrain/req=$rr", "q93 frozen coarse-centroid table",
           withOccupancy = false)
         SwitchLog.write(spark, sroot, rr, foldedThrough = rr, atGen = g)
       }
       val (pd, _) = ptrDir(SwitchLog.pointer(spark, sroot))
-      val (cF, bF) = models(pd)
-      ProductQuantizer.ivfPqEncodeWith(
-          spark.read.parquet(s"$idx/arrived/gen=$g"),
-          "vec_id", "embedding", HouseM, cF, bF)
+      frozen(pd).encode(spark.read.parquet(s"$idx/arrived/gen=$g"))
         .write.mode("overwrite").parquet(s"$idx/append/gen=$g")
     }
 
@@ -3227,23 +2030,19 @@ object StreamOps {
     val (s2, o2, p2) = asOf(2L)
     val (s4, o4, p4) = asOf(4L)
     val (s6, o6, p6) = asOf(6L)
-    val (cP, bP) = models(p6)
-    val query = e.filter(col("vec_id") === 0).select(col("embedding")).limit(1)
-    val served = ProductQuantizer.ivfPqTopK(
-      query, "embedding", HouseM, cP, bP, s6, "vec_id", nProbe = 4, k = 10)
+    val served = frozen(p6).topK(fx.query, s6)
 
     s2.agg(count(lit(1)).as("n_asof_2"))
       .crossJoin(sameCodeRows(s2, o2, "asof_2_exact"))
       .crossJoin(s4.agg(count(lit(1)).as("n_asof_4")))
       .crossJoin(sameCodeRows(s4, o4, "asof_4_exact"))
-      .crossJoin(s6.agg(count(lit(1)).as("n_asof_6"),
-        (count(lit(1)) === countDistinct(col("vec_id"))).as("ids_unique")))
+      .crossJoin(indexStats(s6, "n_asof_6"))
       .crossJoin(sameCodeRows(s6, o6, "asof_6_exact"))
       .crossJoin(spark.range(1).select(
         lit(p2 == mDir).as("asof_2_on_base"),
         lit(p4 == s"$idx/retrain/req=2").as("asof_4_on_first_retrain"),
         lit(p6 == s"$idx/retrain/req=5").as("asof_6_on_second_retrain")))
-      .crossJoin(served.agg(count(lit(1)).as("n_results")))
+      .crossJoin(nResults(served))
       .select(col("n_asof_2"), col("asof_2_exact"), col("asof_2_on_base"),
         col("n_asof_4"), col("asof_4_exact"),
         col("asof_4_on_first_retrain"),
@@ -3304,48 +2103,26 @@ object StreamOps {
     * probe.
     */
   def indexSwitchArchive(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.operators.ProductQuantizer
-    import graft.queries.LlmOps
-    val e = graft.Tables.load(spark, sfDir, "embeddings")
-    val all = e.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding"))
-    val base = all.filter(!pmod(col("vec_id"), lit(10)).isin(8, 9))
-    val clean = all.filter(pmod(col("vec_id"), lit(10)) === 8)
+    val fx = new Fixture(spark, sfDir)
     val idx = graft.RunPaths.scratch(
       s"graft_q94_index_${graft.RunPaths.keyFor(sfDir)}")
     val mDir = s"$idx/model"
-    Seq("arrived", "append", "switch", "retrain", "req", "fold_req",
-      "model", "log").foreach(d => wipeDir(new java.io.File(s"$idx/$d")))
+    wipe(idx, "arrived", "append", "switch", "retrain", "req", "fold_req",
+      "model", "log")
     new java.io.File(s"$idx/gate_r7").delete()
 
-    val retrainH = new Handoff(spark, s"$idx/req",
-      g => s"$idx/retrain/req=$g/_RETRAIN_DONE",
-      "graft-q94-retrain")({ (reqGen, _) =>
-      if (reqGen == 7L) {
-        // delivery gate (harness scaffolding, not production): cycle
-        // 4's retrain must provably span gen 8's trigger
-        val gate = new java.io.File(s"$idx/gate_r7")
-        val deadline = System.nanoTime() + 300L * 1000 * 1000 * 1000
-        while (!gate.exists()) {
-          if (System.nanoTime() > deadline)
-            throw new IllegalStateException(
-              "q94 retrain gate timed out waiting for gen 8")
-          Thread.sleep(50)
-        }
-      }
-      val snapshot = (1L to reqGen)
-        .map(g => spark.read.parquet(s"$idx/arrived/gen=$g"))
-        .foldLeft(base)(_.unionByName(_))
-        .localCheckpoint(true)
-      LlmOps.buildFrozenIndex(spark, sfDir, snapshot,
-        s"$idx/retrain/req=$reqGen", "q94 frozen coarse-centroid table",
-        withOccupancy = false)
-      ()
-    })
+    // delivery gate (harness scaffolding, not production): cycle 4's
+    // retrain must provably span gen 8's trigger
+    val retrainH = retrainHandoff(spark, sfDir, idx, fx.driftBase,
+      "graft-q94-retrain", "q94 frozen coarse-centroid table",
+      withOccupancy = false) { reqGen =>
+      if (reqGen == 7L)
+        awaitMarker(spark, s"$idx/gate_r7", "q94 retrain gate", MarkerTimeoutMs)
+    }
     val fm = new FoldMachine(spark, idx, retrainH, "graft-q94-fold",
       "q94 frozen coarse-centroid table", gated = false, keepSwitches = 1)
 
-    LlmOps.buildFrozenIndex(spark, sfDir, base, mDir,
+    LlmOps.buildFrozenIndex(spark, sfDir, fx.driftBase, mDir,
       "q94 frozen coarse-centroid table", withOccupancy = false)
 
     var maxLiveSwitch = 0L
@@ -3353,16 +2130,13 @@ object StreamOps {
     var quietReadsMax = 0L
     var adoptReadsMax = 0L
     for (g <- 1L to 9L) {
-      clean.filter(pmod(col("vec_id"), lit(90)) === 8 + 10 * (g - 1))
+      residue(fx.clean, 90, 8 + 10 * (g - 1))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$idx/arrived/gen=$g")
       val reads0 = fm.recordReads()
       val (_, _, adoptedNow) = fm.maintain(g)
       val (pd, _) = fm.pointer(mDir)
-      val (cF, bF) = fm.frozenModels(pd)
-      ProductQuantizer.ivfPqEncodeWith(
-          spark.read.parquet(s"$idx/arrived/gen=$g"),
-          "vec_id", "embedding", HouseM, cF, bF)
+      fm.frozenModels(pd).encode(spark.read.parquet(s"$idx/arrived/gen=$g"))
         .write.mode("overwrite").parquet(s"$idx/append/gen=$g")
       if (g % 2 == 1 && g <= 7) {
         retrainH.submit(g, spark.range(1).select(lit(g).as("gen")))
@@ -3396,7 +2170,6 @@ object StreamOps {
     val reqsFinal = retrainH.requests().size
     val foldReqsFinal = fm.foldH.requests().size
 
-    def models(dir: String) = fm.frozenModels(dir)
     // the q93 as-of reconstruction (shared asOfReconstruction), here
     // driven THROUGH the archive: both probed answers (req=1, req=5)
     // live in archived history, and the returned audit-read counts
@@ -3409,25 +2182,12 @@ object StreamOps {
 
     // final serving under the adopted cycle-4 pointer
     val (ptr, foldedThrough) = fm.pointer(mDir)
-    val serving = (genDirs(spark, s"$ptr/fold", "gen=").map(g =>
-        codeCols(spark.read.parquet(s"$ptr/fold/gen=$g"))) ++
-      genDirs(spark, s"$idx/append", "gen=").filter(_ > foldedThrough)
-        .map(g => codeCols(spark.read.parquet(s"$idx/append/gen=$g"))))
-      .foldLeft(codeCols(spark.read.parquet(s"$ptr/codes/gen=0")))(
-        _.unionByName(_))
+    val serving = pointerServing(spark, ptr, s"$idx/append", foldedThrough)
     val snapGen = liveFinal.maxOption.getOrElse(0L)
-    val (cP, bP) = models(ptr)
-    val oneShot = genDirs(spark, s"$idx/arrived", "gen=")
-      .filter(_ > snapGen)
-      .map(g => spark.read.parquet(s"$idx/arrived/gen=$g"))
-      .reduceOption(_.unionByName(_))
-      .map(raws => codeCols(spark.read.parquet(s"$ptr/codes/gen=0"))
-        .unionByName(codeCols(ProductQuantizer.ivfPqEncodeWith(
-          raws, "vec_id", "embedding", HouseM, cP, bP))))
-      .getOrElse(codeCols(spark.read.parquet(s"$ptr/codes/gen=0")))
-    val query = e.filter(col("vec_id") === 0).select(col("embedding")).limit(1)
-    val served = ProductQuantizer.ivfPqTopK(
-      query, "embedding", HouseM, cP, bP, serving, "vec_id", nProbe = 4, k = 10)
+    val mP = fm.frozenModels(ptr)
+    val oneShotCodes = oneShot(spark, ptr, genDirs(spark, s"$idx/arrived", "gen=")
+      .filter(_ > snapGen).map(g => s"$idx/arrived/gen=$g"), mP)
+    val served = mP.topK(fx.query, serving)
 
     spark.range(1)
       .select(lit(9L).as("n_triggers"),
@@ -3447,10 +2207,9 @@ object StreamOps {
       .crossJoin(sameCodeRows(s2, o2, "asof_2_exact"))
       .crossJoin(s9.agg(count(lit(1)).as("n_asof_9")))
       .crossJoin(sameCodeRows(s9, o9, "asof_9_exact"))
-      .crossJoin(serving.agg(count(lit(1)).as("n_index"),
-        (count(lit(1)) === countDistinct(col("vec_id"))).as("ids_unique")))
-      .crossJoin(sameCodeRows(serving, oneShot, "serving_exact"))
-      .crossJoin(served.agg(count(lit(1)).as("n_results")))
+      .crossJoin(indexStats(serving))
+      .crossJoin(sameCodeRows(serving, oneShotCodes, "serving_exact"))
+      .crossJoin(nResults(served))
       .select(col("n_triggers"), col("n_adoptions"), col("history_complete"),
         col("n_archived"), col("live_switch_bounded"),
         col("scaffolding_bounded"), col("quiet_reads_bounded"),
@@ -3635,18 +2394,7 @@ object StreamOps {
     */
   def shardedLifecycle(spark: SparkSession, sfDir: String,
       filesPerTrigger: Int = 1, nShards: Int = 2): DataFrame = {
-    import graft.operators.{IndexDrift, ProductQuantizer}
-    import graft.queries.LlmOps
-    val e = graft.Tables.load(spark, sfDir, "embeddings")
-    val all = e.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding"))
-    val base = all.filter(!pmod(col("vec_id"), lit(10)).isin(8, 9))
-    val clean = all.filter(pmod(col("vec_id"), lit(10)) === 8)
-    val idSpan = all.agg(max(col("vec_id"))).collect()(0).getLong(0) + 1
-    val driftSrc = IndexDrift
-      .shifted(all.filter(pmod(col("vec_id"), lit(10)) === 9),
-        "vec_id", "embedding")
-      .select((col("vec_id") + lit(idSpan)).as("vec_id"), col("embedding"))
+    val fx = new Fixture(spark, sfDir)
     val idx = graft.RunPaths.scratch(
       s"graft_q97lc_${graft.RunPaths.keyFor(sfDir)}_f${filesPerTrigger}_s$nShards")
     val mDir = s"$idx/model"
@@ -3654,42 +2402,30 @@ object StreamOps {
     def sliceOf(df: DataFrame, i: Int): DataFrame =
       df.filter(pmod(col("vec_id"), lit(nShards)) === i)
 
-    wipeDir(new java.io.File(idx))
+    wipe(idx)
     // global base model (+ base_occ for the PSI gate); per-shard base
     // code generations under it — the q97 layout with a lifecycle
-    LlmOps.buildFrozenIndex(spark, sfDir, base, mDir,
+    LlmOps.buildFrozenIndex(spark, sfDir, fx.driftBase, mDir,
       "q97 lifecycle frozen coarse-centroid table")
-    val (coarse0, books0) = (LlmOps.modelScaleStamp(
-      spark.read.parquet(s"$mDir/coarse"),
-      "q97 lifecycle frozen coarse-centroid table"),
-      spark.read.parquet(s"$mDir/books"))
+    val m0 = models(spark, mDir, "q97 lifecycle frozen coarse-centroid table")
     for (i <- 0 until nShards)
-      ProductQuantizer.ivfPqEncodeWith(
-          sliceOf(base, i), "vec_id", "embedding", HouseM, coarse0, books0)
+      m0.encode(sliceOf(fx.driftBase, i))
         .write.mode("overwrite").parquet(s"${shardDir(i)}/codes/gen=0")
 
-    // ---- the global retrain + its per-shard fan-out -------------------
     // ONE training job over the full snapshot; each shard's worker then
     // waits for it, round-trips the global models into its own subtree
     // (parquet double round-trip is exact, so every shard's floats are
     // bit-identical to the global ones), and encodes ITS slice of the
     // snapshot — per-shard artifacts self-consistent under one model
-    val arrivalsDone = new java.io.File(s"$idx/_ARRIVALS_DONE")
+    val arrivalsDone = s"$idx/_ARRIVALS_DONE"
     val globalH = new Handoff(spark, s"$idx/greq",
       g => s"$idx/retrain_g/req=$g/_DONE", "graft-q97lc-global")({
       (reqGen, _) =>
-        val deadline = System.nanoTime() + 300L * 1000 * 1000 * 1000
-        while (!arrivalsDone.exists()) { // harness gate (scaffolding)
-          if (System.nanoTime() > deadline)
-            throw new IllegalStateException("q97lc global retrain gate")
-          Thread.sleep(100)
-        }
-        val snapshot = (1L to reqGen)
-          .flatMap(g => (0 until nShards).map(i =>
-            spark.read.parquet(s"${shardDir(i)}/arrived/gen=$g")))
-          .foldLeft(base)(_.unionByName(_))
-          .localCheckpoint(true)
-        LlmOps.buildFrozenIndex(spark, sfDir, snapshot,
+        awaitMarker(spark, arrivalsDone, "q97lc global retrain gate",
+          MarkerTimeoutMs)
+        LlmOps.buildFrozenIndex(spark, sfDir,
+          codeSnapshotRaws(spark, idx, nShards, fx.driftBase, reqGen)
+            .localCheckpoint(true),
           s"$idx/retrain_g/req=$reqGen",
           "q97 lifecycle retrained coarse-centroid table")
         ()
@@ -3699,25 +2435,14 @@ object StreamOps {
         g => s"${shardDir(i)}/retrain/req=$g/_RETRAIN_DONE",
         s"graft-q97lc-retrain-s$i")({ (reqGen, _) =>
         val gdir = s"$idx/retrain_g/req=$reqGen"
-        val done = new org.apache.hadoop.fs.Path(s"$gdir/_DONE")
-        val fs = done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val deadline = System.nanoTime() + 300L * 1000 * 1000 * 1000
-        while (!fs.exists(done)) {
-          if (System.nanoTime() > deadline)
-            throw new IllegalStateException(
-              s"q97lc shard $i timed out waiting for the global retrain")
-          Thread.sleep(100)
-        }
+        awaitMarker(spark, s"$gdir/_DONE", s"q97lc shard $i retrain",
+          MarkerTimeoutMs)
         val rdir = s"${shardDir(i)}/retrain/req=$reqGen"
         for (part <- Seq("coarse", "books", "base_occ"))
           spark.read.parquet(s"$gdir/$part")
             .write.mode("overwrite").parquet(s"$rdir/$part")
-        val (cR, bR) = (LlmOps.modelScaleStamp(
-          spark.read.parquet(s"$rdir/coarse"), "q97 lifecycle shard model"),
-          spark.read.parquet(s"$rdir/books"))
-        ProductQuantizer.ivfPqEncodeWith(
-            sliceOf(codeSnapshotRaws(spark, idx, nShards, base, reqGen), i),
-            "vec_id", "embedding", HouseM, cR, bR)
+        models(spark, rdir, "q97 lifecycle shard model")
+          .encode(sliceOf(codeSnapshotRaws(spark, idx, nShards, fx.driftBase, reqGen), i))
           .write.mode("overwrite").parquet(s"$rdir/codes/gen=0")
         ()
       })
@@ -3728,112 +2453,70 @@ object StreamOps {
         gated = false))
 
     // global serving pointer: the newest request adopted by ALL shards
-    // — Long.MinValue (base) while any shard lags. S pointer reads,
+    // — None (base) while any shard lags. S pointer reads,
     // shard-count-scale by construction.
     def globalAdopted(): Option[Long] = {
       val m = fms.map(_.adopted().maxOption.getOrElse(Long.MinValue)).min
       if (m > Long.MinValue) Some(m) else None
     }
 
-    def drive(srcDir: String, phase: String): Unit = {
-      val schema = spark.read.parquet(srcDir).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", filesPerTrigger.toString)
-        .parquet(srcDir)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val gen = (0 until nShards)
-            .map(i => genDirs(spark, s"${shardDir(i)}/arrived", "gen=")
-              .maxOption.getOrElse(0L)).max + 1
-          val reads0 = fms.map(_.recordReads())
-          val b = batch.select(col("vec_id"), col("embedding"))
-            .localCheckpoint(true)
-          // 1. per-shard raw persist + maintenance + pointer append
-          for (i <- 0 until nShards) {
-            sliceOf(b, i).write.mode("overwrite")
-              .parquet(s"${shardDir(i)}/arrived/gen=$gen")
-            fms(i).maintain(gen)
-            val (ptr, _) = fms(i).pointer(mDir)
-            val (cF, bF) = fms(i).frozenModels(ptr)
-            ProductQuantizer.ivfPqEncodeWith(
-                spark.read.parquet(s"${shardDir(i)}/arrived/gen=$gen"),
-                "vec_id", "embedding", HouseM, cF, bF)
-              .write.mode("overwrite")
-              .parquet(s"${shardDir(i)}/append/gen=$gen")
-          }
-          // 2. the drift gate is GLOBAL (one statistic over the whole
-          //    batch against the globally-served model's occupancy)
-          val gptr = globalAdopted()
-            .map(r => s"$idx/retrain_g/req=$r").getOrElse(mDir)
-          val psi = IndexDrift.occupancyPsiFromOccupancies(
-              spark.read.parquet(s"$gptr/base_occ"),
-              IndexDrift.occupancyOfCodes(
-                (0 until nShards)
-                  .map(i => codeCols(spark.read
-                    .parquet(s"${shardDir(i)}/append/gen=$gen")))
-                  .reduce(_.unionByName(_))),
-              LlmOps.modelScaleStamp(spark.read.parquet(s"$gptr/coarse"),
-                "q97 lifecycle gate coarse table"))
-            .select(col("psi")).collect()(0).getDouble(0)
-          val fired = psi > 0.75
-          val maxAd = globalAdopted().getOrElse(Long.MinValue)
-          val pending = globalH.requests().filter(r => r > maxAd && r < gen)
-          globalH.rearm(pending)
-          val requested = fired && pending.isEmpty
-          if (requested) {
-            globalH.submit(gen, spark.range(1).select(lit(gen).as("gen")))
-            // fan-out: one request record per shard, same id — each
-            // shard's FoldMachine sees its own retrainH
-            shardRetrainH.foreach(_.submit(gen,
-              spark.range(1).select(lit(gen).as("gen"))))
-          }
-          spark.range(1)
-            .select(lit(gen).as("gen"), lit(phase).as("phase"),
-              lit(fired).as("retrain_fired"),
-              lit(requested).as("retrain_requested"),
-              lit((0 until nShards)
-                .map(i => fms(i).recordReads() - reads0(i)).max)
-                .as("ptr_reads_max"))
-            .write.mode("overwrite").parquet(s"$idx/log/gen=$gen")
-          ()
+    def phase(srcDir: String, phase: String): Unit =
+      drive(spark, srcDir, filesPerTrigger) { (batch, _) =>
+        val gen = (0 until nShards)
+          .map(i => genDirs(spark, s"${shardDir(i)}/arrived", "gen=")
+            .maxOption.getOrElse(0L)).max + 1
+        val reads0 = fms.map(_.recordReads())
+        val b = batch.select(col("vec_id"), col("embedding"))
+          .localCheckpoint(true)
+        // 1. per-shard raw persist + maintenance + pointer append
+        for (i <- 0 until nShards) {
+          sliceOf(b, i).write.mode("overwrite")
+            .parquet(s"${shardDir(i)}/arrived/gen=$gen")
+          fms(i).maintain(gen)
+          val (ptr, _) = fms(i).pointer(mDir)
+          fms(i).frozenModels(ptr)
+            .encode(spark.read.parquet(s"${shardDir(i)}/arrived/gen=$gen"))
+            .write.mode("overwrite").parquet(s"${shardDir(i)}/append/gen=$gen")
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
+        // 2. the drift gate is GLOBAL (one statistic over the whole
+        //    batch against the globally-served model's occupancy)
+        val gptr = globalAdopted()
+          .map(r => s"$idx/retrain_g/req=$r").getOrElse(mDir)
+        val fired = psiFires(spark, gptr,
+          union(spark, (0 until nShards).map(i => s"${shardDir(i)}/append/gen=$gen")),
+          models(spark, gptr, "q97 lifecycle gate coarse table").coarse)
+        val maxAd = globalAdopted().getOrElse(Long.MinValue)
+        val pending = globalH.requests().filter(r => r > maxAd && r < gen)
+        globalH.rearm(pending)
+        val requested = fired && pending.isEmpty
+        if (requested) {
+          globalH.submit(gen, spark.range(1).select(lit(gen).as("gen")))
+          // fan-out: one request record per shard, same id — each
+          // shard's FoldMachine sees its own retrainH
+          shardRetrainH.foreach(_.submit(gen,
+            spark.range(1).select(lit(gen).as("gen"))))
+        }
+        logRow(spark, idx, gen, lit(phase).as("phase"),
+          lit(fired).as("retrain_fired"),
+          lit(requested).as("retrain_requested"),
+          lit((0 until nShards)
+            .map(i => fms(i).recordReads() - reads0(i)).max)
+            .as("ptr_reads_max"))
+      }
 
     // clean (2 files → 2 triggers at filesPerTrigger=1, 1 at 2)
-    val cleanDir = s"$idx/src/clean"
-    for ((r, i) <- Seq(8, 18).zipWithIndex)
-      clean.filter(pmod(col("vec_id"), lit(20)) === r)
-        .coalesce(1)
-        .write.mode(if (i == 0) "overwrite" else "append").parquet(cleanDir)
-    drive(cleanDir, "clean")
+    phase(writePhase(s"$idx/src/clean", Seq(8, 18).map(residue(fx.clean, 20, _))),
+      "clean")
     // drift: fires the one global retrain (gated on arrivals done)
-    val driftDir = s"$idx/src/drift"
-    driftSrc.coalesce(1).write.mode("overwrite").parquet(driftDir)
-    drive(driftDir, "drift")
+    phase(writePhase(s"$idx/src/drift", Seq(fx.driftSrc)), "drift")
     // gap: a clean arrival the snapshot will NOT cover — the fold's job
-    val gapDir = s"$idx/src/gap"
-    clean.select((col("vec_id") + lit(2L * idSpan)).as("vec_id"),
-        col("embedding"))
-      .coalesce(1).write.mode("overwrite").parquet(gapDir)
-    drive(gapDir, "gap")
-    arrivalsDone.createNewFile()
+    phase(writePhase(s"$idx/src/gap", Seq(fx.offset(fx.clean, 2))), "gap")
+    new java.io.File(arrivalsDone).createNewFile()
     globalH.joinAll()
     shardRetrainH.foreach(_.joinAll())
 
-    def belt(i: Int): Unit = {
-      val maxGen = genDirs(spark, s"${shardDir(i)}/arrived", "gen=").max
-      var quiet = false
-      var rounds = 0
-      while (!quiet && rounds < 8) {
-        fms(i).joinAll()
-        val (req, inflight, adopted) = fms(i).maintain(maxGen + 1)
-        quiet = !req && !inflight && !adopted
-        rounds += 1
-      }
-      fms(i).joinAll()
-    }
+    def belt(i: Int): Unit =
+      fms(i).settle(genDirs(spark, s"${shardDir(i)}/arrived", "gen=").max + 1)
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
       else Seq(f)
@@ -3841,29 +2524,23 @@ object StreamOps {
       shards.flatMap(i => walk(new java.io.File(shardDir(i)))
         .map(f => (f.getPath, f.length()))).toSet
 
-    // serving state at the GLOBAL rule's pointer (base while any shard
-    // lags): per-shard base codes + every append — all encoded under
-    // the base pointer, since every arrival so far preceded adoption
-    def baseServing(): DataFrame = (0 until nShards).map { i =>
-      genDirs(spark, s"${shardDir(i)}/append", "gen=")
-        .map(g => codeCols(spark.read.parquet(s"${shardDir(i)}/append/gen=$g")))
-        .foldLeft(codeCols(spark.read.parquet(s"${shardDir(i)}/codes/gen=0")))(
-          _.unionByName(_))
-    }.reduce(_.unionByName(_))
     // the mid-window batch serve (r16 verdict #7): the q100 batch ADC
-    // shape against the global-rule pointer, issued pre-belt and again
-    // inside the mixed window — answers must be row-identical (single
-    // consistent pointer; a rule mixing shard 0's retrained codes with
+    // shape against the global-rule pointer (base while any shard lags:
+    // per-shard base codes + every append, all encoded under it),
+    // issued pre-belt and again inside the mixed window — answers must
+    // be row-identical (a rule mixing shard 0's retrained codes with
     // lagging shards' base codes would diverge here)
-    val batchQs = e.filter(col("vec_id") =!= 0)
+    val batchQs = fx.corpus
       .filter(pmod(col("vec_id"), lit(13)) === 1)
       .orderBy(col("vec_id")).limit(8)
       .select(col("vec_id").as("qid"), col("embedding"))
       .localCheckpoint(true)
     def batchServe(): (Seq[(Long, Int, Long)], Boolean) = {
       val df = ProductQuantizer.ivfPqTopKBatch(batchQs, "qid",
-        "embedding", HouseM, coarse0, books0, baseServing(), "vec_id",
-        nProbe = 4, k = 5, knownQ = 8)
+        "embedding", HouseM, m0.coarse, m0.books,
+        (0 until nShards).map(i => pointerServing(spark, shardDir(i),
+          s"${shardDir(i)}/append", 0L)).reduce(_.unionByName(_)),
+        "vec_id", nProbe = 4, k = 5, knownQ = 8)
       val twoPhase = df.queryExecution.executedPlan.toString
         .contains("partial_topknearest")
       (df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
@@ -3890,50 +2567,28 @@ object StreamOps {
       globalH.requests().filter(_ <= r).foreach(globalH.sweepRequest))
 
     // post: a clean arrival on the retrained pointers, quiet per shard
-    val postDir = s"$idx/src/post"
-    clean.select((col("vec_id") + lit(3L * idSpan)).as("vec_id"),
-        col("embedding"))
-      .coalesce(1).write.mode("overwrite").parquet(postDir)
-    drive(postDir, "post")
+    phase(writePhase(s"$idx/src/post", Seq(fx.offset(fx.clean, 3))), "post")
 
     // ---- serving, derived per shard from the per-shard records --------
     val rr = allAdopted.getOrElse(
       throw new IllegalStateException("q97lc: shards never all adopted"))
-    val shardServing = (0 until nShards).map { i =>
+    val serving = (0 until nShards).map { i =>
       val (ptr, folded) = fms(i).pointer(mDir)
       require(ptr != mDir, s"q97lc: shard $i pointer never flipped")
-      val folds = genDirs(spark, s"$ptr/fold", "gen=")
-        .map(g => codeCols(spark.read.parquet(s"$ptr/fold/gen=$g")))
-      val appends = genDirs(spark, s"${shardDir(i)}/append", "gen=")
-        .filter(_ > folded)
-        .map(g => codeCols(spark.read.parquet(s"${shardDir(i)}/append/gen=$g")))
-      (folds ++ appends)
-        .foldLeft(codeCols(spark.read.parquet(s"$ptr/codes/gen=0")))(
-          _.unionByName(_))
-    }
-    val serving = shardServing.reduce(_.unionByName(_))
+      pointerServing(spark, ptr, s"${shardDir(i)}/append", folded)
+    }.reduce(_.unionByName(_))
     // one-shot contrast under the GLOBAL retrained model: snapshot
     // codes + a single re-encode of every post-snapshot raw
     val gdir = s"$idx/retrain_g/req=$rr"
-    val (cG, bG) = (LlmOps.modelScaleStamp(spark.read.parquet(s"$gdir/coarse"),
-      "q97 lifecycle oneshot coarse table"), spark.read.parquet(s"$gdir/books"))
+    val mG = models(spark, gdir, "q97 lifecycle oneshot coarse table")
     val lateRaws = (0 until nShards).flatMap(i =>
       genDirs(spark, s"${shardDir(i)}/arrived", "gen=").filter(_ > rr)
-        .map(g => spark.read.parquet(s"${shardDir(i)}/arrived/gen=$g")))
-    val oneShot = lateRaws.reduceOption(_.unionByName(_))
-      .map(raws => codeCols(spark.read.parquet(s"$gdir/codes/gen=0"))
-        .unionByName(codeCols(ProductQuantizer.ivfPqEncodeWith(
-          raws, "vec_id", "embedding", HouseM, cG, bG))))
-      .getOrElse(codeCols(spark.read.parquet(s"$gdir/codes/gen=0")))
-    val query = e.filter(col("vec_id") === 0).select(col("embedding")).limit(1)
-    val topk = ProductQuantizer.ivfPqTopK(
-      query, "embedding", HouseM, cG, bG, serving, "vec_id",
-      nProbe = 4, k = 10)
+        .map(g => s"${shardDir(i)}/arrived/gen=$g"))
+    val topk = mG.topK(fx.query, serving)
     val scatter = topk.queryExecution.executedPlan.toString
       .contains("TakeOrderedAndProject")
 
-    val log = spark.read.parquet(s"$idx/log")
-    log.agg(
+    spark.read.parquet(s"$idx/log").agg(
         count(lit(1)).as("n_triggers"),
         (count(when(col("retrain_fired"), 1)) === 1 &&
           count(when(col("phase") === "drift" && !col("retrain_fired"), 1))
@@ -3951,10 +2606,10 @@ object StreamOps {
         lit(allAdopted.contains(rr)).as("all_shards_adopted"),
         lit(fms.forall(_.adopted() == Seq(rr))).as("adopted_once_each"),
         lit(scatter).as("scatter_gather_plan")))
-      .crossJoin(serving.agg(count(lit(1)).as("n_index"),
-        (count(lit(1)) === countDistinct(col("vec_id"))).as("ids_unique")))
-      .crossJoin(sameCodeRows(serving, oneShot, "same_as_oneshot"))
-      .crossJoin(topk.agg(count(lit(1)).as("n_results")))
+      .crossJoin(indexStats(serving))
+      .crossJoin(sameCodeRows(serving, oneShot(spark, gdir, lateRaws, mG),
+        "same_as_oneshot"))
+      .crossJoin(nResults(topk))
       .select(col("n_triggers"), col("drift_fires_once"),
         col("clean_quiet"), col("ptr_reads_bounded_per_shard"),
         col("shard0_adopted_first"), col("shard1_isolated_during_belt"),
